@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): times every SparkEntry query at
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
@@ -43,14 +41,7 @@ object Bench {
     val stealStart = HostStat.readStealTicks()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
 
     val all = SparkEntry.queries.toSeq.sortBy(_._1)
     val queries = if (args.isEmpty) all else {
@@ -64,13 +55,15 @@ object Bench {
     }
 
     // A query that throws reports -1 (never a misleading elapsed time)
-    // and is listed under "errors".
+    // and is listed under "errors"; its first exception is kept for the
+    // artifact's "error_causes".
+    val causes = scala.collection.mutable.LinkedHashMap.empty[String, Throwable]
     val results = queries.map { case (name, fn) =>
       val qSteal0 = HostStat.readStealTicks()
       val runs = (1 to timedRuns).map { _ =>
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true }
-                 catch { case _: Throwable => false }
+                 catch { case e: Throwable => causes.getOrElseUpdate(name, e); false }
         (ok, (System.nanoTime() - t0) / 1e9)
       }
       val qSteal = HostStat.deltaJson(qSteal0, HostStat.readStealTicks())
@@ -137,7 +130,13 @@ object Bench {
     println(prefix(omitted, keptMap))
     // Defensive full-precision copy: a truncated stdout capture must
     // not lose the round's numbers.
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","steal_ticks":$stealTotal,"queries":$qs,"spread":$spread,"steal":$steal,"errors":$errors,"sf":"$sfDir"}"""
+    import HostStat.jsonString
+    val errorCauses = causes.map { case (k, e) =>
+      val cls = jsonString(e.getClass.getName)
+      val msg = jsonString(String.valueOf(e.getMessage))
+      s"""${jsonString(k)}:{"class":$cls,"message":$msg}"""
+    }.mkString("{", ",", "}")
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","steal_ticks":$stealTotal,"queries":$qs,"spread":$spread,"steal":$steal,"errors":$errors,"error_causes":$errorCauses,"sf":"$sfDir"}"""
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench-results.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), line + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] artifact write failed: $e") }

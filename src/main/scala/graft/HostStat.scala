@@ -1,6 +1,7 @@
 package graft
 
-/** Host-state counters for self-attributing measurement artifacts.
+/** Host-state counters (and the JSON string escape) for
+  * self-attributing measurement artifacts.
   *
   * The round-12/14 lesson, generalized from SinkBench: a recorded
   * wall time on a shared host is evidence only when it carries the
@@ -28,4 +29,18 @@ object HostStat {
   def deltaJson(start: Option[Long], end: Option[Long]): String =
     (for { a <- start; b <- end } yield b - a)
       .map(_.toString).getOrElse("null")
+
+  /** JSON string literal: escapes backslash, quote, and ALL control
+    * chars (<0x20) — a tab or CR in builder-authored SQL or an
+    * exception message would otherwise make a reader's json.load fail
+    * and silently drop the artifact. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Recall audit for the approximate operators at an arbitrary SF —
   * the 10×-scale evidence the rows-only-gated entries need: the
@@ -38,14 +38,7 @@ object RecallAudit {
     // remain full runs
     val only = args.lift(2).map(_.split(",").map(_.trim).toSet)
     def want(n: String) = only.forall(_.contains(n))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
 
     var walls = Vector.empty[(String, Double)]
     def timed[A](name: String)(body: => A): A = {

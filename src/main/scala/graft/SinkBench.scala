@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -56,20 +56,12 @@ object SinkBench {
     // amortization evidence the toy batches only argue for.
     val sliceTenths = args.lift(5).map(_.toInt).getOrElse(1)
     require(sliceTenths >= 1 && sliceTenths <= 9, "sliceTenths in [1,9]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // recentProgress defaults to 100 retained entries — a longer run
-      // would silently drop its EARLIEST triggers and bias first10
-      // toward the warmed middle, hiding exactly the climbing tail
-      // this bench exists to detect
-      .config("spark.sql.streaming.numRecentProgressUpdates",
-        (triggers + 64).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // recentProgress defaults to 100 retained entries — a longer run
+    // would silently drop its EARLIEST triggers and bias first10
+    // toward the warmed middle, hiding exactly the climbing tail
+    // this bench exists to detect
+    val spark = GraftSession.local(GraftSession.cpus,
+      "spark.sql.streaming.numRecentProgressUpdates" -> (triggers + 64).toString)
 
     def tmp(p: String) =
       java.nio.file.Files.createTempDirectory(p).toFile.getAbsolutePath

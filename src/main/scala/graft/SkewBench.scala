@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dedicated skew-stress harness for the q_skew_shuffle pair: builds
@@ -24,15 +23,8 @@ object SkewBench {
     val src = args.headOption.getOrElse("/tmp/sf1")
     val dst = args.lift(1).getOrElse("/tmp/skewx10")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus,
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
     // _SUCCESS marker, not bare directory existence: a crashed prior
     // run leaves a partial directory that would be silently reused,

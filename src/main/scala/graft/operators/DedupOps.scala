@@ -751,22 +751,10 @@ object DedupOps {
       .distinct() // collapse multi-key candidate hits at SIGNATURE-pair size
     // expansion back to doc pairs: cross-group via two member joins
     // (each output pair produced exactly once — the two sig groups
-    // are disjoint), intra-group via the hamming-0 self-join.
-    // SHUFFLE_HASH hints on all three member joins (guide §3.1): the
-    // members side is already clustered on sig by the shared exchange,
-    // so a shuffled hash join rides it with ZERO new exchange and no
-    // sort — where the default sort-merge pays a full sort of the
-    // n-row members stream per join (3 sorts of n at sf10), and the
-    // small-data broadcast alternative collects the whole signature
-    // population to the driver (a non-starter at 100 TB). Build sides
-    // are bounded: the cross joins build the verified signature-PAIR
-    // partitions (output-sized), the intra join one members partition
-    // (16-byte rows, AQE-sized); skewed partitions stay AQE-splittable
-    // (SHJ is skew-join eligible since Spark 3.2).
-    val cross = sigPairs.hint("shuffle_hash")
+    // are disjoint), intra-group via the hamming-0 self-join
+    val cross = sigPairs
       .join(members.withColumnRenamed("sig", "sig_a")
         .withColumnRenamed("doc_id", "id_a"), Seq("sig_a") ++ extraKeys)
-      .hint("shuffle_hash")
       .join(members.withColumnRenamed("sig", "sig_b")
         .withColumnRenamed("doc_id", "id_b"), Seq("sig_b") ++ extraKeys)
       .select(ek ++ Seq(least(col("id_a"), col("id_b")).as("doc_a"),
@@ -774,8 +762,7 @@ object DedupOps {
     val intra = members
       .select(ek ++ Seq(col("sig"), col("doc_id").as("doc_a")): _*)
       .join(members.select(ek ++ Seq(col("sig"),
-        col("doc_id").as("doc_b")): _*).hint("shuffle_hash"),
-        Seq("sig") ++ extraKeys)
+        col("doc_id").as("doc_b")): _*), Seq("sig") ++ extraKeys)
       .filter(col("doc_a") < col("doc_b"))
       .select(ek ++ Seq(col("doc_a"), col("doc_b"),
         lit(0).cast("int").as("hamming")): _*)

@@ -270,9 +270,6 @@ object VectorOps {
     Seq.fill(tables, bits)(Seq.fill(64)(rnd.nextGaussian()))
   }
 
-  private def dupPlanes(tables: Int, bits: Int): Seq[Seq[Seq[Double]]] =
-    seededPlanes(43, tables, bits)
-
   /** clamp(⌈log₂(n / target)⌉, [[lshMinBits]], [[lshMaxBits]]) as an
     * in-plan column, n = a 1-row scalar-subquery count over
     * `counted` — the shared auto-width rule of both LSH operators. */
@@ -599,15 +596,7 @@ object VectorOps {
     val nbits: Column =
       if (bits > 0) lit(bits)
       else autoBits(v0.filter(col("vec_id") >= nQueries), annLshTargetBucket)
-    // scan fan-out (Tables.fanned rationale), ISOLATED to the
-    // bucketing subtree: the tables × bits guarded-hyperplane code
-    // kernel is the query's dominant map work and otherwise runs in
-    // the serial single-split scan stage. The exact-cosine attach
-    // joins below keep the bare v0 scan, so their subtrees (and any
-    // broadcast/exchange reuse between them) are untouched — the r17
-    // blanket vecs() fan lost more to reuse breakage than the kernel
-    // parallelism bought.
-    val v = graft.Tables.fanOut(spark, v0).withColumn("nbits", nbits)
+    val v = v0.withColumn("nbits", nbits)
     val keys = lshBucketKeys(42, tables, genBits, col("nbits"))
     val buckets = v.select(col("vec_id"), col("nbits"),
         explode(array(keys: _*)).as("k"))

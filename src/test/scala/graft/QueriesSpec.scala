@@ -23,9 +23,9 @@ class QueriesSpec extends AnyFunSuite {
     }
   }
 
-  test("oracleSql keys are a subset of queries") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracle without query: $missing")
+  test("registry names are unique") {
+    val dups = SparkEntry.registry.groupBy(_.name).collect { case (n, ds) if ds.size > 1 => n }
+    assert(dups.isEmpty, s"duplicate registry names: $dups")
   }
 
   test("non-empty results where data guarantees them") {

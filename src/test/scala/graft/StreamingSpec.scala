@@ -116,6 +116,12 @@ class StreamingSpec extends AnyFunSuite {
     publishText(broker, "qb", 0 until 30, i => s"m$i")
     val all = Pipelines.readQueuesBounded(spark, broker, Seq("qa", "qb"))
     assert(all.count() === 60)
+    // the reference's StringMessageMapper and SolaceByteBuffRecord views
+    assert(Pipelines.mapToText(all).collect().sorted.toSeq ===
+      (0 until 30).flatMap(i => Seq(s"m$i", s"m$i")).sorted)
+    val bytes = Pipelines.mapToBytes(all).collect()
+    assert(bytes.map(_.queue).sorted.toSeq === Seq.fill(30)("qa") ++ Seq.fill(30)("qb"))
+    assert(bytes.forall(r => new String(r.payload, "UTF-8") == s"m${r.message_id}"))
     val capped = Pipelines.readQueuesBounded(spark, broker, Seq("qa", "qb"), Some(45))
     assert(capped.count() === 45)
   }
