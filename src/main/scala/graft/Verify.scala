@@ -1,7 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json for the DuckDB compare (tools/check.py), and
+  * errors.json (name → {class, message} of each query that failed). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -14,18 +15,28 @@ object Verify {
     def want(n: String) = only.forall(_.contains(n))
     val spark = GraftSession.local(GraftSession.cpus)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (want(name))
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
+    val failed = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
+      if (!want(name)) None
+      else
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name -> e)
         }
     }
     import HostStat.jsonString
-    val json = SparkEntry.oracleSql.filter(kv => want(kv._1))
-      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def jsonObj(kvs: Iterable[(String, String)]): String =
+      kvs.map { case (k, v) => s"${jsonString(k)}: $v" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), jsonObj(
+      SparkEntry.oracleSql.filter(kv => want(kv._1)).map { case (k, v) => k -> jsonString(v) }))
+    // name -> {class, message} of each failed query: the cause stays
+    // with the dump, not only on stderr
+    Files.writeString(Paths.get(s"$outDir/errors.json"), jsonObj(failed.map { case (name, e) =>
+      name -> jsonObj(Seq("class" -> jsonString(e.getClass.getName),
+        "message" -> jsonString(String.valueOf(e.getMessage))))
+    }))
     spark.stop()
   }
 }

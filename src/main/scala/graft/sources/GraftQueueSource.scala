@@ -35,7 +35,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - client-ack on checkpoint commit: `commit(end)` writes
   *    `_acks/<queue>` high-water marks — the broker-side "delete";
   *  - `maxRecordsPerTrigger` (SupportsAdmissionControl) = the
-  *    reference's maxNumRecords flow-control knob;
+  *    reference's maxNumRecords flow-control knob, split evenly over
+  *    the queues ([[GraftQueueSource.waterFill]]);
   *  - redelivered flag: rows below the acked high-water mark were
   *    delivered before (restart without commit) — same signal as
   *    JMSRedelivered.
@@ -87,6 +88,30 @@ object GraftQueueSource {
     StructField("time_to_live", LongType, nullable = false)))
 
   val FORMAT: String = classOf[GraftQueueSourceProvider].getName
+
+  /** How the micro-batch stream names itself (`GraftQueueSource[q0,q1]`). */
+  val DescriptionPrefix = "GraftQueueSource["
+
+  /** A trigger's `budget` split over queues holding `avail` rows each,
+    * by water-filling: queues are visited shortest first (ties in the
+    * given order) and each takes at most the floor of an equal share of
+    * what is left, so a short queue's leftover goes to the longer ones
+    * and the takes of queues that are not drained differ by at most 1.
+    * Queues filled side by side thus stay level in event time; spending
+    * the budget in queue order runs the watermark past the later
+    * queues' backlog and drops their rows as late. An unlimited budget
+    * takes everything. */
+  def waterFill(avail: Seq[Long], budget: Long): Seq[Long] = {
+    val takes = Array.fill(avail.size)(0L)
+    var left = budget
+    var k = avail.size
+    avail.indices.sortBy(avail).foreach { i =>
+      takes(i) = math.min(avail(i), left / k)
+      left -= takes(i)
+      k -= 1
+    }
+    takes.toSeq
+  }
 
   // ---- spool / offset plumbing (shared by stream + batch paths) ----
 
@@ -435,26 +460,22 @@ class GraftQueueMicroBatchStream(
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val startMap = start.asInstanceOf[QueueOffset].counts
-    val budget0 = limit match {
+    val budget = limit match {
       case m: ReadMaxRows => m.maxRows()
       case _ => Long.MaxValue
     }
-    var budget = budget0
-    // Deterministic round: queues in sorted order each take up to the
-    // remaining budget (queue-slice fairness is per-trigger bounded).
-    val next = queues.map { q =>
-      val from = startMap.getOrElse(q, 0L)
-      val hi = availableNowTarget match {
-        case Some(target) => target.getOrElse(q, 0L) // frozen snapshot
-        case None         => available(brokerDir, q)
-      }
-      val avail = hi - from
-      val take = math.max(0L, math.min(avail, budget))
-      budget -= take
-      q -> (from + take)
-    }.toMap
-    QueueOffset(next)
+    val froms = queues.map(q => startMap.getOrElse(q, 0L))
+    val his = queues.map(q => availableNowTarget match {
+      case Some(target) => target.getOrElse(q, 0L) // frozen snapshot
+      case None         => available(brokerDir, q)
+    })
+    val takes = waterFill(his.zip(froms).map { case (hi, from) => math.max(0L, hi - from) }, budget)
+    QueueOffset(queues.indices.map(i => queues(i) -> (froms(i) + takes(i))).toMap)
   }
+
+  /** Names the source in `SourceProgress.description`, which is how
+    * [[graft.streaming.Pipelines.QueueStatsListener]] finds it. */
+  override def toString: String = s"$DescriptionPrefix${queues.mkString(",")}]"
 
   override def reportLatestOffset(): Offset =
     QueueOffset(queues.map(q => q -> available(brokerDir, q)).toMap)

@@ -8,6 +8,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQueryListener}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.types.StructType
 
 /** Streaming pipelines over the graft queue source — the Spark
   * re-expression of the reference's sample pipelines:
@@ -248,9 +249,19 @@ object Pipelines {
     * after a crash (the same batch re-runs and every row anti-joins
     * away). The table is partitioned by (queue, kb) — queue for the
     * consumer-facing layout, kb (the key-hash bucket) so the key
-    * lookup prunes to the batch's buckets WITHIN each queue instead
-    * of growing with that queue's history (the
-    * [[decontaminationSink]] bounded-check rule). */
+    * lookup can skip buckets the batch does not touch.
+    *
+    * That prune bounds the key read only while a batch spans fewer
+    * than [[graft.operators.DedupOps.keyBuckets]] buckets per queue;
+    * a batch of a few hundred messages per queue already touches every
+    * bucket, so at ingest rates each trigger reads (and lists) the
+    * whole key history and its cost grows with the table.
+    *
+    * Each trigger is one pass partitioned by (queue, kb) into the
+    * session's shuffle-partition count: the batch is hash-partitioned
+    * once, the in-batch dedup reuses that exchange, and the anti-join
+    * and the write run that many tasks wide with each leaf directory
+    * written by exactly one task (one file per touched leaf). */
   def tableSink(records: Dataset[GraftTextRecord], tablePath: String): DataStreamWriter[GraftTextRecord] = {
     val dataPath = tablePath + "/data"
     records.writeStream
@@ -258,61 +269,58 @@ object Pipelines {
       .option("checkpointLocation", tablePath + "/_checkpoint")
       .foreachBatch { (batch: Dataset[GraftTextRecord], _: Long) =>
         val spark = batch.sparkSession
+        // set explicitly so AQE cannot coalesce the pass to one task
+        val n = spark.sessionState.conf.numShufflePartitions
+        def byLeaf(df: DataFrame) = df.repartition(n, col("queue"), col("kb"))
         // redelivery can land BOTH copies of a message in one trigger —
         // dedup inside the batch before the anti-join against the
-        // table. localCheckpoint (eager) so the SOURCE is read and the
-        // dedup shuffle runs ONCE per trigger: the queue list, the
-        // bucket list, and the write below all reuse the materialized
-        // batch instead of re-reading the source three times (the
-        // decontaminationSink convention).
-        val fresh = batch.toDF().dropDuplicates("queue", "message_id")
-          .withColumn("kb",
-            graft.operators.DedupOps.keyBucket(col("queue"), col("message_id")))
-          .localCheckpoint(true)
-        // the batch touches a handful of queues and ≤ keyBuckets hash
-        // buckets; filtering the existing table by both is a STATIC
-        // partition predicate, so the key lookup prunes to the batch's
-        // (queue, bucket) directories instead of scanning the whole
-        // table every trigger. Both lists are dimension-bounded driver
-        // collects (queue count, ≤ 64 bucket values) off the
-        // checkpointed batch.
-        val batchQueues = fresh.select("queue").distinct()
-          .collect().map(_.getString(0)).toSeq
-        val batchBuckets = bucketsOf(fresh.select("kb"))
-        // explicit existence probe, the prunedKeys rule: a catch-all
-        // here would read a pre-kb table as "absent" and append
-        // duplicates forever
-        val tablePath0 = new org.apache.hadoop.fs.Path(dataPath)
-        val tableFs = tablePath0.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val existingKeys =
-          if (!tableFs.exists(tablePath0) || !hasParquetData(tableFs, tablePath0))
-            // first batch: no table (or no data) yet
-            spark.emptyDataFrame.select(lit("").as("queue"), lit(0L).as("message_id")).limit(0)
-          else {
-            val t = spark.read.parquet(dataPath)
-            // A pre-kb table must FAIL FAST, not degrade: the check
-            // side could read it unpruned, but this trigger's append
-            // would write partitionBy(queue, kb) directories into the
-            // queue-only tree, and the NEXT trigger's read of the
-            // mixed-depth directory structure throws and wedges the
-            // stream — with the first trigger's rows already
-            // committed. Refuse before writing anything.
-            if (!t.columns.contains("kb"))
-              throw new IllegalStateException(
+        // table. kb is a function of (queue, message_id), so deduping
+        // on (queue, kb, message_id) is the same dedup and reuses the
+        // (queue, kb) exchange. Cached so the SOURCE is read and
+        // shuffled ONCE per trigger: the leaf list and the write below
+        // reuse it. A cache, not a localCheckpoint: a cached plan keeps
+        // its (queue, kb) partitioning visible to the planner, a
+        // checkpoint under AQE does not, and then the leaf list and the
+        // write would each shuffle the batch again.
+        val fresh = byLeaf(batch.toDF().withColumn("kb",
+            graft.operators.DedupOps.keyBucket(col("queue"), col("message_id"))))
+          .dropDuplicates("queue", "kb", "message_id")
+          .persist()
+        try {
+          // the touched (queue, kb) leaves, which also fills the cache: a
+          // dimension-bounded collect (queues × ≤ keyBuckets rows),
+          // never O(batch) rows. Filtering the existing table by them is
+          // a STATIC partition predicate, so the key read scans only
+          // those directories (the file index still lists them all).
+          val leaves = fresh.select("queue", "kb").distinct().collect()
+          val batchQueues = leaves.map(_.getString(0)).distinct.toSeq
+          val batchBuckets = leaves.map(_.getInt(1)).distinct.toSeq
+          val tableDir = new org.apache.hadoop.fs.Path(dataPath)
+          val existingKeys =
+            if (!hasParquetData(tableDir.getFileSystem(spark.sparkContext.hadoopConfiguration), tableDir,
                 s"$dataPath holds a pre-kb (queue-only) tableSink layout; " +
                   "appending would mix partition depths and wedge the stream " +
                   "on its next trigger. Run Pipelines.migrateTableToKb(spark, " +
-                  "tablePath) once (stream stopped) and resume.")
-            t.filter(col("queue").isin(batchQueues: _*))
-              .filter(col("kb").isin(batchBuckets: _*))
-              .select(col("queue"), col("message_id"))
-          }
-        fresh
-          .join(existingKeys, Seq("queue", "message_id"), "left_anti")
-          .write.mode("append").partitionBy("queue", "kb").parquet(dataPath)
+                  "tablePath) once (stream stopped) and resume."))
+              spark.createDataFrame(java.util.Collections.emptyList[Row](), tableKeySchema)
+            else
+              // the known key schema: no schema-inference job per trigger
+              spark.read.schema(tableKeySchema).parquet(dataPath)
+                .filter(col("queue").isin(batchQueues: _*) && col("kb").isin(batchBuckets: _*))
+          // byLeaf again: free while the anti-join keeps fresh's
+          // partitioning (a broadcast join, where the planner drops the
+          // repeated exchange), and what keeps one task per leaf when a
+          // history past the broadcast threshold plans a sort-merge
+          // join, which reshuffles by (queue, kb, message_id)
+          byLeaf(fresh.join(existingKeys, Seq("queue", "kb", "message_id"), "left_anti"))
+            .write.mode("append").partitionBy("queue", "kb").parquet(dataPath)
+        } finally fresh.unpersist()
         ()
       }
   }
+
+  /** The key columns of a [[tableSink]] table, as its files store them. */
+  private val tableKeySchema = StructType.fromDDL("queue STRING, kb INT, message_id BIGINT")
 
   /** One-time migration of a pre-kb [[tableSink]] table (queue-only
     * partitioning, written before the kb layout) into the current
@@ -364,7 +372,8 @@ object Pipelines {
   // most min(k, keyBuckets)/keyBuckets of the key history.
   //
   // Migration note: a table written before the kb layout is REFUSED
-  // (fail-fast in tableSink and prunedKeys) rather than degraded-over:
+  // (the fail-fast in hasParquetData's first-file probe, before the
+  // trigger writes anything) rather than degraded-over:
   // an unpruned check read would be correct, but the same trigger's
   // append writes kb-partitioned directories into the unbucketed tree
   // and the NEXT trigger's read of the mixed-depth structure throws —
@@ -372,10 +381,30 @@ object Pipelines {
   // rewrite is [[migrateTableToKb]] (run with the stream stopped).
 
   /** The ≤ [[graft.operators.DedupOps.keyBuckets]] bucket values
-    * present in a batch — a dimension-bounded driver list (the
-    * [[tableSink]] queue-list convention), never O(batch) rows. */
+    * present in a batch — a dimension-bounded collect, never
+    * O(batch) rows. */
   private[graft] def bucketsOf(batchKeyed: DataFrame): Seq[Int] =
     batchKeyed.select("kb").distinct().collect().map(_.getInt(0)).toSeq
+
+  /** Does the kb-partitioned sink table at `p` hold any parquet DATA?
+    * A missing dir, or one with only markers (an all-empty first
+    * append leaves `_SUCCESS` and no footers), is an absent table. The
+    * probe stops at the first data file, which must sit in a `kb=`
+    * directory: anything else is a pre-kb layout and fails fast with
+    * `preKb` (see the migration note above) — never read as absent,
+    * which would append duplicates forever. */
+  private def hasParquetData(fs: org.apache.hadoop.fs.FileSystem,
+                             p: org.apache.hadoop.fs.Path, preKb: => String): Boolean =
+    fs.exists(p) && {
+      val it = fs.listFiles(p, true)
+      var first: Option[org.apache.hadoop.fs.Path] = None
+      while (first.isEmpty && it.hasNext)
+        first = Some(it.next().getPath).filter(_.getName.endsWith(".parquet"))
+      first.exists { f =>
+        if (!f.getParent.getName.startsWith("kb=")) throw new IllegalStateException(preKb)
+        true
+      }
+    }
 
   /** Keys already present in a kb-partitioned sink table, read pruned
     * to `buckets` (a static partition predicate — the scan lists only
@@ -384,41 +413,18 @@ object Pipelines {
     * an explicit EXISTENCE check, not a caught AnalysisException — a
     * catch-all would also swallow a schema problem (e.g. resuming
     * over a table written in a pre-kb layout) and silently disable
-    * the idempotency check; a legacy layout instead degrades to the
-    * UNPRUNED key read, which is correct, just not bounded. */
-  /** Does the directory hold any parquet DATA? An existing dir with
-    * only markers (an all-empty first append leaves `_SUCCESS` and no
-    * footers) is still an absent table — but only this case is: a dir
-    * WITH data and an unexpected schema must fail loudly, not be
-    * silently treated as empty. */
-  private def hasParquetData(fs: org.apache.hadoop.fs.FileSystem,
-                             p: org.apache.hadoop.fs.Path): Boolean = {
-    val it = fs.listFiles(p, true)
-    var found = false
-    while (!found && it.hasNext)
-      found = it.next().getPath.getName.endsWith(".parquet")
-    found
-  }
-
+    * the idempotency check. */
   private[graft] def prunedKeys(spark: SparkSession, path: String,
                                 keyCols: Seq[String], buckets: Seq[Int]): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p) || !hasParquetData(fs, p))
+    if (!hasParquetData(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
+        s"$path holds a pre-kb (unbucketed) sink table; appending would " +
+          "mix partition depths and wedge the stream on its next trigger. " +
+          "Rewrite it into the kb layout once (stream stopped) before resuming."))
       spark.range(0).select(keyCols.map(k => col("id").as(k)): _*)
-    else {
-      val t = spark.read.parquet(path)
-      // the tableSink fail-fast rule: the caller is about to APPEND a
-      // kb-partitioned tree; degrading the read over an unbucketed
-      // table would let that append mix partition depths and wedge
-      // the stream one trigger later
-      if (!t.columns.contains("kb"))
-        throw new IllegalStateException(
-          s"$path holds a pre-kb (unbucketed) sink table; appending would " +
-            "mix partition depths and wedge the stream on its next trigger. " +
-            "Rewrite it into the kb layout once (stream stopped) before resuming.")
-      t.filter(col("kb").isin(buckets: _*)).select(keyCols.map(col): _*)
-    }
+    else
+      spark.read.parquet(path)
+        .filter(col("kb").isin(buckets: _*)).select(keyCols.map(col): _*)
   }
 
   /** One deterministic row per doc_id within a trigger: the latest
@@ -1002,13 +1008,18 @@ object Pipelines {
     * SolaceReaderStats backlog metric) from the listener bus. The
     * engine feeds `latestOffset` from the source's
     * `reportLatestOffset` and `endOffset` from the batch plan; both
-    * are this source's {"queue":count} JSON. */
+    * are this source's {"queue":count} JSON. Only sources whose
+    * description names a graft queue source are parsed; an offset of
+    * one that fails to parse counts in `offsetParseErrors`, with the
+    * last cause kept in `lastOffsetParseError`. */
   class QueueStatsListener extends StreamingQueryListener {
     @volatile var batches: Long = 0L
     @volatile var totalRows: Long = 0L
     @volatile var maxBatchRows: Long = 0L
     @volatile var backlog: Map[String, Long] = Map.empty
     @volatile var maxBacklog: Long = 0L
+    @volatile var offsetParseErrors: Long = 0L
+    @volatile var lastOffsetParseError: Option[Throwable] = None
 
     override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
     override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
@@ -1019,16 +1030,21 @@ object Pipelines {
         totalRows += rows
         maxBatchRows = math.max(maxBatchRows, rows)
       }
-      e.progress.sources.foreach { s =>
-        try {
-          val end = Option(s.endOffset).map(GraftQueueSource.offsetsFromJson).getOrElse(Map.empty)
-          val latest = Option(s.latestOffset).map(GraftQueueSource.offsetsFromJson).getOrElse(Map.empty)
-          if (latest.nonEmpty) {
-            backlog = latest.map { case (q, n) => q -> math.max(0L, n - end.getOrElse(q, 0L)) }
-            maxBacklog = math.max(maxBacklog, backlog.values.foldLeft(0L)(_ + _))
+      e.progress.sources.filter(_.description.startsWith(GraftQueueSource.DescriptionPrefix))
+        .foreach { s =>
+          try {
+            val end = Option(s.endOffset).map(GraftQueueSource.offsetsFromJson).getOrElse(Map.empty)
+            val latest = Option(s.latestOffset).map(GraftQueueSource.offsetsFromJson).getOrElse(Map.empty)
+            if (latest.nonEmpty) {
+              backlog = latest.map { case (q, n) => q -> math.max(0L, n - end.getOrElse(q, 0L)) }
+              maxBacklog = math.max(maxBacklog, backlog.values.foldLeft(0L)(_ + _))
+            }
+          } catch {
+            case err: Exception =>
+              offsetParseErrors += 1
+              lastOffsetParseError = Some(err)
           }
-        } catch { case _: Exception => () } // non-graft source in the query
-      }
+        }
     }
   }
 }

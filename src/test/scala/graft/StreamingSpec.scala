@@ -87,6 +87,56 @@ class StreamingSpec extends AnyFunSuite {
     assert(listener.totalRows === 50)
   }
 
+  test("waterFill: equal shares, a short queue's leftover goes to the others, no budget takes all") {
+    import GraftQueueSource.waterFill
+    assert(waterFill(Seq(500L, 500L), 151L) === Seq(75L, 76L))
+    assert(waterFill(Seq(10L, 500L, 500L), 151L) === Seq(10L, 70L, 71L))
+    assert(waterFill(Seq(500L, 3L), 100L) === Seq(97L, 3L))
+    assert(waterFill(Seq(40L, 30L), 100L) === Seq(40L, 30L))
+    assert(waterFill(Seq(7L, 0L, 1L << 40), Long.MaxValue) === Seq(7L, 0L, 1L << 40))
+    assert(waterFill(Seq.empty, 10L) === Seq.empty)
+  }
+
+  test("maxRecordsPerTrigger splits the budget evenly: interleaved queues lose no rows to the watermark") {
+    val broker = tmpDir("graft-broker")
+    // two queues filled side by side: qa holds the even seconds, qb the
+    // odd ones, over 20 minutes of event time
+    val t0 = 1700000000000000L
+    Seq("qa" -> 0, "qb" -> 1).foreach { case (qn, off) =>
+      GraftQueueBroker.publish(broker, qn, (0 until 600).map { i =>
+        GraftQueueBroker.textMsg(i.toLong, t0 + (2L * i + off) * 1000000L, s"t/$qn",
+          s"w${i % 7} v${i % 3}")
+      })
+    }
+    val q = Pipelines.windowedWordCount(
+        Pipelines.readQueues(spark, broker, Seq("qa", "qb"), maxRecordsPerTrigger = Some(151)))
+      .writeStream.format("memory").queryName("fair_split")
+      .option("checkpointLocation", tmpDir("graft-ckpt"))
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    try q.awaitTermination(120000) finally q.stop()
+    val ps = q.recentProgress.toSeq
+    val data = ps.filter(_.numInputRows > 0)
+    assert(data.map(_.numInputRows).sum === 1200)
+    data.foreach { p =>
+      val s = p.sources.head
+      val from = Option(s.startOffset).map(GraftQueueSource.offsetsFromJson).getOrElse(Map.empty)
+      val to = GraftQueueSource.offsetsFromJson(s.endOffset)
+      val takes = Seq("qa", "qb").map(qn => to.getOrElse(qn, 0L) - from.getOrElse(qn, 0L))
+      assert(takes.sum <= 151 && (takes(0) - takes(1)).abs <= 1, s"uneven trigger: $takes")
+    }
+    // the stream equals the batch twin over every window the final
+    // watermark closed: no row was dropped as late
+    val wm = ps.reverse.flatMap(p => Option(p.eventTime.get("watermark"))).head
+    val closedBefore = java.sql.Timestamp.from(java.time.Instant.parse(wm).minusSeconds(60))
+    val twin = Pipelines.windowedWordCount(Pipelines.readQueuesBounded(spark, broker, Seq("qa", "qb")))
+      .filter(col("ws") <= lit(closedBefore))
+    val got = spark.table("fair_split")
+    assert(got.select("ws").distinct().count() >= 15)
+    assert(twin.exceptAll(got).count() === 0)
+    assert(got.exceptAll(twin).count() === 0)
+    assert(ps.flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum === 0)
+  }
+
   test("restart from checkpoint is exactly-once across runs") {
     val broker = tmpDir("graft-broker")
     val ckpt = tmpDir("graft-ckpt")
@@ -418,6 +468,75 @@ class StreamingSpec extends AnyFunSuite {
     val got = Pipelines.readTable(spark, table)
     assert(got.count() === 10)
     assert(got.select("message_id").distinct().count() === 10)
+  }
+
+  test("table sink writes one file per touched (queue, kb) leaf under broadcast and sort-merge anti-joins") {
+    // parquet files per leaf directory (queue=…/kb=…) of the table
+    def filesPerLeaf(data: java.io.File): Map[String, Int] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk) else Seq(f)
+      walk(data).filter(_.getName.endsWith(".parquet"))
+        .groupBy(f => s"${f.getParentFile.getParentFile.getName}/${f.getParentFile.getName}")
+        .map { case (leaf, fs) => leaf -> fs.size }
+    }
+    def leavesOf(ids: Range): Set[String] =
+      spark.range(ids.start, ids.end).crossJoin(spark.range(2).select(
+          when(col("id") === 0, "qa").otherwise("qb").as("queue")))
+        .select(col("queue"), operators.DedupOps.keyBucket(col("queue"), col("id")).as("kb"))
+        .distinct().collect().map(r => s"queue=${r.getString(0)}/kb=${r.getInt(1)}").toSet
+
+    def scenario(): Unit = {
+      val broker = tmpDir("graft-broker")
+      val table = tmpDir("graft-table")
+      val data = new java.io.File(table, "data")
+      // each run drains everything available in ONE trigger
+      def run(): Unit = {
+        val recs = Pipelines.mapToTextRecord(Pipelines.readQueues(spark, broker, Seq("qa", "qb")))
+        val q = Pipelines.tableSink(recs, table)
+          .option("checkpointLocation", tmpDir("graft-ckpt")).start()
+        try q.processAllAvailable() finally q.stop()
+        assert(q.recentProgress.count(_.numInputRows > 0) === 1)
+      }
+      def publish(ids: Range): Unit = Seq("qa", "qb").foreach(qn =>
+        publishText(broker, qn, ids, i => s"$qn row $i"))
+      def assertOneFilePerTouchedLeaf(before: Map[String, Int], ids: Range): Unit = {
+        val after = filesPerLeaf(data)
+        val added = after.map { case (leaf, n) => leaf -> (n - before.getOrElse(leaf, 0)) }
+          .filter(_._2 > 0)
+        assert(added.values.forall(_ == 1), s"leaves written by more than one task: $added")
+        assert(added.keySet === leavesOf(ids))
+      }
+
+      // first trigger: no history, so the anti-join is against nothing
+      publish(0 until 300)
+      run()
+      assertOneFilePerTouchedLeaf(Map.empty, 0 until 300)
+      // fresh checkpoint = full redelivery of the old rows plus 300 new
+      // ones per queue: the anti-join now reads real history
+      publish(300 until 600)
+      val before = filesPerLeaf(data)
+      run()
+      assertOneFilePerTouchedLeaf(before, 300 until 600)
+      // and a full replay from a fresh checkpoint lands nothing
+      val settled = filesPerLeaf(data)
+      run()
+      assert(filesPerLeaf(data) === settled)
+      val got = Pipelines.readTable(spark, table)
+      assert(got.count() === 1200)
+      assert(got.select("queue", "message_id").distinct().count() === 1200)
+    }
+
+    scenario()
+    // no broadcast: the history side of the anti-join plans a
+    // sort-merge join that shuffles by (queue, kb, message_id); with
+    // coalescing off that shuffle keeps all its partitions, as it does
+    // for a batch too large for AQE to fold into one task
+    val confs = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try scenario()
+    finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
   test("streaming vector-index ingestion: appended lists equal the builder's, replay is a no-op") {
@@ -1216,6 +1335,7 @@ class StreamingSpec extends AnyFunSuite {
       s"throttled run must observe positive backlog, saw ${listener.maxBacklog}")
     assert(listener.backlog.getOrElse("q1", -1L) === 0L,
       s"backlog must drain to zero, saw ${listener.backlog}")
+    assert(listener.offsetParseErrors === 0L, s"offset parse failed: ${listener.lastOffsetParseError}")
   }
 
   test("watermark drops late data in append mode (state stays bounded)") {
