@@ -846,13 +846,14 @@ object DedupOps {
     * key-hash buckets (≤ [[keyBuckets]] partition directories — per-
     * trigger read work is bounded by the batch's bucket span, not by
     * index history). Indexes written before the `ids` table existed
-    * fall back to the unpruned single-column `sets` read. */
+    * fall back to the unpruned single-column `sets` read. The fallback
+    * is an explicit EXISTENCE check: an `ids` store that exists but
+    * cannot be read pruned (e.g. written without `kb`) fails loudly
+    * rather than silently reading the whole `sets` history. */
   def indexedIds(spark: SparkSession, idx: String, buckets: Seq[Int]): DataFrame =
-    try Snapshot.read(spark, s"$idx/ids")
-      .filter(col("kb").isin(buckets: _*)).select("doc_id")
-    catch { case _: org.apache.spark.sql.AnalysisException =>
-      Snapshot.read(spark, s"$idx/sets").select("doc_id")
-    }
+    if (VectorOps.hExists(spark, s"$idx/ids"))
+      Snapshot.read(spark, s"$idx/ids").filter(col("kb").isin(buckets: _*)).select("doc_id")
+    else Snapshot.read(spark, s"$idx/sets").select("doc_id")
 
   /** Build the minhash dedup index to parquet — the state a streaming
     * ingestion pipeline maintains so NEW documents dedup against the

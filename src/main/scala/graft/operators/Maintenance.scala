@@ -93,125 +93,6 @@ object Maintenance {
     }.sum
   }
 
-  /** Size-tiered IN-PLACE compaction for APPEND-ONLY parquet stores —
-    * the LSM answer to per-trigger file accretion. A streaming sink
-    * appends a handful of files per trigger; after T triggers every
-    * scan (and every scan's directory LISTING) pays O(T) file opens,
-    * which is exactly the climbing per-trigger tail SinkBench exists
-    * to catch. Rewriting the whole store per maintenance pass would
-    * bound the file count but cost O(corpus) each time — unpayable at
-    * scale. This instead merges only the SMALLEST files: when the dir
-    * holds more than `maxFiles` parquet files, the smallest
-    * `n - maxFiles/2 + 1` are read once and rewritten as ONE file
-    * (count drops to maxFiles/2 — the hysteresis keeps merges
-    * infrequent; a single call's merge set is additionally capped at
-    * `maxMergeFiles` — the first compaction of a long-accreted store,
-    * or one run with maintenance previously off, would otherwise
-    * rewrite nearly every file single-threaded inside one streaming
-    * trigger, so the cap bounds each invocation's stall and repeated
-    * per-trigger calls converge to the threshold within a few
-    * triggers). Smallest-first is the size-tiered discipline: fresh
-    * per-trigger deltas merge into a growing run, the run graduates
-    * out of the "smallest" set as it grows, so each row is rewritten
-    * O(log) times over the store's life — never a full rewrite, cost
-    * amortizes to O(rows appended), independent of corpus size.
-    *
-    * Crash contract (single writer per store, as with every unmanaged
-    * index dir): the merged file is written under a `_`-prefixed temp
-    * dir (hidden from every parquet reader), renamed in, and only
-    * then are the source files deleted. A crash before the rename
-    * leaves an ignored temp dir (swept on the next call); a crash
-    * after it leaves DUPLICATE rows — the same window a replayed
-    * append already leaves, and the reason this op composes only with
-    * duplicate-tolerant stores (the minhash index's probe dedups by
-    * doc_id, candidate pairs are distinct, `ids` feeds anti-joins;
-    * the IVF search paths collapse duplicate candidates).
-    *
-    * CONCURRENT-READER contract: the rename-then-delete window means a
-    * reader in ANOTHER process that listed files before a merge can
-    * hit FileNotFoundException when the sources are deleted mid-scan.
-    * In-process readers are safe (each Spark action re-lists), but a
-    * separate serving process must not share a store with THIS
-    * compactor. For stores that are served while maintained, use
-    * [[Snapshot.compactTiered]] instead: same merge policy, but
-    * commits go through generation manifests and retired sources
-    * outlive a grace window, so a pinned [[Snapshot.read]] snapshot
-    * stays valid under live compaction (the sinks default to it).
-    *
-    * Returns the number of files merged away (0 = under threshold,
-    * no-op). */
-  def compactTiered(spark: SparkSession, dir: String, maxFiles: Int = 128,
-                    maxMergeFiles: Int = 512): Int = {
-    require(maxFiles >= 2, s"maxFiles must be >= 2, got $maxFiles")
-    require(maxMergeFiles >= 2, s"maxMergeFiles must be >= 2, got $maxMergeFiles")
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return 0
-    // a manifest-managed store (every index the staged builders write,
-    // any store the snapshot compactor has touched) must be maintained
-    // through [[Snapshot.compactTiered]]: this compactor's tier output
-    // would look like an UNCOMMITTED tier file to snapshot resolution
-    // (rows silently vanish) and its source deletions would fail the
-    // manifest's lost-live-file check — refuse loudly instead
-    require(!fs.exists(new org.apache.hadoop.fs.Path(root, "_manifests")),
-      s"$dir is a snapshot-managed store — use Snapshot.compactTiered " +
-        "(in-place compaction would corrupt manifest resolution)")
-    // sweep temp dirs a crashed previous call left behind
-    fs.listStatus(root).foreach { s =>
-      if (s.isDirectory && s.getPath.getName.startsWith("_compact_tmp"))
-        fs.delete(s.getPath, true)
-    }
-    val files = fs.listStatus(root)
-      .filter(s => !s.isDirectory && s.getPath.getName.endsWith(".parquet"))
-    if (files.length <= maxFiles) return 0
-    val merge = files
-      .sortBy(s => (s.getLen, s.getPath.getName))
-      .take(math.min(files.length - maxFiles / 2 + 1, maxMergeFiles))
-    val tmp = new org.apache.hadoop.fs.Path(root,
-      "_compact_tmp-" + java.util.UUID.randomUUID().toString)
-    spark.read.parquet(merge.map(_.getPath.toString).toIndexedSeq: _*)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(tmp.toString)
-    val part = fs.listStatus(tmp)
-      .find(s => s.getPath.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException(s"merge wrote no parquet under $tmp"))
-    val dst = new org.apache.hadoop.fs.Path(root,
-      "tier-" + java.util.UUID.randomUUID().toString + ".parquet")
-    if (!fs.rename(part.getPath, dst))
-      throw new IllegalStateException(s"rename ${part.getPath} -> $dst failed")
-    merge.foreach(s => fs.delete(s.getPath, false))
-    fs.delete(tmp, true)
-    merge.length
-  }
-
-  /** [[compactTiered]] over every leaf of a Hive-partitioned tree
-    * (the kb-bucketed `ids` / sink tables): each `col=value` leaf is
-    * its own append-only store with its own threshold, so a merge
-    * reads one bucket's small tier — never the sibling buckets —
-    * and partition pruning keeps working on the merged layout. Leaves
-    * under threshold cost one driver listing each (the same listing
-    * every scan of the tree performs). Returns total files merged. */
-  def compactTieredPartitioned(spark: SparkSession, dir: String,
-                               maxFilesPerLeaf: Int = 16,
-                               maxMergeFiles: Int = 512): Int = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return 0
-    // snapshot-managed trees carry their manifest at the ROOT — the
-    // per-leaf compactTiered guard would miss it
-    require(!fs.exists(new org.apache.hadoop.fs.Path(root, "_manifests")),
-      s"$dir is a snapshot-managed store — use " +
-        "Snapshot.compactTieredPartitioned")
-    def leafDirs(d: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
-      val parts = fs.listStatus(d)
-        .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-      if (parts.isEmpty) Seq(d) else parts.toSeq.flatMap(p => leafDirs(p.getPath))
-    }
-    leafDirs(root)
-      .map(l => compactTiered(spark, l.toString, maxFilesPerLeaf, maxMergeFiles))
-      .sum
-  }
-
   /** Range-clustered rewrite: `repartitionByRange` on the cluster key
     * then an in-partition sort, so every output file covers a DISJOINT
     * key range and its parquet min/max footer stats actually prune —

@@ -9,13 +9,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * stores — what lets a SERVING process and in-place compaction share
   * an index directory.
   *
-  * [[Maintenance.compactTiered]]'s rename-then-delete window is safe
-  * for in-process readers (each Spark action re-lists) but can break a
-  * reader in ANOTHER process that pinned its file list before a merge:
-  * the sources it is mid-way through scanning get deleted underneath
-  * it. The round-8 contract therefore required gating a sink's
-  * `maintain` flag off for served indexes — choosing between
-  * maintenance and serving. This module removes that choice with the
+  * The one compactor for append-only stores: a reader in another
+  * process that pinned its file list stays valid while a merge runs
+  * live, and a crash at any point leaves no duplicate rows. It is the
   * standard lakehouse answer (the Iceberg/Delta snapshot idea reduced
   * to a directory-local text manifest):
   *
@@ -47,11 +43,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `mode("overwrite")` rebuild deletes `_manifests` with the rest of
   * the dir, resetting the store to legacy cleanly).
   *
-  * Writer cardinality is unchanged from the tiered compactor: ONE
-  * maintenance writer per store (the owning sink's trigger loop or an
-  * offline job), any number of readers in any process. Readers must
-  * finish a scan within `graceMs` of resolving it — the same kind of
-  * bound every snapshot store with vacuuming imposes.
+  * Writer cardinality: ONE maintenance writer per store (the owning
+  * sink's trigger loop or an offline job), any number of readers in
+  * any process. Readers must finish a scan within `graceMs` of
+  * resolving it — the same kind of bound every snapshot store with
+  * vacuuming imposes.
   */
 object Snapshot {
 
@@ -244,12 +240,15 @@ object Snapshot {
   }
 
   /** Snapshot-isolated size-tiered compaction of a FLAT append-only
-    * store — [[Maintenance.compactTiered]]'s merge policy (smallest
-    * `n - maxFiles/2 + 1` live files, capped at `maxMergeFiles`, when
-    * the live count crosses `maxFiles`) with manifest commits instead
-    * of delete-after-rename. Returns files merged away (0 = no-op).
-    * With `graceMs = 0` retired sources are collected in the same
-    * call — the old compactor's disk behavior, plus the manifest. */
+    * store — the LSM answer to per-trigger file accretion: when the
+    * live count crosses `maxFiles`, the smallest `n - maxFiles/2 + 1`
+    * live files (capped at `maxMergeFiles`) merge into ONE tier file,
+    * committed through a manifest. The hysteresis keeps merges
+    * infrequent, and smallest-first lets fresh deltas fold into a
+    * growing run that graduates out of the merge set, so each row is
+    * rewritten O(log) times over the store's life — never a corpus
+    * rewrite. Returns files merged away (0 = no-op). With
+    * `graceMs = 0` retired sources are collected on the next call. */
   def compactTiered(spark: SparkSession, dir: String, maxFiles: Int = 128,
                     maxMergeFiles: Int = 512,
                     graceMs: Long = DefaultGraceMs,
@@ -300,8 +299,8 @@ object Snapshot {
       case Some(m) => m
       case None =>
         // bootstrap gen 0 = everything currently on disk (including
-        // legacy tier files — under the old compactor they were
-        // committed by their sources' deletion, so they are data).
+        // tier files a pre-manifest in-place compactor left — those
+        // were committed by their sources' deletion, so they are data).
         // Committed BEFORE any tier write, so from here on an
         // unknown tier file always means a crashed commit.
         val m = Manifest(0L, onDisk.map(_._1).sorted, Vector.empty)
@@ -330,7 +329,7 @@ object Snapshot {
     // merge groups: per partition leaf, or the store root's own files
     // (a flat compactor must never merge ACROSS leaf dirs — that would
     // destroy the partition layout; nested files are simply not its
-    // candidates, matching the non-recursive old compactor)
+    // candidates)
     val groups: Seq[Vector[String]] =
       if (perLeaf) live.groupBy(parentRel).values.toSeq
       else Seq(live.filter(n => !n.contains('/')))

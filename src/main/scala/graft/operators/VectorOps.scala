@@ -1322,7 +1322,7 @@ object VectorOps {
     hExists(spark, s"$indexDir/diststats/_SUCCESS")
 
   /** Existence probe through the Hadoop FileSystem API (matching
-    * [[Maintenance.compactTiered]] / the sinks' migration probes) so
+    * [[Snapshot]] / the sinks' pre-kb probes) so
     * index dirs on a non-local filesystem resolve correctly — a
     * java.io.File probe always misses there, silently re-deriving the
     * membership store (or worse, rebuilding the index) every call. */

@@ -277,50 +277,28 @@ object Pipelines {
         // table. kb is a function of (queue, message_id), so deduping
         // on (queue, kb, message_id) is the same dedup and reuses the
         // (queue, kb) exchange. Cached so the SOURCE is read and
-        // shuffled ONCE per trigger: the leaf list and the write below
-        // reuse it. A cache, not a localCheckpoint: a cached plan keeps
-        // its (queue, kb) partitioning visible to the planner, a
-        // checkpoint under AQE does not, and then the leaf list and the
-        // write would each shuffle the batch again.
+        // shuffled ONCE per trigger: unseenRows' leaf collect (which
+        // fills the cache) and the write below reuse it. A cache, not
+        // a localCheckpoint: a cached plan keeps its (queue, kb)
+        // partitioning visible to the planner, a checkpoint under AQE
+        // does not, and then the leaf list and the write would each
+        // shuffle the batch again.
         val fresh = byLeaf(batch.toDF().withColumn("kb",
             graft.operators.DedupOps.keyBucket(col("queue"), col("message_id"))))
           .dropDuplicates("queue", "kb", "message_id")
           .persist()
         try {
-          // the touched (queue, kb) leaves, which also fills the cache: a
-          // dimension-bounded collect (queues × ≤ keyBuckets rows),
-          // never O(batch) rows. Filtering the existing table by them is
-          // a STATIC partition predicate, so the key read scans only
-          // those directories (the file index still lists them all).
-          val leaves = fresh.select("queue", "kb").distinct().collect()
-          val batchQueues = leaves.map(_.getString(0)).distinct.toSeq
-          val batchBuckets = leaves.map(_.getInt(1)).distinct.toSeq
-          val tableDir = new org.apache.hadoop.fs.Path(dataPath)
-          val existingKeys =
-            if (!hasParquetData(tableDir.getFileSystem(spark.sparkContext.hadoopConfiguration), tableDir,
-                s"$dataPath holds a pre-kb (queue-only) tableSink layout; " +
-                  "appending would mix partition depths and wedge the stream " +
-                  "on its next trigger. Run Pipelines.migrateTableToKb(spark, " +
-                  "tablePath) once (stream stopped) and resume."))
-              spark.createDataFrame(java.util.Collections.emptyList[Row](), tableKeySchema)
-            else
-              // the known key schema: no schema-inference job per trigger
-              spark.read.schema(tableKeySchema).parquet(dataPath)
-                .filter(col("queue").isin(batchQueues: _*) && col("kb").isin(batchBuckets: _*))
           // byLeaf again: free while the anti-join keeps fresh's
           // partitioning (a broadcast join, where the planner drops the
           // repeated exchange), and what keeps one task per leaf when a
           // history past the broadcast threshold plans a sort-merge
           // join, which reshuffles by (queue, kb, message_id)
-          byLeaf(fresh.join(existingKeys, Seq("queue", "kb", "message_id"), "left_anti"))
+          byLeaf(unseenRows(fresh, dataPath, Seq("queue", "kb", "message_id"), Seq("queue", "kb")))
             .write.mode("append").partitionBy("queue", "kb").parquet(dataPath)
         } finally fresh.unpersist()
         ()
       }
   }
-
-  /** The key columns of a [[tableSink]] table, as its files store them. */
-  private val tableKeySchema = StructType.fromDDL("queue STRING, kb INT, message_id BIGINT")
 
   /** One-time migration of a pre-kb [[tableSink]] table (queue-only
     * partitioning, written before the kb layout) into the current
@@ -378,7 +356,8 @@ object Pipelines {
   // append writes kb-partitioned directories into the unbucketed tree
   // and the NEXT trigger's read of the mixed-depth structure throws —
   // a wedged stream with one trigger already committed. The one-time
-  // rewrite is [[migrateTableToKb]] (run with the stream stopped).
+  // rewrite is [[migrateTableToKb]] for a [[tableSink]] table (run
+  // with the stream stopped).
 
   /** The ≤ [[graft.operators.DedupOps.keyBuckets]] bucket values
     * present in a batch — a dimension-bounded collect, never
@@ -390,41 +369,65 @@ object Pipelines {
     * A missing dir, or one with only markers (an all-empty first
     * append leaves `_SUCCESS` and no footers), is an absent table. The
     * probe stops at the first data file, which must sit in a `kb=`
-    * directory: anything else is a pre-kb layout and fails fast with
-    * `preKb` (see the migration note above) — never read as absent,
-    * which would append duplicates forever. */
+    * directory: anything else is a pre-kb layout and fails fast (see
+    * the migration note above) — never read as absent, which would
+    * append duplicates forever. */
   private def hasParquetData(fs: org.apache.hadoop.fs.FileSystem,
-                             p: org.apache.hadoop.fs.Path, preKb: => String): Boolean =
+                             p: org.apache.hadoop.fs.Path): Boolean =
     fs.exists(p) && {
       val it = fs.listFiles(p, true)
       var first: Option[org.apache.hadoop.fs.Path] = None
       while (first.isEmpty && it.hasNext)
         first = Some(it.next().getPath).filter(_.getName.endsWith(".parquet"))
       first.exists { f =>
-        if (!f.getParent.getName.startsWith("kb=")) throw new IllegalStateException(preKb)
+        if (!f.getParent.getName.startsWith("kb="))
+          throw new IllegalStateException(
+            s"$p holds a pre-kb (unbucketed) sink table; appending would mix " +
+              "partition depths and wedge the stream on its next trigger. With " +
+              "the stream stopped, run Pipelines.migrateTableToKb(spark, tablePath) " +
+              "once for a tableSink table, or rewrite any other sink table into " +
+              "the kb layout once, then resume.")
         true
       }
     }
 
-  /** Keys already present in a kb-partitioned sink table, read pruned
-    * to `buckets` (a static partition predicate — the scan lists only
-    * those directories). First trigger: no table yet → empty frame
-    * with the right (long-typed) key schema. The absent-table case is
-    * an explicit EXISTENCE check, not a caught AnalysisException — a
-    * catch-all would also swallow a schema problem (e.g. resuming
-    * over a table written in a pre-kb layout) and silently disable
-    * the idempotency check. */
-  private[graft] def prunedKeys(spark: SparkSession, path: String,
-                                keyCols: Seq[String], buckets: Seq[Int]): DataFrame = {
+  /** The idempotent append every sink table shares: the rows of
+    * `batch` whose `keys` are not yet in the kb-partitioned table at
+    * `path`. One `distinct().collect()` lists the (dimension-bounded)
+    * `parts` leaves the batch touches; the existing keys are read with
+    * the batch's own key schema (no schema-inference job), filtered to
+    * those leaves by a STATIC partition predicate (the scan reads only
+    * their directories; the file index still lists every leaf) and
+    * anti-joined on `keys`. The first trigger (no table yet)
+    * anti-joins against an empty frame. The absent-table case is an
+    * explicit EXISTENCE check, not a caught AnalysisException — a
+    * catch-all would also swallow a schema problem and silently
+    * disable the idempotency check. */
+  private[graft] def unseenRows(batch: DataFrame, path: String,
+                                keys: Seq[String], parts: Seq[String]): DataFrame =
+    unseenRows(batch, path, keys, parts, leavesOf(batch, parts))
+
+  /** The `parts` leaves a batch touches: one dimension-bounded collect. */
+  private def leavesOf(batch: DataFrame, parts: Seq[String]): Seq[Row] =
+    batch.select(parts.map(col): _*).distinct().collect().toSeq
+
+  /** [[unseenRows]] over leaves the caller collected once — for splits
+    * of one materialized parent, so the leaf collect never recomputes
+    * a split. `leaves` must cover every leaf of `batch`. */
+  private def unseenRows(batch: DataFrame, path: String, keys: Seq[String],
+                         parts: Seq[String], leaves: Seq[Row]): DataFrame = {
+    val spark = batch.sparkSession
+    val keySchema = StructType(batch.select((keys ++ parts).distinct.map(col): _*)
+      .schema.map(_.copy(nullable = true)))
     val p = new org.apache.hadoop.fs.Path(path)
-    if (!hasParquetData(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
-        s"$path holds a pre-kb (unbucketed) sink table; appending would " +
-          "mix partition depths and wedge the stream on its next trigger. " +
-          "Rewrite it into the kb layout once (stream stopped) before resuming."))
-      spark.range(0).select(keyCols.map(k => col("id").as(k)): _*)
-    else
-      spark.read.parquet(path)
-        .filter(col("kb").isin(buckets: _*)).select(keyCols.map(col): _*)
+    val existing =
+      if (!hasParquetData(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p))
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), keySchema)
+      else
+        spark.read.schema(keySchema).parquet(path).filter(parts.indices
+          .map(i => col(parts(i)).isin(leaves.map(_.get(i)).distinct: _*))
+          .reduce(_ && _))
+    batch.join(existing, keys, "left_anti")
   }
 
   /** One deterministic row per doc_id within a trigger: the latest
@@ -471,10 +474,10 @@ object Pipelines {
         val spark = batch.sparkSession
         import graft.functions.Texts.{kGrams, tokens}
         val bench = spark.read.parquet(benchGramsDir)
-        // referenced four times below (bucket list, hits, both splits)
-        // — localCheckpoint so the version-resolve shuffle runs once
+        // referenced four times below (leaves, hits, both splits) —
+        // localCheckpoint so the version-resolve shuffle runs once
         val docs = latestDocVersion(batch).localCheckpoint(true)
-        val buckets = bucketsOf(docs)
+        val leaves = leavesOf(docs, Seq("kb"))
         // referenced by BOTH writes below — localCheckpoint so the gram
         // explode + bench join runs once per trigger, not per sink
         val hits = docs
@@ -484,15 +487,12 @@ object Pipelines {
           .groupBy(col("doc_id"))
           .agg(count_distinct(col("gram")).as("n_hits"))
           .localCheckpoint(true)
-        val dirty = docs.join(hits, Seq("doc_id"))
-        val clean = docs.join(hits, Seq("doc_id"), "left_anti")
-        dirty.join(prunedKeys(spark, tablePath + "/quarantine", Seq("doc_id"), buckets),
-            Seq("doc_id"), "left_anti")
-          .write.mode("append").partitionBy("kb").parquet(tablePath + "/quarantine")
-        clean.join(prunedKeys(spark, tablePath + "/clean", Seq("doc_id"), buckets),
-            Seq("doc_id"), "left_anti")
-          .write.mode("append").partitionBy("kb").parquet(tablePath + "/clean")
-        ()
+        Seq("quarantine" -> docs.join(hits, Seq("doc_id")),
+            "clean" -> docs.join(hits, Seq("doc_id"), "left_anti")).foreach {
+          case (t, rows) =>
+            unseenRows(rows, s"$tablePath/$t", Seq("doc_id"), Seq("kb"), leaves)
+              .write.mode("append").partitionBy("kb").parquet(s"$tablePath/$t")
+        }
       }
   }
 
@@ -540,14 +540,13 @@ object Pipelines {
     * Like [[incrementalDedupSink]], the sink self-maintains its file
     * layout: each trigger runs the SNAPSHOT-ISOLATED size-tiered
     * threshold check ([[graft.operators.Snapshot.compactTiered]])
-    * over `invlist`, so per-trigger listing cost stays bounded
+    * over `invlist` and `ids`, so per-trigger listing cost stays bounded
     * instead of growing with trigger history — and because merges
     * commit through generation manifests (sources retired, collected
     * only after `graceMs`), a SEPARATE serving process reading this
     * index through [[graft.operators.Snapshot.read]] (as
     * [[graft.operators.VectorOps.annIvfQuery]] does) stays
-    * bit-identical while maintenance runs live; `maintain = false`
-    * is now an opt-out, not a serving requirement.
+    * bit-identical while maintenance runs live.
     *
     * `driftEvery = N` (0 = off) additionally runs
     * [[graft.operators.VectorOps.ivfDriftReport]] over every N-th
@@ -564,22 +563,21 @@ object Pipelines {
     * frozen centroids, and the membership total, which the replay
     * leaves unchanged because its own append was either not yet or
     * already committed): read the log through [[driftLog]], which
-    * collapses those duplicates. With `maintain = true` the log
-    * joins the per-trigger [[graft.operators.Maintenance
-    * .compactTiered]] sweep — a monitoring feed written once per N
-    * triggers must not itself become the unbounded small-file store
-    * the sweep exists to prevent.
+    * collapses those duplicates. The log joins the per-trigger
+    * [[graft.operators.Snapshot.compactTiered]] sweep — a monitoring
+    * feed written once per N triggers must not itself become the
+    * unbounded small-file store the sweep exists to prevent.
     *
     * Two tail-latency bounds keep single triggers near the median
     * (the measured sf10 spikes: 10-12s vector / 23-29s vector-drift
-    * against ~4s / ~5.5s medians): `maxMergeJobs` caps merge JOBS per
-    * trigger (the ids store's 64 leaves hash into maxFiles/2 jitter
-    * offsets, so ~8 leaves can cross the threshold on one trigger —
-    * deferred leaves drain most-overgrown-first on following
-    * triggers), and maintenance SKIPS drift-report triggers when the
-    * cadence allows it (driftEvery > 1) — the report and the merge
-    * sweep are the two heavyweight per-trigger extras, and there is
-    * no reason to ever stack them on the same trigger.
+    * against ~4s / ~5.5s medians): the sweep runs at most 3 merge
+    * JOBS per store per trigger (the ids store's 64 leaves hash into
+    * maxFiles/2 jitter offsets, so ~8 leaves can cross the threshold
+    * on one trigger — deferred leaves drain most-overgrown-first on
+    * following triggers), and maintenance SKIPS drift-report triggers
+    * when the cadence allows it (driftEvery > 1) — the report and the
+    * merge sweep are the two heavyweight per-trigger extras, and there
+    * is no reason to ever stack them on the same trigger.
     *
     * `codebooks = true` targets a composed IVF-PQ index
     * ([[graft.operators.VectorOps.ivfpqBuildIndex]]) instead: each
@@ -592,10 +590,8 @@ object Pipelines {
     * the serving-layout lifecycle is symmetric across both index
     * families. */
   def vectorIndexSink(messages: DataFrame, indexDir: String,
-                      maintain: Boolean = true,
                       driftEvery: Int = 0,
                       graceMs: Long = graft.operators.Snapshot.DefaultGraceMs,
-                      maxMergeJobs: Int = 3,
                       codebooks: Boolean = false)
       : DataStreamWriter[Row] = {
     // the embedding width is a property of the index's frozen
@@ -647,24 +643,13 @@ object Pipelines {
         // maintenance-only triggers between reports — never stack the
         // two heavyweight extras on one trigger (sf10 tail-latency
         // finding); at driftEvery <= 1 every trigger reports, so
-        // skipping would starve maintenance entirely
-        if (maintain && (!reporting || driftEvery <= 1)) {
-          graft.operators.Snapshot.compactTiered(
-            batch.sparkSession,
-            s"$indexDir/${if (codebooks) "codes" else "invlist"}",
-            graceMs = graceMs, maxMergeJobs = maxMergeJobs)
-          graft.operators.Snapshot.compactTieredPartitioned(
-            batch.sparkSession, s"$indexDir/ids", graceMs = graceMs,
-            maxMergeJobs = maxMergeJobs)
-          // the drift log is append-only and its reader ([[driftLog]])
-          // dedups by batch_id, so it tolerates the compactor's
-          // crash-window duplicate rows like the index stores do
-          if (driftEvery > 0)
-            graft.operators.Snapshot.compactTiered(
-              batch.sparkSession, s"$indexDir/driftlog", graceMs = graceMs,
-              maxMergeJobs = maxMergeJobs)
-        }
-        ()
+        // skipping would starve maintenance entirely. The drift log is
+        // append-only and its reader ([[driftLog]]) dedups by batch_id,
+        // so it tolerates the compactor's crash-window duplicate rows
+        // like the index stores do
+        if (!reporting || driftEvery <= 1)
+          maintainIndex(spark, indexDir, Seq(if (codebooks) "codes" else "invlist") ++
+            Option.when(driftEvery > 0)("driftlog"), graceMs)
       }
   }
 
@@ -707,7 +692,7 @@ object Pipelines {
     * anti-join reads only the buckets the batch's pairs hash into —
     * neither read grows with stream history.
     *
-    * Self-maintaining file layout (`maintain = true`, the default):
+    * Self-maintaining file layout:
     * row-level work per trigger is batch-bounded by the pruned checks
     * above, but each trigger also APPENDS a handful of parquet files
     * to `bands`/`sets`/`ids`, and every later trigger's probe re-LISTS
@@ -737,14 +722,12 @@ object Pipelines {
     * between rebuilds and membership totals cancel). A minhash index
     * without the vocabstats baseline (built before it existed) skips
     * the log rather than wedging the trigger — rebuild to start
-    * monitoring. The driftlog joins the maintain sweep like the
+    * monitoring. The driftlog joins the maintenance sweep like the
     * index stores. */
   def incrementalDedupSink(messages: DataFrame, indexDir: String,
                            tablePath: String,
-                           maintain: Boolean = true,
                            driftEvery: Int = 0,
-                           graceMs: Long = graft.operators.Snapshot.DefaultGraceMs,
-                           maxMergeJobs: Int = 3)
+                           graceMs: Long = graft.operators.Snapshot.DefaultGraceMs)
       : DataStreamWriter[Row] = {
     val dataPath = tablePath + "/data"
     // running membership total for the drift report's size signal —
@@ -793,30 +776,10 @@ object Pipelines {
           .withColumn("kb",
             graft.operators.DedupOps.keyBucket(col("doc_a"), col("doc_b")))
           .localCheckpoint(true)
-        pairs.join(
-            prunedKeys(spark, dataPath, Seq("doc_a", "doc_b"), bucketsOf(pairs)),
-            Seq("doc_a", "doc_b"), "left_anti")
+        unseenRows(pairs, dataPath, Seq("doc_a", "doc_b"), Seq("kb"))
           .write.mode("append").partitionBy("kb").parquet(dataPath)
-        // same per-trigger tail-latency bound as vectorIndexSink:
-        // merge JOBS capped so a multi-store wave never stalls one
-        // trigger on sequential merges (deferred leaves drain
-        // most-overgrown-first on following triggers)
-        if (maintain) {
-          graft.operators.Snapshot.compactTiered(
-            spark, s"$indexDir/bands", graceMs = graceMs,
-            maxMergeJobs = maxMergeJobs)
-          graft.operators.Snapshot.compactTiered(
-            spark, s"$indexDir/sets", graceMs = graceMs,
-            maxMergeJobs = maxMergeJobs)
-          graft.operators.Snapshot.compactTieredPartitioned(
-            spark, s"$indexDir/ids", graceMs = graceMs,
-            maxMergeJobs = maxMergeJobs)
-          if (driftEvery > 0)
-            graft.operators.Snapshot.compactTiered(
-              spark, s"$indexDir/driftlog", graceMs = graceMs,
-              maxMergeJobs = maxMergeJobs)
-        }
-        ()
+        maintainIndex(spark, indexDir,
+          Seq("bands", "sets") ++ Option.when(driftEvery > 0)("driftlog"), graceMs)
       }
   }
 
@@ -847,16 +810,18 @@ object Pipelines {
     * replayed fold's duplicate band rows collapse in the probe's
     * distinct. Per-trigger row work is batch-bounded; the file-count
     * tail is held flat by the same snapshot-isolated tiered
-    * compaction as the other index sinks (`maintain = true`). */
+    * compaction as the other index sinks. */
   def phashIndexSink(messages: DataFrame, indexDir: String,
                      tablePath: String,
-                     maintain: Boolean = true,
-                     graceMs: Long = graft.operators.Snapshot.DefaultGraceMs,
-                     maxMergeJobs: Int = 3): DataStreamWriter[Row] =
-    sigIndexSink(messages,
-      graft.operators.MultimodalOps.imagePhashSigsOf,
-      graft.operators.MultimodalOps.imagePhashPopulation,
-      indexDir, tablePath, maintain, graceMs, maxMergeJobs)
+                     graceMs: Long = graft.operators.Snapshot.DefaultGraceMs)
+      : DataStreamWriter[Row] =
+    sigIndexSink(messages, graft.operators.MultimodalOps.imagePhashSigsOf,
+      Seq("doc_id", "sig"),
+      graft.operators.MultimodalOps.phashIndexUpdate(_, _, _,
+        graft.operators.MultimodalOps.imagePhashPopulation),
+      graft.operators.MultimodalOps.phashProbeIndex(_, _, _,
+        graft.operators.MultimodalOps.imagePhashPopulation),
+      indexDir, tablePath, graceMs)
 
   /** Ingestion-time AUDIO dedup on the stream — the FIFTH signature
     * family's batch/stream symmetry (r17): [[phashIndexSink]]'s exact
@@ -869,62 +834,15 @@ object Pipelines {
     * decay, rebuilds are a compaction concern). */
   def audioPhashIndexSink(messages: DataFrame, indexDir: String,
                           tablePath: String,
-                          maintain: Boolean = true,
-                          graceMs: Long = graft.operators.Snapshot.DefaultGraceMs,
-                          maxMergeJobs: Int = 3): DataStreamWriter[Row] =
-    sigIndexSink(messages,
-      graft.operators.MultimodalOps.audioPhashSigsOf,
-      graft.operators.MultimodalOps.audioPhashPopulation,
-      indexDir, tablePath, maintain, graceMs, maxMergeJobs)
-
-  /** The shared (doc_id, sig)-granularity signature-ingestion sink the
-    * image and audio families instantiate with their signer +
-    * population marker. */
-  private def sigIndexSink(messages: DataFrame,
-                           signer: DataFrame => DataFrame,
-                           population: String,
-                           indexDir: String, tablePath: String,
-                           maintain: Boolean, graceMs: Long,
-                           maxMergeJobs: Int): DataStreamWriter[Row] = {
-    val dataPath = tablePath + "/data"
-    messages.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", tablePath + "/_checkpoint")
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val spark = batch.sparkSession
-        // deterministic within-trigger winner, then sign; materialized
-        // because the sigs feed the membership anti-join, the fold,
-        // and the probe — and the fold appends to paths the probe
-        // reads (the incrementalDedupSink self-scan rule)
-        val sigs = signer(latestDocVersion(batch))
-          .withColumn("kb", graft.operators.DedupOps.keyBucket(col("doc_id")))
-          .localCheckpoint(true)
-        val newSigs = sigs.join(
-          graft.operators.DedupOps.indexedIds(spark, indexDir, bucketsOf(sigs)),
-          Seq("doc_id"), "left_anti").select("doc_id", "sig").localCheckpoint(true)
-        if (!newSigs.isEmpty)
-          graft.operators.MultimodalOps.phashIndexUpdate(
-            spark, newSigs, indexDir, population)
-        val pairs = graft.operators.MultimodalOps
-          .phashProbeIndex(spark, sigs.select("doc_id", "sig"), indexDir, population)
-          .withColumn("kb",
-            graft.operators.DedupOps.keyBucket(col("doc_a"), col("doc_b")))
-          .localCheckpoint(true)
-        pairs.join(
-            prunedKeys(spark, dataPath, Seq("doc_a", "doc_b"), bucketsOf(pairs)),
-            Seq("doc_a", "doc_b"), "left_anti")
-          .write.mode("append").partitionBy("kb").parquet(dataPath)
-        if (maintain) {
-          graft.operators.Snapshot.compactTiered(
-            spark, s"$indexDir/bands", graceMs = graceMs,
-            maxMergeJobs = maxMergeJobs)
-          graft.operators.Snapshot.compactTieredPartitioned(
-            spark, s"$indexDir/ids", graceMs = graceMs,
-            maxMergeJobs = maxMergeJobs)
-        }
-        ()
-      }
-  }
+                          graceMs: Long = graft.operators.Snapshot.DefaultGraceMs)
+      : DataStreamWriter[Row] =
+    sigIndexSink(messages, graft.operators.MultimodalOps.audioPhashSigsOf,
+      Seq("doc_id", "sig"),
+      graft.operators.MultimodalOps.phashIndexUpdate(_, _, _,
+        graft.operators.MultimodalOps.audioPhashPopulation),
+      graft.operators.MultimodalOps.phashProbeIndex(_, _, _,
+        graft.operators.MultimodalOps.audioPhashPopulation),
+      indexDir, tablePath, graceMs)
 
   /** Ingestion-time VIDEO dedup on the stream — the [[phashIndexSink]]
     * composition at the video granularity, closing the batch/stream
@@ -946,47 +864,68 @@ object Pipelines {
     * the signature kernel is corpus-independent, like the image one. */
   def videoPhashIndexSink(messages: DataFrame, indexDir: String,
                           tablePath: String,
-                          maintain: Boolean = true,
-                          graceMs: Long = graft.operators.Snapshot.DefaultGraceMs,
-                          maxMergeJobs: Int = 3): DataStreamWriter[Row] = {
+                          graceMs: Long = graft.operators.Snapshot.DefaultGraceMs)
+      : DataStreamWriter[Row] =
+    sigIndexSink(messages, graft.operators.MultimodalOps.videoPhashSigsOf,
+      Seq("doc_id", "slot", "sig"), graft.operators.MultimodalOps.videoPhashIndexUpdate,
+      graft.operators.MultimodalOps.videoPhashProbeIndex, indexDir, tablePath, graceMs)
+
+  /** The shared signature-ingestion sink the image, audio and video
+    * families instantiate: `signer` signs each trigger's latest doc
+    * versions into `sigCols` rows, `update` folds the genuinely new
+    * ones into the banded index and `probe` pairs the whole batch
+    * against it (update-before-probe); the pairs land in the
+    * idempotently-merged table under `tablePath`. */
+  private def sigIndexSink(messages: DataFrame,
+                           signer: DataFrame => DataFrame,
+                           sigCols: Seq[String],
+                           update: (SparkSession, DataFrame, String) => Unit,
+                           probe: (SparkSession, DataFrame, String) => DataFrame,
+                           indexDir: String, tablePath: String,
+                           graceMs: Long): DataStreamWriter[Row] = {
     val dataPath = tablePath + "/data"
     messages.writeStream
       .outputMode("append")
       .option("checkpointLocation", tablePath + "/_checkpoint")
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
         val spark = batch.sparkSession
-        // deterministic within-trigger winner, then demux+sign;
-        // materialized for the same three-consumer/self-scan reasons
-        // as the image sink
-        val sigs = graft.operators.MultimodalOps
-          .videoPhashSigsOf(latestDocVersion(batch))
+        // deterministic within-trigger winner, then sign; materialized
+        // because the sigs feed the membership anti-join, the fold,
+        // and the probe — and the fold appends to paths the probe
+        // reads (the incrementalDedupSink self-scan rule)
+        val sigs = signer(latestDocVersion(batch))
           .withColumn("kb", graft.operators.DedupOps.keyBucket(col("doc_id")))
           .localCheckpoint(true)
         val newSigs = sigs.join(
           graft.operators.DedupOps.indexedIds(spark, indexDir, bucketsOf(sigs)),
-          Seq("doc_id"), "left_anti")
-          .select("doc_id", "slot", "sig").localCheckpoint(true)
-        if (!newSigs.isEmpty)
-          graft.operators.MultimodalOps.videoPhashIndexUpdate(spark, newSigs, indexDir)
-        val pairs = graft.operators.MultimodalOps
-          .videoPhashProbeIndex(spark, sigs.select("doc_id", "slot", "sig"), indexDir)
+          Seq("doc_id"), "left_anti").select(sigCols.map(col): _*).localCheckpoint(true)
+        if (!newSigs.isEmpty) update(spark, newSigs, indexDir)
+        val pairs = probe(spark, sigs.select(sigCols.map(col): _*), indexDir)
           .withColumn("kb",
             graft.operators.DedupOps.keyBucket(col("doc_a"), col("doc_b")))
           .localCheckpoint(true)
-        pairs.join(
-            prunedKeys(spark, dataPath, Seq("doc_a", "doc_b"), bucketsOf(pairs)),
-            Seq("doc_a", "doc_b"), "left_anti")
+        unseenRows(pairs, dataPath, Seq("doc_a", "doc_b"), Seq("kb"))
           .write.mode("append").partitionBy("kb").parquet(dataPath)
-        if (maintain) {
-          graft.operators.Snapshot.compactTiered(
-            spark, s"$indexDir/bands", graceMs = graceMs,
-            maxMergeJobs = maxMergeJobs)
-          graft.operators.Snapshot.compactTieredPartitioned(
-            spark, s"$indexDir/ids", graceMs = graceMs,
-            maxMergeJobs = maxMergeJobs)
-        }
-        ()
+        maintainIndex(spark, indexDir, Seq("bands"), graceMs)
       }
+  }
+
+  /** Merge JOBS each store's per-trigger sweep may run — the sf10
+    * tail-latency bound: a multi-store or multi-leaf merge wave never
+    * stalls one trigger on sequential merges (deferred leaves drain
+    * most-overgrown-first on following triggers). */
+  private val maxMergeJobs = 3
+
+  /** The index sinks' per-trigger maintenance: the snapshot-isolated
+    * size-tiered threshold check ([[graft.operators.Snapshot
+    * .compactTiered]]) over each flat store in `flat`, then over the
+    * kb-partitioned `ids` membership store. */
+  private def maintainIndex(spark: SparkSession, indexDir: String,
+                            flat: Seq[String], graceMs: Long): Unit = {
+    flat.foreach(store => graft.operators.Snapshot.compactTiered(
+      spark, s"$indexDir/$store", graceMs = graceMs, maxMergeJobs = maxMergeJobs))
+    graft.operators.Snapshot.compactTieredPartitioned(
+      spark, s"$indexDir/ids", graceMs = graceMs, maxMergeJobs = maxMergeJobs)
   }
 
   /** SolaceIO withMaxReadTime equivalent: start the query with

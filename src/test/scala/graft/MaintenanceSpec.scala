@@ -105,7 +105,12 @@ class MaintenanceSpec extends AnyFunSuite {
     }
     val before = parquetFiles(dir)
     assert(before.length >= 18)
-    def ids() = spark.read.parquet(dir).collect().map(_.getLong(0)).sorted.toSeq
+    // live files and rows as a reader resolves them (grace-0 retirees
+    // stay on disk until the next call collects them)
+    def live() = operators.Snapshot.files(spark, dir)
+      .map(f => new java.io.File(new java.net.URI(f)))
+    def ids() = operators.Snapshot.read(spark, dir).collect().map(_.getLong(0)).sorted.toSeq
+    def compact() = operators.Snapshot.compactTiered(spark, dir, maxFiles = 8, graceMs = 0)
     val rows = ids()
 
     // a crashed previous call's temp dir must be invisible to readers
@@ -114,25 +119,27 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(orphan.mkdir())
     assert(ids() === rows, "underscore temp dir must be hidden from the reader")
 
-    val merged = operators.Maintenance.compactTiered(spark, dir, maxFiles = 8)
+    val merged = compact()
     assert(merged === before.length - 4 + 1, "merge down to maxFiles/2")
-    assert(parquetFiles(dir).length === 4)
+    assert(live().length === 4)
+    assert(live().forall(_.exists), "live paths must resolve to on-disk files")
     assert(!orphan.exists(), "compactor must sweep crashed temp dirs")
     assert(ids() === rows, "in-place merge must not change a row")
 
     // under threshold → no-op
-    assert(operators.Maintenance.compactTiered(spark, dir, maxFiles = 8) === 0)
+    assert(compact() === 0)
     assert(ids() === rows)
 
     // size-tiered discipline: after MORE small appends, the next merge
     // folds the new deltas but leaves the largest survivor untouched —
     // rows are not rewritten O(n) times
-    val biggest = parquetFiles(dir).maxBy(_.length).getName
+    val biggest = live().maxBy(_.length)
+    assert(biggest.length > live().map(_.length).min, "tiers must differ in size")
     (0 until 8).foreach { i =>
       spark.range(1000 + i, 1001 + i).coalesce(1).write.mode("append").parquet(dir)
     }
-    assert(operators.Maintenance.compactTiered(spark, dir, maxFiles = 8) > 0)
-    assert(parquetFiles(dir).exists(_.getName === biggest),
+    assert(compact() > 0)
+    assert(live().contains(biggest),
       "largest file must graduate out of the merge tier")
     assert(ids() === (rows ++ (1000L until 1008L)).sorted)
   }
@@ -153,13 +160,8 @@ class MaintenanceSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val before = pairs()
     assert(before.nonEmpty)
-    // the staged builders write manifest-managed stores from birth, so
-    // the legacy in-place compactor must REFUSE them (its tier output
-    // would be invisible to snapshot resolution — rows vanish) ...
-    intercept[IllegalArgumentException] {
-      operators.Maintenance.compactTiered(spark, s"$idx/bands", 4)
-    }
-    // ... and the snapshot compactor is the maintenance path
+    // the staged builders write manifest-managed stores from birth;
+    // the snapshot compactor is their maintenance path
     def live(t: String) = operators.Snapshot.files(spark, s"$idx/$t").length
     val (b0, s0) = (live("bands"), live("sets"))
     assert(operators.Snapshot.compactTiered(spark, s"$idx/bands", 4, graceMs = 0) > 0)

@@ -676,6 +676,28 @@ class QueriesSpec extends AnyFunSuite {
       "membership lands with the re-fold")
   }
 
+  test("indexedIds reads sets only when ids is absent; an unbucketed ids fails loudly") {
+    val idx = Files.createTempDirectory("graft-mhidx-ids").toString
+    operators.DedupOps.incrementalIndexBuild(spark, sf, idx)
+    val all = (0 until operators.DedupOps.keyBuckets).toSeq
+    def ids() = operators.DedupOps.indexedIds(spark, idx, all)
+      .collect().map(_.getLong(0)).toSet
+    val docs = Tables(spark, sf, "documents").select("doc_id")
+      .collect().map(_.getLong(0)).toSet
+    assert(ids() === docs)
+    // an `ids` store written without kb cannot be read pruned: it must
+    // fail, not silently fall back to the whole `sets` history
+    val unbucketed = operators.Snapshot.read(spark, s"$idx/ids").select("doc_id").localCheckpoint()
+    unbucketed.write.mode("overwrite").parquet(s"$idx/ids")
+    intercept[org.apache.spark.sql.AnalysisException](ids())
+    // an index from before `ids` existed still reads its members from sets
+    java.nio.file.Files.walk(java.nio.file.Paths.get(s"$idx/ids"))
+      .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      .forEach(p => java.nio.file.Files.delete(p))
+    assert(ids() === operators.Snapshot.read(spark, s"$idx/sets").select("doc_id")
+      .collect().map(_.getLong(0)).toSet)
+  }
+
   test("universe drift: new-vocabulary near-dups pair only after the full rebuild") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._

@@ -539,6 +539,48 @@ class StreamingSpec extends AnyFunSuite {
     finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
+  test("table sink runs a fixed number of Spark jobs per trigger over existing history") {
+    val broker = tmpDir("graft-broker")
+    val table = tmpDir("graft-table")
+    val ckpt = tmpDir("graft-ckpt")
+    def publish(ids: Range): Unit = Seq("qa", "qb").foreach(qn =>
+      publishText(broker, qn, ids, i => s"$qn row $i"))
+    // job starts by streaming query id; the listener bus is asynchronous,
+    // so a marker job in its own group fences the count
+    val jobsOf = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          Seq("sql.streaming.queryId", "spark.jobGroup.id")
+            .flatMap(k => Option(p.getProperty(k))).foreach(id => jobsOf.merge(id, 1, _ + _))
+        }
+    }
+    def run(): org.apache.spark.sql.streaming.StreamingQuery = {
+      val recs = Pipelines.mapToTextRecord(Pipelines.readQueues(spark, broker, Seq("qa", "qb")))
+      val q = Pipelines.tableSink(recs, table).option("checkpointLocation", ckpt).start()
+      try q.processAllAvailable() finally q.stop()
+      q
+    }
+    publish(0 until 300)
+    run()
+    publish(300 until 600)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val q = run()
+      assert(q.recentProgress.count(_.numInputRows > 0) === 1)
+      val marker = s"graft-job-fence-${java.util.UUID.randomUUID()}"
+      spark.sparkContext.setJobGroup(marker, "listener fence")
+      try spark.range(1).collect() finally spark.sparkContext.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!jobsOf.containsKey(marker) && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(jobsOf.containsKey(marker), "listener fence never arrived")
+      // the (queue, kb)-partitioned pass as measured; more jobs means a
+      // trigger reads, shuffles or lists the batch or the table again
+      assert(jobsOf.getOrDefault(q.id.toString, 0) === 7)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(Pipelines.readTable(spark, table).count() === 1200)
+  }
+
   test("streaming vector-index ingestion: appended lists equal the builder's, replay is a no-op") {
     val broker = tmpDir("graft-broker")
     val sf = SparkSpec.sf
@@ -909,6 +951,36 @@ class StreamingSpec extends AnyFunSuite {
       "replay must not re-fold already-indexed docs")
   }
 
+  test("pre-kb pair table: an index sink fails fast before appending a pair") {
+    val broker = tmpDir("graft-broker")
+    val table = tmpDir("graft-phash-prekb")
+    val idx = tmpDir("graft-phidx-prekb")
+    val sf = SparkSpec.sf
+    val cut = 100L
+    operators.MultimodalOps.phashIndexBuild(spark, sf, idx, col("doc_id") < cut)
+    val incoming = Tables(spark, sf, "documents")
+      .filter(col("doc_id") >= cut).select("doc_id", "text").collect()
+    GraftQueueBroker.publish(broker, "docs", incoming.map { r =>
+      GraftQueueBroker.textMsg(r.getLong(0), 1700000000000000L + r.getLong(0) * 1000000L,
+        "t/docs/0", r.getString(1))
+    })
+    // forge a pair table written before the kb layout: no partitioning
+    import spark.implicits._
+    Seq((1L, 2L, 3L), (4L, 5L, 6L)).toDF("doc_a", "doc_b", "hamming")
+      .write.parquet(table + "/data")
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      val q = Pipelines.phashIndexSink(Pipelines.readQueues(spark, broker, Seq("docs")), idx, table)
+        .option("checkpointLocation", tmpDir("graft-ckpt")).start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    def rootMessages(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ rootMessages(t.getCause)
+    assert(rootMessages(e).exists(_.contains("pre-kb")), s"unexpected failure: $e")
+    val untouched = spark.read.parquet(table + "/data")
+    assert(untouched.count() === 2, "failed trigger must not append pairs")
+    assert(!untouched.columns.contains("kb"), "failed trigger must not mix layouts")
+  }
+
   test("streaming audio-phash ingestion: stream-probed audio pairs equal " +
     "the batch operator on pairs touching the stream, replay is a no-op") {
     val broker = tmpDir("graft-broker")
@@ -1246,13 +1318,14 @@ class StreamingSpec extends AnyFunSuite {
 
   test("sink idempotency key check reads only the batch's buckets, not table history") {
     import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     val table = tmpDir("graft-kbtable") + "/data"
-    // history: 50 keys land in ~35 of the 64 kb partitions (xxhash64 is
-    // seeded — the layout is deterministic run to run)
-    spark.range(50)
+    def keyed(from: Long, until: Long) = spark.range(from, until)
       .select(col("id").as("doc_id"),
         operators.DedupOps.keyBucket(col("id")).as("kb"))
-      .write.mode("append").partitionBy("kb").parquet(table)
+    // history: 50 keys land in ~35 of the 64 kb partitions (xxhash64 is
+    // seeded — the layout is deterministic run to run)
+    keyed(0, 50).write.mode("append").partitionBy("kb").parquet(table)
     def filesUnder(dir: java.io.File): Int =
       Option(dir.listFiles()).toSeq.flatten.map { f =>
         if (f.isDirectory) filesUnder(f)
@@ -1266,30 +1339,35 @@ class StreamingSpec extends AnyFunSuite {
     assert(occupied.nonEmpty && occupied.size < operators.DedupOps.keyBuckets,
       "seed must leave some buckets empty for the zero-read case")
 
-    def scannedFiles(buckets: Seq[Int]): (Long, Long) = {
-      val df = Pipelines.prunedKeys(spark, table, Seq("doc_id"), buckets)
+    // (files the key read scanned, rows the anti-join let through)
+    def scannedFiles(batch: org.apache.spark.sql.DataFrame): (Long, Long) = {
+      val df = Pipelines.unseenRows(batch, table, Seq("doc_id"), Seq("kb"))
       // collect() executes THIS dataset's plan (count() would build a
       // fresh QueryExecution and leave these metrics untouched)
       val n = df.collect().length.toLong
-      val files = df.queryExecution.executedPlan.collect {
+      val files = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
         case s: FileSourceScanExec => s.metrics("numFiles").value
       }.sum
       (files, n)
     }
     // a batch hashing into ONE occupied bucket reads that bucket's
-    // files only — never the whole key history
+    // files only — never the whole key history — and finds its keys
     val b = occupied.head
     val bucketFiles = filesUnder(new java.io.File(s"$table/kb=$b"))
-    val (readOne, rowsOne) = scannedFiles(Seq(b))
+    val inB = keyed(0, 50).filter(col("kb") === b)
+    assert(inB.count() > 0)
+    val (readOne, rowsOne) = scannedFiles(inB)
     assert(readOne === bucketFiles, "scan must read exactly the batch's bucket")
     assert(readOne < totalFiles, "pruning must skip the other buckets")
-    assert(rowsOne > 0)
+    assert(rowsOne === 0, "every key of the batch is already in the table")
     // a batch hashing only into EMPTY buckets reads zero files no
     // matter how much history the table holds
     val empty = (0 until operators.DedupOps.keyBuckets).filterNot(occupied)
-    val (readNone, rowsNone) = scannedFiles(empty.take(3))
+    val fresh = keyed(1000, 2000).filter(col("kb").isin(empty.take(3): _*))
+    assert(fresh.count() > 0)
+    val (readNone, rowsNone) = scannedFiles(fresh)
     assert(readNone === 0, "untouched buckets must cost zero reads")
-    assert(rowsNone === 0)
+    assert(rowsNone === fresh.count(), "no key of the batch is in the table")
   }
 
   test("withMaxReadTime: AvailableNow drains the snapshot; deadline caps a slow read") {
