@@ -4,11 +4,18 @@ import graft.functions.BinRecordColumns.decodeRecord
 import graft.functions.Texts
 import graft.model.{DedupedMsg, GraftBytesRecord, GraftStructRecord, GraftTextRecord}
 import graft.sources.GraftQueueSource
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQueryListener}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** Streaming pipelines over the graft queue source — the Spark
   * re-expression of the reference's sample pipelines:
@@ -254,8 +261,10 @@ object Pipelines {
     * That prune bounds the key read only while a batch spans fewer
     * than [[graft.operators.DedupOps.keyBuckets]] buckets per queue;
     * a batch of a few hundred messages per queue already touches every
-    * bucket, so at ingest rates each trigger reads (and lists) the
-    * whole key history and its cost grows with the table.
+    * bucket, so at ingest rates each trigger scans the whole key
+    * history and that scan grows with the table. Finding the files
+    * costs no Spark job: [[unseenRows]] lists only the touched leaves,
+    * on the driver.
     *
     * Each trigger is one pass partitioned by (queue, kb) into the
     * session's shuffle-partition count: the batch is hash-partitioned
@@ -372,11 +381,10 @@ object Pipelines {
     * directory: anything else is a pre-kb layout and fails fast (see
     * the migration note above) — never read as absent, which would
     * append duplicates forever. */
-  private def hasParquetData(fs: org.apache.hadoop.fs.FileSystem,
-                             p: org.apache.hadoop.fs.Path): Boolean =
+  private def hasParquetData(fs: FileSystem, p: Path): Boolean =
     fs.exists(p) && {
       val it = fs.listFiles(p, true)
-      var first: Option[org.apache.hadoop.fs.Path] = None
+      var first: Option[Path] = None
       while (first.isEmpty && it.hasNext)
         first = Some(it.next().getPath).filter(_.getName.endsWith(".parquet"))
       first.exists { f =>
@@ -394,15 +402,13 @@ object Pipelines {
   /** The idempotent append every sink table shares: the rows of
     * `batch` whose `keys` are not yet in the kb-partitioned table at
     * `path`. One `distinct().collect()` lists the (dimension-bounded)
-    * `parts` leaves the batch touches; the existing keys are read with
-    * the batch's own key schema (no schema-inference job), filtered to
-    * those leaves by a STATIC partition predicate (the scan reads only
-    * their directories; the file index still lists every leaf) and
-    * anti-joined on `keys`. The first trigger (no table yet)
-    * anti-joins against an empty frame. The absent-table case is an
-    * explicit EXISTENCE check, not a caught AnalysisException — a
-    * catch-all would also swallow a schema problem and silently
-    * disable the idempotency check. */
+    * `parts` leaves the batch touches; the existing keys are read from
+    * exactly those leaves ([[touchedKeys]]: listed on the driver, no
+    * listing job, no schema inference) and anti-joined on `keys`. The
+    * first trigger (no table yet) anti-joins against an empty frame.
+    * The absent-table case is an explicit EXISTENCE check, not a caught
+    * AnalysisException — a catch-all would also swallow a schema
+    * problem and silently disable the idempotency check. */
   private[graft] def unseenRows(batch: DataFrame, path: String,
                                 keys: Seq[String], parts: Seq[String]): DataFrame =
     unseenRows(batch, path, keys, parts, leavesOf(batch, parts))
@@ -419,15 +425,59 @@ object Pipelines {
     val spark = batch.sparkSession
     val keySchema = StructType(batch.select((keys ++ parts).distinct.map(col): _*)
       .schema.map(_.copy(nullable = true)))
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val existing =
-      if (!hasParquetData(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p))
+      if (!hasParquetData(fs, p))
         spark.createDataFrame(java.util.Collections.emptyList[Row](), keySchema)
-      else
-        spark.read.schema(keySchema).parquet(path).filter(parts.indices
-          .map(i => col(parts(i)).isin(leaves.map(_.get(i)).distinct: _*))
-          .reduce(_ && _))
+      else touchedKeys(spark, fs, p, keySchema, parts, leaves)
     batch.join(existing, keys, "left_anti")
+  }
+
+  /** The `keySchema` columns of the `leaves` of the table at `p`. Each
+    * leaf directory is named with Spark's own partition-path escaping
+    * and listed on the driver (a leaf that does not exist is empty;
+    * `_`/`.`-prefixed files are skipped, as Spark's listing skips
+    * them), and the scan gets those files through a fixed
+    * [[LeafIndex]] — a `spark.read` of the paths would list them again
+    * in a Spark job once they pass the parallel-discovery threshold. */
+  private def touchedKeys(spark: SparkSession, fs: FileSystem, p: Path, keySchema: StructType,
+                          parts: Seq[String], leaves: Seq[Row]): DataFrame = {
+    val partSchema = StructType(parts.map(keySchema(_)))
+    val toInternal = CatalystTypeConverters.createToCatalystConverter(partSchema)
+    val dirs = leaves.map { leaf =>
+      val dir = ExternalCatalogUtils.generatePartitionPath(
+        parts.indices.map(i => parts(i) -> Option(leaf.get(i)).map(_.toString).orNull).toMap, parts, p)
+      val files =
+        if (!fs.exists(dir)) Array.empty[FileStatus]
+        else fs.listStatus(dir).filter { f =>
+          val n = f.getPath.getName
+          f.isFile && !n.startsWith("_") && !n.startsWith(".")
+        }
+      PartitionDirectory(toInternal(leaf).asInstanceOf[InternalRow], files)
+    }
+    spark.baseRelationToDataFrame(HadoopFsRelation(new LeafIndex(p, partSchema, dirs), partSchema,
+      StructType(keySchema.filterNot(f => parts.contains(f.name))), None,
+      new ParquetFileFormat, Map.empty)(spark))
+  }
+
+  /** A [[FileIndex]] over leaf directories already listed: scanning it
+    * starts no listing job. Partition filters the planner pushes into
+    * the scan still prune its directories. */
+  private final class LeafIndex(root: Path, val partitionSchema: StructType,
+                                dirs: Seq[PartitionDirectory]) extends FileIndex {
+    def rootPaths: Seq[Path] = Seq(root)
+    def listFiles(partitionFilters: Seq[Expression], dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      partitionFilters.reduceOption(And).fold(dirs) { f =>
+        val keep = Predicate.createInterpreted(f.transform { case a: AttributeReference =>
+          val i = partitionSchema.fieldIndex(a.name)
+          BoundReference(i, partitionSchema(i).dataType, nullable = true)
+        })
+        dirs.filter(d => keep.eval(d.values))
+      }
+    def inputFiles: Array[String] = dirs.flatMap(_.files.map(_.getPath.toString)).toArray
+    def refresh(): Unit = ()
+    def sizeInBytes: Long = dirs.flatMap(_.files.map(_.getLen)).sum
   }
 
   /** One deterministic row per doc_id within a trigger: the latest
@@ -942,7 +992,8 @@ object Pipelines {
   }
 
   /** SolaceReaderStats equivalent: accumulate per-batch input rows,
-    * batch count, and the queue BACKLOG gauge (spool high-water mark
+    * batch count, the last data trigger's phase times (the largest
+    * `addBatch` kept too), and the queue BACKLOG gauge (spool high-water mark
     * minus consumed offset, per queue — the reference's
     * SolaceReaderStats backlog metric) from the listener bus. The
     * engine feeds `latestOffset` from the source's
@@ -957,6 +1008,10 @@ object Pipelines {
     @volatile var maxBatchRows: Long = 0L
     @volatile var backlog: Map[String, Long] = Map.empty
     @volatile var maxBacklog: Long = 0L
+    /** The `durationMs` phases (`latestOffset`, `addBatch`,
+      * `walCommit`, …) of the last trigger that read rows. */
+    @volatile var phases: Map[String, Long] = Map.empty
+    @volatile var maxAddBatchMs: Long = 0L
     @volatile var offsetParseErrors: Long = 0L
     @volatile var lastOffsetParseError: Option[Throwable] = None
 
@@ -968,6 +1023,8 @@ object Pipelines {
         batches += 1
         totalRows += rows
         maxBatchRows = math.max(maxBatchRows, rows)
+        phases = e.progress.durationMs.asScala.map { case (k, v) => k -> v.longValue }.toMap
+        maxAddBatchMs = math.max(maxAddBatchMs, phases.getOrElse("addBatch", 0L))
       }
       e.progress.sources.filter(_.description.startsWith(GraftQueueSource.DescriptionPrefix))
         .foreach { s =>

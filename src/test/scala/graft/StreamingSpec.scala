@@ -545,14 +545,17 @@ class StreamingSpec extends AnyFunSuite {
     val ckpt = tmpDir("graft-ckpt")
     def publish(ids: Range): Unit = Seq("qa", "qb").foreach(qn =>
       publishText(broker, qn, ids, i => s"$qn row $i"))
-    // job starts by streaming query id; the listener bus is asynchronous,
-    // so a marker job in its own group fences the count
+    // job starts (and descriptions) by streaming query id; the listener
+    // bus is asynchronous, so a marker job in its own group fences the count
     val jobsOf = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         Option(e.properties).foreach { p =>
           Seq("sql.streaming.queryId", "spark.jobGroup.id")
             .flatMap(k => Option(p.getProperty(k))).foreach(id => jobsOf.merge(id, 1, _ + _))
+          if (p.getProperty("sql.streaming.queryId") != null)
+            Option(p.getProperty("spark.job.description")).foreach(descriptions.add)
         }
     }
     def run(): org.apache.spark.sql.streaming.StreamingQuery = {
@@ -576,7 +579,10 @@ class StreamingSpec extends AnyFunSuite {
       assert(jobsOf.containsKey(marker), "listener fence never arrived")
       // the (queue, kb)-partitioned pass as measured; more jobs means a
       // trigger reads, shuffles or lists the batch or the table again
-      assert(jobsOf.getOrDefault(q.id.toString, 0) === 7)
+      assert(jobsOf.getOrDefault(q.id.toString, 0) === 5)
+      // the touched leaves are listed on the driver, never in a job
+      assert(!descriptions.asScala.exists(_.contains("Listing leaf files and directories")),
+        s"a trigger ran a listing job: ${descriptions.asScala.mkString("; ")}")
     } finally spark.sparkContext.removeSparkListener(listener)
     assert(Pipelines.readTable(spark, table).count() === 1200)
   }
@@ -1370,6 +1376,116 @@ class StreamingSpec extends AnyFunSuite {
     assert(rowsNone === fresh.count(), "no key of the batch is in the table")
   }
 
+  test("unseenRows equals a left-anti join against the whole table (property)") {
+    import org.scalacheck.{Gen, Prop, Test}
+    import org.scalacheck.rng.Seed
+    import spark.implicits._
+    // queue names that partition-path escaping must round-trip
+    val key = Gen.zip(Gen.oneOf("q a", "q=b", "q%c"), Gen.choose(0L, 149L))
+    val genCase = for {
+      appends <- Gen.choose(1, 3).flatMap(Gen.listOfN(_, Gen.choose(1, 40).flatMap(Gen.listOfN(_, key))))
+      seen <- Gen.someOf(appends.flatten)
+      unseen <- Gen.choose(0, 30).flatMap(Gen.listOfN(_, key))
+    } yield (appends, (seen ++ unseen).toList)
+    def keyed(rows: Seq[(String, Long)], tag: String) = rows.toDF("queue", "message_id")
+      .withColumn("kb", operators.DedupOps.keyBucket(col("queue"), col("message_id")))
+      .withColumn("v", lit(tag))
+    def leaves(df: org.apache.spark.sql.DataFrame, parts: Seq[String]): Set[String] =
+      df.select(parts.map(col): _*).distinct().collect().map(_.toString).toSet
+    // over all cases: a touched leaf absent from the table, an existing
+    // leaf the batch does not touch
+    var absentTouched, untouchedExisting = 0
+    val layouts = Seq( // (partition columns, key columns)
+      Seq("queue", "kb") -> Seq("queue", "kb", "message_id"),
+      Seq("kb") -> Seq("queue", "message_id"))
+    val prop = Prop.forAllNoShrink(genCase) { case (appends, batchKeys) =>
+      val batch = keyed(batchKeys, "new")
+      layouts.forall { case (parts, keys) =>
+        val table = tmpDir("graft-prop") + "/data"
+        appends.zipWithIndex.foreach { case (rows, i) =>
+          keyed(rows, s"a$i").write.mode("append").partitionBy(parts: _*).parquet(table)
+        }
+        val history = spark.read.parquet(table)
+        val (had, touched) = (leaves(history, parts), leaves(batch, parts))
+        absentTouched += (touched -- had).size
+        untouchedExisting += (had -- touched).size
+        def rows(df: org.apache.spark.sql.DataFrame) =
+          df.select("queue", "message_id", "kb", "v").collect().map(_.toString).sorted.toSeq
+        rows(Pipelines.unseenRows(batch, table, keys, parts)) ===
+          rows(batch.join(history, keys, "left_anti"))
+      }
+    }
+    val result = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(8).withInitialSeed(Seed(20240611L)), prop)
+    assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
+    assert(absentTouched > 0 && untouchedExisting > 0,
+      s"generator must cover both leaf cases ($absentTouched, $untouchedExisting)")
+  }
+
+  test("table sink crash at the commit boundary: the replay writes exactly the lost rows") {
+    import org.apache.spark.sql.streaming.StreamingQuery
+    val broker = tmpDir("graft-broker")
+    val table = tmpDir("graft-table")
+    val ckpt = tmpDir("graft-ckpt")
+    val data = new java.io.File(table, "data")
+    def publish(ids: Range): Unit = Seq("qa", "qb").foreach(qn =>
+      publishText(broker, qn, ids, i => s"$qn row $i"))
+    def run(): StreamingQuery = {
+      val recs = Pipelines.mapToTextRecord(Pipelines.readQueues(spark, broker, Seq("qa", "qb")))
+      val q = Pipelines.tableSink(recs, table).option("checkpointLocation", ckpt).start()
+      try q.processAllAvailable() finally q.stop()
+      q
+    }
+    def files(): Set[java.io.File] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk) else Seq(f)
+      walk(data).filter(_.getName.endsWith(".parquet")).toSet
+    }
+    def keysOf(df: org.apache.spark.sql.DataFrame): Set[(String, Long)] =
+      df.select("queue", "message_id").collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    def acked(qn: String): Long = GraftQueueSource.ackedCount(broker, qn)
+    def dataBatches(q: StreamingQuery): Seq[Long] =
+      q.recentProgress.filter(_.numInputRows > 0).map(_.batchId).toSeq
+
+    publish(0 until 200)
+    assert(dataBatches(run()) === Seq(0L), "the setup must be one 2-queue trigger")
+    // the crash: the job commit landed only part of the leaf files and
+    // the commit-log entry never landed (odd-kb leaves of qb are lost)
+    val lostFiles = files().filter { f =>
+      f.getParentFile.getParentFile.getName == "queue=qb" &&
+        f.getParentFile.getName.stripPrefix("kb=").toInt % 2 == 1
+    }
+    assert(lostFiles.nonEmpty)
+    val lost = keysOf(spark.read.option("basePath", data.getPath).parquet(lostFiles.map(_.getPath).toSeq: _*))
+    lostFiles.foreach { f =>
+      assert(f.delete())
+      new java.io.File(f.getParentFile, s".${f.getName}.crc").delete()
+    }
+    Seq("0", ".0.crc").foreach(n => new java.io.File(ckpt, s"commits/$n").delete())
+    assert(!new java.io.File(ckpt, "commits/0").exists())
+    Seq("qa", "qb").foreach(qn => assert(acked(qn) === 0L, s"$qn acked an uncommitted batch"))
+
+    // restart on the same checkpoint: batch 0 re-runs over its logged offsets
+    val kept = files()
+    assert(dataBatches(run()) === Seq(0L))
+    val written = files() -- kept
+    assert(keysOf(spark.read.option("basePath", data.getPath)
+      .parquet(written.map(_.getPath).toSeq: _*)) === lost, "the replay writes exactly the lost rows")
+    val got = Pipelines.readTable(spark, table)
+    assert(got.count() === 400)
+    assert(got.select("queue", "message_id").distinct().count() === 400)
+    // batch 0 is now committed, yet acked only when batch 1 starts —
+    // never past a committed end
+    Seq("qa", "qb").foreach(qn => assert(acked(qn) <= 200L))
+    publish(200 until 250)
+    run()
+    val deadline = System.currentTimeMillis() + 15000
+    while (Seq("qa", "qb").exists(acked(_) < 200L) && System.currentTimeMillis() < deadline)
+      Thread.sleep(100)
+    Seq("qa", "qb").foreach(qn => assert(acked(qn) === 200L, s"$qn ack must stop at batch 0's end"))
+    assert(Pipelines.readTable(spark, table).count() === 500)
+  }
+
   test("withMaxReadTime: AvailableNow drains the snapshot; deadline caps a slow read") {
     val broker = tmpDir("graft-broker")
     publishText(broker, "q1", 0 until 20, i => s"m$i")
@@ -1414,6 +1530,11 @@ class StreamingSpec extends AnyFunSuite {
     assert(listener.backlog.getOrElse("q1", -1L) === 0L,
       s"backlog must drain to zero, saw ${listener.backlog}")
     assert(listener.offsetParseErrors === 0L, s"offset parse failed: ${listener.lastOffsetParseError}")
+    // the last data trigger's phases, and the slowest addBatch so far
+    Seq("latestOffset", "walCommit", "addBatch", "commitOffsets", "triggerExecution")
+      .foreach(k => assert(listener.phases.contains(k), s"phase $k missing: ${listener.phases}"))
+    assert(listener.phases("addBatch") > 0L)
+    assert(listener.maxAddBatchMs >= listener.phases("addBatch"))
   }
 
   test("watermark drops late data in append mode (state stays bounded)") {

@@ -1,0 +1,74 @@
+#!/usr/bin/env python3
+"""Per-trigger view of a perfbench span file.
+
+  python3 tools/spans.py perfbench/.runs/spans-ingest-2.json
+  python3 tools/spans.py FILE --jobs      # also one line per job
+
+A traced perfbench run (`--trace 1`) writes its spans as a JSON list of
+{id, parent, name, start_ms, end_ms, self_ms}. Stream runs hold
+`trigger.<batch>` spans with their phase spans (latestOffset, walCommit,
+addBatch, ...) as children, and `job.<id>` spans (stages as children)
+recorded only while the engine listener was on: the traced run turns it
+on for every other trigger. This prints each trigger's phases and job
+count, then the jobs per traced trigger (the triggers that recorded at
+least one job). A job belongs to the trigger whose time range holds its
+start.
+"""
+import json
+import statistics
+import sys
+
+
+def load(path):
+    with open(path) as f:
+        spans = json.load(f)
+    for s in spans:
+        s["ms"] = s["end_ms"] - s["start_ms"]
+    return spans
+
+
+def children(spans):
+    kids = {}
+    for s in spans:
+        kids.setdefault(s["parent"], []).append(s)
+    return kids
+
+
+def triggers_of(spans, kids):
+    """[(trigger span, [phase spans], [job spans])] in start order."""
+    named = lambda prefix: sorted((s for s in spans if s["name"].startswith(prefix)),
+                                  key=lambda s: s["start_ms"])
+    jobs = named("job.")
+    return [(t, kids.get(t["id"], []), [j for j in jobs if t["start_ms"] <= j["start_ms"] <= t["end_ms"]])
+            for t in named("trigger.")]
+
+
+def main(argv):
+    if not argv or argv[0] in ("-h", "--help"):
+        print(__doc__.strip())
+        return 0 if argv else 2
+    path, show_jobs = argv[0], "--jobs" in argv[1:]
+    spans = load(path)
+    kids = children(spans)
+    trigs = triggers_of(spans, kids)
+    if not trigs:
+        print(f"{path}: no trigger spans (not a stream run)")
+        return 1
+    for t, phases, jobs in trigs:
+        ph = "  ".join(f"{p['name']} {p['ms']:.0f}" for p in phases)
+        print(f"{t['name']:<12} {t['ms']:7.0f} ms  jobs {len(jobs):2d}  {ph}")
+        if show_jobs:
+            for j in jobs:
+                print(f"    {j['name']:<10} {j['ms']:7.0f} ms  stages {len(kids.get(j['id'], []))}")
+    traced = [(phases, jobs) for _, phases, jobs in trigs if jobs]
+    if traced:
+        counts = [len(jobs) for _, jobs in traced]
+        add = [p["ms"] for phases, _ in traced for p in phases if p["name"] == "addBatch"]
+        print(f"traced triggers {len(traced)} of {len(trigs)}: jobs per trigger "
+              f"median {statistics.median(counts):g} (min {min(counts)}, max {max(counts)})"
+              + (f", addBatch median {statistics.median(add):.0f} ms" if add else ""))
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv[1:]))
