@@ -303,7 +303,7 @@ object Pipelines {
           // history past the broadcast threshold plans a sort-merge
           // join, which reshuffles by (queue, kb, message_id)
           byLeaf(unseenRows(fresh, dataPath, Seq("queue", "kb", "message_id"), Seq("queue", "kb")))
-            .write.mode("append").partitionBy("queue", "kb").parquet(dataPath)
+            .write.options(NioLocalFileSystem.options).mode("append").partitionBy("queue", "kb").parquet(dataPath)
         } finally fresh.unpersist()
         ()
       }
@@ -541,7 +541,7 @@ object Pipelines {
             "clean" -> docs.join(hits, Seq("doc_id"), "left_anti")).foreach {
           case (t, rows) =>
             unseenRows(rows, s"$tablePath/$t", Seq("doc_id"), Seq("kb"), leaves)
-              .write.mode("append").partitionBy("kb").parquet(s"$tablePath/$t")
+              .write.options(NioLocalFileSystem.options).mode("append").partitionBy("kb").parquet(s"$tablePath/$t")
         }
       }
   }
@@ -827,7 +827,7 @@ object Pipelines {
             graft.operators.DedupOps.keyBucket(col("doc_a"), col("doc_b")))
           .localCheckpoint(true)
         unseenRows(pairs, dataPath, Seq("doc_a", "doc_b"), Seq("kb"))
-          .write.mode("append").partitionBy("kb").parquet(dataPath)
+          .write.options(NioLocalFileSystem.options).mode("append").partitionBy("kb").parquet(dataPath)
         maintainIndex(spark, indexDir,
           Seq("bands", "sets") ++ Option.when(driftEvery > 0)("driftlog"), graceMs)
       }
@@ -955,7 +955,7 @@ object Pipelines {
             graft.operators.DedupOps.keyBucket(col("doc_a"), col("doc_b")))
           .localCheckpoint(true)
         unseenRows(pairs, dataPath, Seq("doc_a", "doc_b"), Seq("kb"))
-          .write.mode("append").partitionBy("kb").parquet(dataPath)
+          .write.options(NioLocalFileSystem.options).mode("append").partitionBy("kb").parquet(dataPath)
         maintainIndex(spark, indexDir, Seq("bands"), graceMs)
       }
   }
