@@ -4,17 +4,10 @@ import graft.functions.BinRecordColumns.decodeRecord
 import graft.functions.Texts
 import graft.model.{DedupedMsg, GraftBytesRecord, GraftStructRecord, GraftTextRecord}
 import graft.sources.GraftQueueSource
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQueryListener}
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
 
 /** Streaming pipelines over the graft queue source — the Spark
@@ -249,30 +242,35 @@ object Pipelines {
     * queryable partitioned parquet table with exactly-once rows.
     *
     * The reference maps messages to TableRows and leans on the sink
-    * for dedup; here each micro-batch is merged idempotently — an
-    * anti-join on the (queue, message_id) key drops rows already in
-    * the table before appending. That makes the sink safe under BOTH
-    * broker redelivery (at-least-once upstream) and micro-batch replay
-    * after a crash (the same batch re-runs and every row anti-joins
-    * away). The table is partitioned by (queue, kb) — queue for the
-    * consumer-facing layout, kb (the key-hash bucket) so the key
-    * lookup can skip buckets the batch does not touch.
+    * for dedup; here each micro-batch is merged idempotently — rows
+    * whose (queue, message_id) key the table already holds are dropped
+    * before the append. That makes the sink safe under BOTH broker
+    * redelivery (at-least-once upstream) and micro-batch replay after
+    * a crash (the same batch re-runs and every row it already landed
+    * drops out). The table is partitioned by (queue, kb) — queue for
+    * the consumer-facing layout, kb (the key-hash bucket) so a batch
+    * touches a bounded set of leaves.
     *
-    * That prune bounds the key read only while a batch spans fewer
-    * than [[graft.operators.DedupOps.keyBuckets]] buckets per queue;
-    * a batch of a few hundred messages per queue already touches every
-    * bucket, so at ingest rates each trigger scans the whole key
-    * history and that scan grows with the table. Finding the files
-    * costs no Spark job: [[unseenRows]] lists only the touched leaves,
-    * on the driver.
+    * The keys are checked against the table's [[TableKeys]], built once
+    * per sink: it holds each touched leaf's file names and message ids
+    * on the driver and validates them every trigger by listing only
+    * the leaves the batch touches. A query's first trigger reads the
+    * touched history once; later triggers read only files they have
+    * not seen — none, while this query is the table's one writer — so
+    * a trigger costs O(batch), not O(history). A vanished file
+    * (compaction, migration, a manual delete) makes its leaf read
+    * whole again. Driver memory is O(message ids in the touched
+    * leaves); a second concurrent writer to the same table is not
+    * supported.
     *
     * Each trigger is one pass partitioned by (queue, kb) into the
     * session's shuffle-partition count: the batch is hash-partitioned
-    * once, the in-batch dedup reuses that exchange, and the anti-join
-    * and the write run that many tasks wide with each leaf directory
-    * written by exactly one task (one file per touched leaf). */
+    * once, the in-batch dedup reuses that exchange, and the write runs
+    * that many tasks wide with each leaf directory written by exactly
+    * one task (one file per touched leaf), without forking a process
+    * per file ([[NioLocalFileSystem]]). */
   def tableSink(records: Dataset[GraftTextRecord], tablePath: String): DataStreamWriter[GraftTextRecord] = {
-    val dataPath = tablePath + "/data"
+    val held = new TableKeys(tablePath + "/data", Seq("queue", "kb", "message_id"), Seq("queue", "kb"))
     records.writeStream
       .outputMode("append")
       .option("checkpointLocation", tablePath + "/_checkpoint")
@@ -282,29 +280,23 @@ object Pipelines {
         val n = spark.sessionState.conf.numShufflePartitions
         def byLeaf(df: DataFrame) = df.repartition(n, col("queue"), col("kb"))
         // redelivery can land BOTH copies of a message in one trigger —
-        // dedup inside the batch before the anti-join against the
-        // table. kb is a function of (queue, message_id), so deduping
-        // on (queue, kb, message_id) is the same dedup and reuses the
+        // dedup inside the batch before the check against the table.
+        // kb is a function of (queue, message_id), so deduping on
+        // (queue, kb, message_id) is the same dedup and reuses the
         // (queue, kb) exchange. Cached so the SOURCE is read and
-        // shuffled ONCE per trigger: unseenRows' leaf collect (which
-        // fills the cache) and the write below reuse it. A cache, not
-        // a localCheckpoint: a cached plan keeps its (queue, kb)
+        // shuffled ONCE per trigger: the key collect (which fills the
+        // cache) and the write reuse it. A cache, not a
+        // localCheckpoint: a cached plan keeps its (queue, kb)
         // partitioning visible to the planner, a checkpoint under AQE
-        // does not, and then the leaf list and the write would each
-        // shuffle the batch again.
+        // does not, and then the write would shuffle the batch again.
         val fresh = byLeaf(batch.toDF().withColumn("kb",
             graft.operators.DedupOps.keyBucket(col("queue"), col("message_id"))))
           .dropDuplicates("queue", "kb", "message_id")
           .persist()
-        try {
-          // byLeaf again: free while the anti-join keeps fresh's
-          // partitioning (a broadcast join, where the planner drops the
-          // repeated exchange), and what keeps one task per leaf when a
-          // history past the broadcast threshold plans a sort-merge
-          // join, which reshuffles by (queue, kb, message_id)
-          byLeaf(unseenRows(fresh, dataPath, Seq("queue", "kb", "message_id"), Seq("queue", "kb")))
-            .write.options(NioLocalFileSystem.options).mode("append").partitionBy("queue", "kb").parquet(dataPath)
-        } finally fresh.unpersist()
+        // byLeaf again: free over the cache, and what keeps one task
+        // per leaf when a redelivery anti-join reshuffles the batch
+        try held.append(fresh, byLeaf)
+        finally fresh.unpersist()
         ()
       }
   }
@@ -345,140 +337,26 @@ object Pipelines {
     spark.read.parquet(tablePath + "/data")
       .drop("kb") // layout detail, not consumer schema
 
-  // ---- bounded idempotency machinery for the foreachBatch sinks ----
+  // ---- bounded idempotency for the foreachBatch sinks ----
   //
   // The sinks' exactly-once contract must survive CHECKPOINT LOSS
   // (the specs replay the whole spool from a fresh checkpoint), so
-  // seen-keys cannot live in the state store — they live in the
-  // output table itself. To keep that check O(batch buckets) instead
-  // of O(table history), every sink table is Hive-partitioned by
-  // kb = pmod(xxhash64(key…), DedupOps.keyBuckets) and the per-
-  // trigger read is pruned to the buckets the batch actually hashes
-  // into: equal keys always share a bucket, so pruning never misses
-  // a duplicate, and a trigger touching k distinct keys reads at
-  // most min(k, keyBuckets)/keyBuckets of the key history.
-  //
-  // Migration note: a table written before the kb layout is REFUSED
-  // (the fail-fast in hasParquetData's first-file probe, before the
-  // trigger writes anything) rather than degraded-over:
-  // an unpruned check read would be correct, but the same trigger's
-  // append writes kb-partitioned directories into the unbucketed tree
-  // and the NEXT trigger's read of the mixed-depth structure throws —
-  // a wedged stream with one trigger already committed. The one-time
-  // rewrite is [[migrateTableToKb]] for a [[tableSink]] table (run
-  // with the stream stopped).
+  // seen keys cannot live in the state store — they live in the
+  // output table itself. Every sink table is Hive-partitioned by
+  // kb = pmod(xxhash64(key…), DedupOps.keyBuckets) (equal keys share a
+  // bucket), and each table's [[TableKeys]], built once per sink,
+  // holds the keys it has read or written, validated every trigger by
+  // listing only the leaves the batch touches: after a query's first
+  // trigger an append reads only files it has not seen, which at one
+  // writer is none. A table written before the kb layout is REFUSED
+  // (see [[TableKeys.hasParquetData]]); the one-time rewrite is
+  // [[migrateTableToKb]].
 
   /** The ≤ [[graft.operators.DedupOps.keyBuckets]] bucket values
     * present in a batch — a dimension-bounded collect, never
     * O(batch) rows. */
   private[graft] def bucketsOf(batchKeyed: DataFrame): Seq[Int] =
     batchKeyed.select("kb").distinct().collect().map(_.getInt(0)).toSeq
-
-  /** Does the kb-partitioned sink table at `p` hold any parquet DATA?
-    * A missing dir, or one with only markers (an all-empty first
-    * append leaves `_SUCCESS` and no footers), is an absent table. The
-    * probe stops at the first data file, which must sit in a `kb=`
-    * directory: anything else is a pre-kb layout and fails fast (see
-    * the migration note above) — never read as absent, which would
-    * append duplicates forever. */
-  private def hasParquetData(fs: FileSystem, p: Path): Boolean =
-    fs.exists(p) && {
-      val it = fs.listFiles(p, true)
-      var first: Option[Path] = None
-      while (first.isEmpty && it.hasNext)
-        first = Some(it.next().getPath).filter(_.getName.endsWith(".parquet"))
-      first.exists { f =>
-        if (!f.getParent.getName.startsWith("kb="))
-          throw new IllegalStateException(
-            s"$p holds a pre-kb (unbucketed) sink table; appending would mix " +
-              "partition depths and wedge the stream on its next trigger. With " +
-              "the stream stopped, run Pipelines.migrateTableToKb(spark, tablePath) " +
-              "once for a tableSink table, or rewrite any other sink table into " +
-              "the kb layout once, then resume.")
-        true
-      }
-    }
-
-  /** The idempotent append every sink table shares: the rows of
-    * `batch` whose `keys` are not yet in the kb-partitioned table at
-    * `path`. One `distinct().collect()` lists the (dimension-bounded)
-    * `parts` leaves the batch touches; the existing keys are read from
-    * exactly those leaves ([[touchedKeys]]: listed on the driver, no
-    * listing job, no schema inference) and anti-joined on `keys`. The
-    * first trigger (no table yet) anti-joins against an empty frame.
-    * The absent-table case is an explicit EXISTENCE check, not a caught
-    * AnalysisException — a catch-all would also swallow a schema
-    * problem and silently disable the idempotency check. */
-  private[graft] def unseenRows(batch: DataFrame, path: String,
-                                keys: Seq[String], parts: Seq[String]): DataFrame =
-    unseenRows(batch, path, keys, parts, leavesOf(batch, parts))
-
-  /** The `parts` leaves a batch touches: one dimension-bounded collect. */
-  private def leavesOf(batch: DataFrame, parts: Seq[String]): Seq[Row] =
-    batch.select(parts.map(col): _*).distinct().collect().toSeq
-
-  /** [[unseenRows]] over leaves the caller collected once — for splits
-    * of one materialized parent, so the leaf collect never recomputes
-    * a split. `leaves` must cover every leaf of `batch`. */
-  private def unseenRows(batch: DataFrame, path: String, keys: Seq[String],
-                         parts: Seq[String], leaves: Seq[Row]): DataFrame = {
-    val spark = batch.sparkSession
-    val keySchema = StructType(batch.select((keys ++ parts).distinct.map(col): _*)
-      .schema.map(_.copy(nullable = true)))
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val existing =
-      if (!hasParquetData(fs, p))
-        spark.createDataFrame(java.util.Collections.emptyList[Row](), keySchema)
-      else touchedKeys(spark, fs, p, keySchema, parts, leaves)
-    batch.join(existing, keys, "left_anti")
-  }
-
-  /** The `keySchema` columns of the `leaves` of the table at `p`. Each
-    * leaf directory is named with Spark's own partition-path escaping
-    * and listed on the driver (a leaf that does not exist is empty;
-    * `_`/`.`-prefixed files are skipped, as Spark's listing skips
-    * them), and the scan gets those files through a fixed
-    * [[LeafIndex]] — a `spark.read` of the paths would list them again
-    * in a Spark job once they pass the parallel-discovery threshold. */
-  private def touchedKeys(spark: SparkSession, fs: FileSystem, p: Path, keySchema: StructType,
-                          parts: Seq[String], leaves: Seq[Row]): DataFrame = {
-    val partSchema = StructType(parts.map(keySchema(_)))
-    val toInternal = CatalystTypeConverters.createToCatalystConverter(partSchema)
-    val dirs = leaves.map { leaf =>
-      val dir = ExternalCatalogUtils.generatePartitionPath(
-        parts.indices.map(i => parts(i) -> Option(leaf.get(i)).map(_.toString).orNull).toMap, parts, p)
-      val files =
-        if (!fs.exists(dir)) Array.empty[FileStatus]
-        else fs.listStatus(dir).filter { f =>
-          val n = f.getPath.getName
-          f.isFile && !n.startsWith("_") && !n.startsWith(".")
-        }
-      PartitionDirectory(toInternal(leaf).asInstanceOf[InternalRow], files)
-    }
-    spark.baseRelationToDataFrame(HadoopFsRelation(new LeafIndex(p, partSchema, dirs), partSchema,
-      StructType(keySchema.filterNot(f => parts.contains(f.name))), None,
-      new ParquetFileFormat, Map.empty)(spark))
-  }
-
-  /** A [[FileIndex]] over leaf directories already listed: scanning it
-    * starts no listing job. Partition filters the planner pushes into
-    * the scan still prune its directories. */
-  private final class LeafIndex(root: Path, val partitionSchema: StructType,
-                                dirs: Seq[PartitionDirectory]) extends FileIndex {
-    def rootPaths: Seq[Path] = Seq(root)
-    def listFiles(partitionFilters: Seq[Expression], dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
-      partitionFilters.reduceOption(And).fold(dirs) { f =>
-        val keep = Predicate.createInterpreted(f.transform { case a: AttributeReference =>
-          val i = partitionSchema.fieldIndex(a.name)
-          BoundReference(i, partitionSchema(i).dataType, nullable = true)
-        })
-        dirs.filter(d => keep.eval(d.values))
-      }
-    def inputFiles: Array[String] = dirs.flatMap(_.files.map(_.getPath.toString)).toArray
-    def refresh(): Unit = ()
-    def sizeInBytes: Long = dirs.flatMap(_.files.map(_.getLen)).sum
-  }
 
   /** One deterministic row per doc_id within a trigger: the latest
     * sender timestamp wins, ties broken by sequence number and then
@@ -508,15 +386,18 @@ object Pipelines {
     *
     * Idempotent under redelivery and replay like [[tableSink]], with
     * a BOUNDED key check: both tables are [[graft.operators.DedupOps
-    * .keyBucket]]-partitioned and each trigger's anti-join reads only
-    * the buckets its docs hash into — per-trigger read work is
-    * bounded by the batch's bucket span, not by stream history (the
-    * tables themselves stay append-only audit logs). The split is
+    * .keyBucket]]-partitioned and each has its own [[TableKeys]], so
+    * after a query's first trigger a trigger reads only table files it
+    * has not seen — per-trigger read work is bounded by the batch, not
+    * by stream history (the tables themselves stay append-only audit
+    * logs). The split is
     * per-table: if an EDITED redelivery of an already-clean doc_id
     * later quarantines, both tables hold the id — consumers read the
     * corpus via [[readDecontaminated]], where quarantine wins. */
   def decontaminationSink(messages: DataFrame, benchGramsDir: String,
                           tablePath: String): DataStreamWriter[Row] = {
+    val Seq(quarantine, clean) = Seq("quarantine", "clean")
+      .map(t => new TableKeys(s"$tablePath/$t", Seq("doc_id"), Seq("kb")))
     messages.writeStream
       .outputMode("append")
       .option("checkpointLocation", tablePath + "/_checkpoint")
@@ -524,10 +405,9 @@ object Pipelines {
         val spark = batch.sparkSession
         import graft.functions.Texts.{kGrams, tokens}
         val bench = spark.read.parquet(benchGramsDir)
-        // referenced four times below (leaves, hits, both splits) —
+        // referenced three times below (hits, both splits) —
         // localCheckpoint so the version-resolve shuffle runs once
         val docs = latestDocVersion(batch).localCheckpoint(true)
-        val leaves = leavesOf(docs, Seq("kb"))
         // referenced by BOTH writes below — localCheckpoint so the gram
         // explode + bench join runs once per trigger, not per sink
         val hits = docs
@@ -537,11 +417,13 @@ object Pipelines {
           .groupBy(col("doc_id"))
           .agg(count_distinct(col("gram")).as("n_hits"))
           .localCheckpoint(true)
-        Seq("quarantine" -> docs.join(hits, Seq("doc_id")),
-            "clean" -> docs.join(hits, Seq("doc_id"), "left_anti")).foreach {
-          case (t, rows) =>
-            unseenRows(rows, s"$tablePath/$t", Seq("doc_id"), Seq("kb"), leaves)
-              .write.options(NioLocalFileSystem.options).mode("append").partitionBy("kb").parquet(s"$tablePath/$t")
+        // each split is cached: its key collect and its write then run
+        // its join once
+        Seq(quarantine -> docs.join(hits, Seq("doc_id")),
+            clean -> docs.join(hits, Seq("doc_id"), "left_anti")).foreach {
+          case (held, split) =>
+            val rows = split.persist()
+            try held.append(rows) finally rows.unpersist()
         }
       }
   }
@@ -738,9 +620,10 @@ object Pipelines {
     * Both per-trigger key checks are BOUNDED: the already-indexed
     * check prunes the index's kb-partitioned `ids` table to the
     * batch's buckets ([[graft.operators.DedupOps.indexedIds]]), and
-    * the pair table is kb-partitioned on (doc_a, doc_b) so its
-    * anti-join reads only the buckets the batch's pairs hash into —
-    * neither read grows with stream history.
+    * the pair table is kb-partitioned on (doc_a, doc_b) with its own
+    * [[TableKeys]], which after a query's first trigger reads only
+    * pair files it has not seen — neither read grows with stream
+    * history.
     *
     * Self-maintaining file layout:
     * row-level work per trigger is batch-bounded by the pruned checks
@@ -779,7 +662,7 @@ object Pipelines {
                            driftEvery: Int = 0,
                            graceMs: Long = graft.operators.Snapshot.DefaultGraceMs)
       : DataStreamWriter[Row] = {
-    val dataPath = tablePath + "/data"
+    val pairKeys = new TableKeys(tablePath + "/data", Seq("doc_a", "doc_b"), Seq("kb"))
     // running membership total for the drift report's size signal —
     // the vectorIndexSink idiom (seed once, advance per fold)
     var memberCount = -1L
@@ -819,15 +702,14 @@ object Pipelines {
           graft.operators.DedupOps.incrementalIndexUpdate(spark, newDocs, indexDir)
           if (memberCount >= 0) memberCount += newDocs.count()
         }
-        // pairs feed the bucket list AND the anti-joined write —
+        // pairs feed the key collect AND the write —
         // localCheckpoint so the probe's verify join runs once
         val pairs = graft.operators.DedupOps
           .probeIndex(spark, docs.select("doc_id", "text"), indexDir)
           .withColumn("kb",
             graft.operators.DedupOps.keyBucket(col("doc_a"), col("doc_b")))
           .localCheckpoint(true)
-        unseenRows(pairs, dataPath, Seq("doc_a", "doc_b"), Seq("kb"))
-          .write.options(NioLocalFileSystem.options).mode("append").partitionBy("kb").parquet(dataPath)
+        pairKeys.append(pairs)
         maintainIndex(spark, indexDir,
           Seq("bands", "sets") ++ Option.when(driftEvery > 0)("driftlog"), graceMs)
       }
@@ -933,7 +815,7 @@ object Pipelines {
                            probe: (SparkSession, DataFrame, String) => DataFrame,
                            indexDir: String, tablePath: String,
                            graceMs: Long): DataStreamWriter[Row] = {
-    val dataPath = tablePath + "/data"
+    val pairKeys = new TableKeys(tablePath + "/data", Seq("doc_a", "doc_b"), Seq("kb"))
     messages.writeStream
       .outputMode("append")
       .option("checkpointLocation", tablePath + "/_checkpoint")
@@ -954,8 +836,7 @@ object Pipelines {
           .withColumn("kb",
             graft.operators.DedupOps.keyBucket(col("doc_a"), col("doc_b")))
           .localCheckpoint(true)
-        unseenRows(pairs, dataPath, Seq("doc_a", "doc_b"), Seq("kb"))
-          .write.options(NioLocalFileSystem.options).mode("append").partitionBy("kb").parquet(dataPath)
+        pairKeys.append(pairs)
         maintainIndex(spark, indexDir, Seq("bands"), graceMs)
       }
   }

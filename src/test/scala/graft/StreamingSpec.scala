@@ -545,32 +545,51 @@ class StreamingSpec extends AnyFunSuite {
     val ckpt = tmpDir("graft-ckpt")
     def publish(ids: Range): Unit = Seq("qa", "qb").foreach(qn =>
       publishText(broker, qn, ids, i => s"$qn row $i"))
-    // job starts (and descriptions) by streaming query id; the listener
+    // per (streaming query id, batch id): job starts, and whether a job
+    // scans files (a FileScanRDD — the source is not one); the listener
     // bus is asynchronous, so a marker job in its own group fences the count
     val jobsOf = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val scansOf = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
     val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         Option(e.properties).foreach { p =>
-          Seq("sql.streaming.queryId", "spark.jobGroup.id")
-            .flatMap(k => Option(p.getProperty(k))).foreach(id => jobsOf.merge(id, 1, _ + _))
-          if (p.getProperty("sql.streaming.queryId") != null)
+          Option(p.getProperty("spark.jobGroup.id")).foreach(jobsOf.merge(_, 1, _ + _))
+          Option(p.getProperty("sql.streaming.queryId")).foreach { q =>
+            val trigger = s"$q/${p.getProperty("streaming.sql.batchId")}"
+            jobsOf.merge(trigger, 1, _ + _)
+            if (e.stageInfos.exists(_.rddInfos.exists(_.name == "FileScanRDD")))
+              scansOf.merge(trigger, 1, _ + _)
             Option(p.getProperty("spark.job.description")).foreach(descriptions.add)
+          }
         }
     }
-    def run(): org.apache.spark.sql.streaming.StreamingQuery = {
+    def query(): org.apache.spark.sql.streaming.StreamingQuery = {
       val recs = Pipelines.mapToTextRecord(Pipelines.readQueues(spark, broker, Seq("qa", "qb")))
-      val q = Pipelines.tableSink(recs, table).option("checkpointLocation", ckpt).start()
-      try q.processAllAvailable() finally q.stop()
-      q
+      Pipelines.tableSink(recs, table).option("checkpointLocation", ckpt).start()
     }
+    // the (queue, kb) leaves a range of ids touches on both queues
+    def leavesOf(ids: Range): Set[(String, Int)] = Seq("qa", "qb").flatMap(qn =>
+      spark.range(ids.start, ids.end)
+        .select(operators.DedupOps.keyBucket(lit(qn), col("id"))).distinct()
+        .collect().map(r => qn -> r.getInt(0))).toSet
     publish(0 until 300)
-    run()
-    publish(300 until 600)
+    val first = query()
+    try first.processAllAvailable() finally first.stop()
+    // the second trigger touches only leaves the first one held, so it
+    // has nothing unseen to read
+    assert(leavesOf(1000 until 1100).subsetOf(leavesOf(300 until 1000)))
+    publish(300 until 1000)
     spark.sparkContext.addSparkListener(listener)
     try {
-      val q = run()
-      assert(q.recentProgress.count(_.numInputRows > 0) === 1)
+      val q = query()
+      try {
+        q.processAllAvailable()
+        publish(1000 until 1100)
+        q.processAllAvailable()
+      } finally q.stop()
+      val triggers = q.recentProgress.filter(_.numInputRows > 0).map(p => s"${q.id}/${p.batchId}")
+      assert(triggers.length === 2)
       val marker = s"graft-job-fence-${java.util.UUID.randomUUID()}"
       spark.sparkContext.setJobGroup(marker, "listener fence")
       try spark.range(1).collect() finally spark.sparkContext.clearJobGroup()
@@ -578,13 +597,19 @@ class StreamingSpec extends AnyFunSuite {
       while (!jobsOf.containsKey(marker) && System.currentTimeMillis() < deadline) Thread.sleep(50)
       assert(jobsOf.containsKey(marker), "listener fence never arrived")
       // the (queue, kb)-partitioned pass as measured; more jobs means a
-      // trigger reads, shuffles or lists the batch or the table again
-      assert(jobsOf.getOrDefault(q.id.toString, 0) === 5)
+      // trigger reads, shuffles or lists the batch or the table again.
+      // A new query's first trigger reads the touched history once ...
+      assert(jobsOf.getOrDefault(triggers(0), 0) === 5)
+      assert(scansOf.getOrDefault(triggers(0), 0) === 1)
+      // ... and a later trigger of the same query reads no file it has
+      // already seen (here: no file at all), one job fewer
+      assert(jobsOf.getOrDefault(triggers(1), 0) === 4)
+      assert(scansOf.getOrDefault(triggers(1), 0) === 0, "a later trigger re-read the table")
       // the touched leaves are listed on the driver, never in a job
       assert(!descriptions.asScala.exists(_.contains("Listing leaf files and directories")),
         s"a trigger ran a listing job: ${descriptions.asScala.mkString("; ")}")
     } finally spark.sparkContext.removeSparkListener(listener)
-    assert(Pipelines.readTable(spark, table).count() === 1200)
+    assert(Pipelines.readTable(spark, table).count() === 2200)
   }
 
   test("streaming vector-index ingestion: appended lists equal the builder's, replay is a no-op") {
@@ -1323,8 +1348,6 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("sink idempotency key check reads only the batch's buckets, not table history") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     val table = tmpDir("graft-kbtable") + "/data"
     def keyed(from: Long, until: Long) = spark.range(from, until)
       .select(col("id").as("doc_id"),
@@ -1332,29 +1355,25 @@ class StreamingSpec extends AnyFunSuite {
     // history: 50 keys land in ~35 of the 64 kb partitions (xxhash64 is
     // seeded — the layout is deterministic run to run)
     keyed(0, 50).write.mode("append").partitionBy("kb").parquet(table)
-    def filesUnder(dir: java.io.File): Int =
-      Option(dir.listFiles()).toSeq.flatten.map { f =>
+    def filesUnder(dir: java.io.File): Seq[String] =
+      Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
         if (f.isDirectory) filesUnder(f)
-        else if (f.getName.endsWith(".parquet")) 1 else 0
-      }.sum
+        else if (f.getName.endsWith(".parquet")) Seq(f.getName) else Nil
+      }
     val root = new java.io.File(table)
-    val totalFiles = filesUnder(root)
+    val totalFiles = filesUnder(root).size
     val occupied = Option(root.listFiles()).toSeq.flatten
       .filter(f => f.isDirectory && f.getName.startsWith("kb="))
       .map(_.getName.stripPrefix("kb=").toInt).toSet
     assert(occupied.nonEmpty && occupied.size < operators.DedupOps.keyBuckets,
       "seed must leave some buckets empty for the zero-read case")
 
-    // (files the key read scanned, rows the anti-join let through)
-    def scannedFiles(batch: org.apache.spark.sql.DataFrame): (Long, Long) = {
-      val df = Pipelines.unseenRows(batch, table, Seq("doc_id"), Seq("kb"))
-      // collect() executes THIS dataset's plan (count() would build a
-      // fresh QueryExecution and leave these metrics untouched)
-      val n = df.collect().length.toLong
-      val files = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
-        case s: FileSourceScanExec => s.metrics("numFiles").value
-      }.sum
-      (files, n)
+    val held = new streaming.TableKeys(table, Seq("doc_id"), Seq("kb"))
+    // (names of the files the key check read, rows the append let through)
+    def appended(batch: org.apache.spark.sql.DataFrame): (Seq[String], Long) = {
+      val before = spark.read.parquet(table).count()
+      val read = held.append(batch).map(_.getName)
+      (read, spark.read.parquet(table).count() - before)
     }
     // a batch hashing into ONE occupied bucket reads that bucket's
     // files only — never the whole key history — and finds its keys
@@ -1362,57 +1381,120 @@ class StreamingSpec extends AnyFunSuite {
     val bucketFiles = filesUnder(new java.io.File(s"$table/kb=$b"))
     val inB = keyed(0, 50).filter(col("kb") === b)
     assert(inB.count() > 0)
-    val (readOne, rowsOne) = scannedFiles(inB)
-    assert(readOne === bucketFiles, "scan must read exactly the batch's bucket")
-    assert(readOne < totalFiles, "pruning must skip the other buckets")
+    val (readOne, rowsOne) = appended(inB)
+    assert(readOne.sorted === bucketFiles.sorted, "scan must read exactly the batch's bucket")
+    assert(readOne.size < totalFiles, "pruning must skip the other buckets")
     assert(rowsOne === 0, "every key of the batch is already in the table")
     // a batch hashing only into EMPTY buckets reads zero files no
     // matter how much history the table holds
     val empty = (0 until operators.DedupOps.keyBuckets).filterNot(occupied)
     val fresh = keyed(1000, 2000).filter(col("kb").isin(empty.take(3): _*))
-    assert(fresh.count() > 0)
-    val (readNone, rowsNone) = scannedFiles(fresh)
-    assert(readNone === 0, "untouched buckets must cost zero reads")
-    assert(rowsNone === fresh.count(), "no key of the batch is in the table")
+    val n = fresh.count()
+    assert(n > 0)
+    val (readNone, rowsNone) = appended(fresh)
+    assert(readNone.isEmpty, "untouched buckets must cost zero reads")
+    assert(rowsNone === n, "no key of the batch is in the table")
+    // a second append over the same leaves reads no file it already
+    // holds — neither the history it read nor the files it wrote — and
+    // still finds every key
+    val (again, rowsAgain) = appended(inB.union(fresh))
+    assert(again.isEmpty, s"re-read held files: $again")
+    assert(rowsAgain === 0)
   }
 
-  test("unseenRows equals a left-anti join against the whole table (property)") {
+  test("held table keys equal a left-anti join against the whole table after every append (property)") {
     import org.scalacheck.{Gen, Prop, Test}
     import org.scalacheck.rng.Seed
     import spark.implicits._
     // queue names that partition-path escaping must round-trip
     val key = Gen.zip(Gen.oneOf("q a", "q=b", "q%c"), Gen.choose(0L, 149L))
-    val genCase = for {
-      appends <- Gen.choose(1, 3).flatMap(Gen.listOfN(_, Gen.choose(1, 40).flatMap(Gen.listOfN(_, key))))
-      seen <- Gen.someOf(appends.flatten)
+    val edits = Seq("none", "delete", "foreign", "rewrite")
+    // an append: the edit made before it (with a pick among candidates),
+    // picks among the keys the table has seen, and keys drawn fresh
+    val genStep = for {
+      edit <- Gen.oneOf(edits)
+      pick <- Gen.choose(0, 1000)
+      seen <- Gen.choose(0, 20).flatMap(Gen.listOfN(_, Gen.choose(0, 1000)))
       unseen <- Gen.choose(0, 30).flatMap(Gen.listOfN(_, key))
-    } yield (appends, (seen ++ unseen).toList)
+    } yield (edit, pick, seen, unseen)
+    val genCase = for {
+      history <- Gen.choose(1, 3).flatMap(Gen.listOfN(_, Gen.choose(1, 40).flatMap(Gen.listOfN(_, key))))
+      steps <- Gen.choose(2, 4).flatMap(Gen.listOfN(_, genStep))
+    } yield (history, steps)
     def keyed(rows: Seq[(String, Long)], tag: String) = rows.toDF("queue", "message_id")
       .withColumn("kb", operators.DedupOps.keyBucket(col("queue"), col("message_id")))
       .withColumn("v", lit(tag))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("queue", "message_id", "kb", "v").collect().map(_.toString).sorted.toSeq
     def leaves(df: org.apache.spark.sql.DataFrame, parts: Seq[String]): Set[String] =
       df.select(parts.map(col): _*).distinct().collect().map(_.toString).toSet
+    def dataFiles(dir: java.io.File): Seq[java.io.File] =
+      Option(dir.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap { f =>
+        if (f.isDirectory) dataFiles(f) else Seq(f).filter(_.getName.endsWith(".parquet"))
+      }
+    def delete(f: java.io.File): Unit = {
+      assert(f.delete())
+      new java.io.File(f.getParentFile, s".${f.getName}.crc").delete()
+    }
     // over all cases: a touched leaf absent from the table, an existing
-    // leaf the batch does not touch
+    // leaf the batch does not touch, and each outside edit made
     var absentTouched, untouchedExisting = 0
+    val made = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
     val layouts = Seq( // (partition columns, key columns)
       Seq("queue", "kb") -> Seq("queue", "kb", "message_id"),
       Seq("kb") -> Seq("queue", "message_id"))
-    val prop = Prop.forAllNoShrink(genCase) { case (appends, batchKeys) =>
-      val batch = keyed(batchKeys, "new")
+    val prop = Prop.forAllNoShrink(genCase) { case (history, steps) =>
       layouts.forall { case (parts, keys) =>
         val table = tmpDir("graft-prop") + "/data"
-        appends.zipWithIndex.foreach { case (rows, i) =>
-          keyed(rows, s"a$i").write.mode("append").partitionBy(parts: _*).parquet(table)
+        val root = new java.io.File(table)
+        // a history that holds every key once
+        history.scanLeft(Set.empty[(String, Long)])(_ ++ _).zip(history).zipWithIndex.foreach {
+          case ((earlier, rs), i) => keyed(rs.distinct.filterNot(earlier), s"a$i")
+            .write.mode("append").partitionBy(parts: _*).parquet(table)
         }
-        val history = spark.read.parquet(table)
-        val (had, touched) = (leaves(history, parts), leaves(batch, parts))
-        absentTouched += (touched -- had).size
-        untouchedExisting += (had -- touched).size
-        def rows(df: org.apache.spark.sql.DataFrame) =
-          df.select("queue", "message_id", "kb", "v").collect().map(_.toString).sorted.toSeq
-        rows(Pipelines.unseenRows(batch, table, keys, parts)) ===
-          rows(batch.join(history, keys, "left_anti"))
+        var pool = history.flatten.toIndexedSeq
+        // one instance across every append, as a sink holds it
+        val held = new streaming.TableKeys(table, keys, parts)
+        steps.zipWithIndex.forall { case ((edit, pick, seen, unseen), i) =>
+          val batchKeys = (seen.map(j => pool(j % pool.size)) ++ unseen).distinct
+          val batch = keyed(batchKeys, s"b$i")
+          // outside edits: a writer or a maintainer other than the sink
+          val files = dataFiles(root)
+          edit match {
+            case "delete" if files.nonEmpty =>
+              delete(files(pick % files.size)); made(edit) += 1
+            case "foreign" =>
+              // keys of this batch the table lacks, landed by another writer
+              val lacking = batch.join(spark.read.parquet(table), keys, "left_anti")
+                .select("queue", "message_id").as[(String, Long)].collect().toSeq
+              if (lacking.nonEmpty) {
+                keyed(lacking.take(1 + pick % lacking.size), "foreign")
+                  .write.mode("append").partitionBy(parts: _*).parquet(table)
+                made(edit) += 1
+              }
+            case "rewrite" if files.nonEmpty =>
+              // a compaction-like rewrite of one leaf under new file
+              // names, losing one row when it has more than one
+              val leaf = files(pick % files.size).getParentFile
+              val kept = spark.read.parquet(leaf.getPath).collect().toSeq
+              val schema = spark.read.parquet(leaf.getPath).schema
+              dataFiles(leaf).foreach(delete)
+              spark.createDataFrame(kept.drop(if (kept.size > 1) 1 else 0).asJava, schema)
+                .write.mode("append").parquet(leaf.getPath)
+              made(edit) += 1
+            case _ =>
+          }
+          val before = spark.read.parquet(table)
+          val (had, touched) = (leaves(before, parts), leaves(batch, parts))
+          absentTouched += (touched -- had).size
+          untouchedExisting += (had -- touched).size
+          val expected = (rows(before) ++ rows(batch.join(before, keys, "left_anti"))).sorted
+          held.append(batch)
+          pool = pool ++ batchKeys
+          val after = spark.read.parquet(table)
+          rows(after) === expected &&
+            after.select("queue", "message_id").distinct().count() === after.count()
+        }
       }
     }
     val result = Test.check(
@@ -1420,6 +1502,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
     assert(absentTouched > 0 && untouchedExisting > 0,
       s"generator must cover both leaf cases ($absentTouched, $untouchedExisting)")
+    assert(edits.tail.forall(made(_) > 0), s"generator must make every outside edit: $made")
   }
 
   test("table sink crash at the commit boundary: the replay writes exactly the lost rows") {

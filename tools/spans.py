@@ -12,7 +12,9 @@ recorded only while the engine listener was on: the traced run turns it
 on for every other trigger. This prints each trigger's phases and job
 count, then the jobs per traced trigger (the triggers that recorded at
 least one job). A job belongs to the trigger whose time range holds its
-start.
+start. For traced triggers it also prints the addBatch time outside
+every job (`driver`): the sink's driver-side work, such as collects
+turned into sets, listings and planning.
 """
 import json
 import statistics
@@ -43,6 +45,20 @@ def triggers_of(spans, kids):
             for t in named("trigger.")]
 
 
+def driver_ms(phases, jobs):
+    """addBatch time not covered by any job (None without addBatch)."""
+    add = next((p for p in phases if p["name"] == "addBatch"), None)
+    if add is None:
+        return None
+    covered, end = 0.0, add["start_ms"]
+    for j in sorted(jobs, key=lambda j: j["start_ms"]):
+        lo, hi = max(j["start_ms"], end), min(j["end_ms"], add["end_ms"])
+        if hi > lo:
+            covered += hi - lo
+            end = hi
+    return add["ms"] - covered
+
+
 def main(argv):
     if not argv or argv[0] in ("-h", "--help"):
         print(__doc__.strip())
@@ -56,6 +72,8 @@ def main(argv):
         return 1
     for t, phases, jobs in trigs:
         ph = "  ".join(f"{p['name']} {p['ms']:.0f}" for p in phases)
+        drv = driver_ms(phases, jobs) if jobs else None
+        ph += f"  driver {drv:.0f}" if drv is not None else ""
         print(f"{t['name']:<12} {t['ms']:7.0f} ms  jobs {len(jobs):2d}  {ph}")
         if show_jobs:
             for j in jobs:
@@ -64,9 +82,11 @@ def main(argv):
     if traced:
         counts = [len(jobs) for _, jobs in traced]
         add = [p["ms"] for phases, _ in traced for p in phases if p["name"] == "addBatch"]
+        drv = [d for d in (driver_ms(phases, jobs) for phases, jobs in traced) if d is not None]
         print(f"traced triggers {len(traced)} of {len(trigs)}: jobs per trigger "
               f"median {statistics.median(counts):g} (min {min(counts)}, max {max(counts)})"
-              + (f", addBatch median {statistics.median(add):.0f} ms" if add else ""))
+              + (f", addBatch median {statistics.median(add):.0f} ms" if add else "")
+              + (f", driver median {statistics.median(drv):.0f} ms" if drv else ""))
     return 0
 
 
