@@ -278,24 +278,21 @@ object Pipelines {
         val spark = batch.sparkSession
         // set explicitly so AQE cannot coalesce the pass to one task
         val n = spark.sessionState.conf.numShufflePartitions
-        def byLeaf(df: DataFrame) = df.repartition(n, col("queue"), col("kb"))
         // redelivery can land BOTH copies of a message in one trigger —
         // dedup inside the batch before the check against the table.
         // kb is a function of (queue, message_id), so deduping on
         // (queue, kb, message_id) is the same dedup and reuses the
         // (queue, kb) exchange. Cached so the SOURCE is read and
-        // shuffled ONCE per trigger: the key collect (which fills the
-        // cache) and the write reuse it. A cache, not a
-        // localCheckpoint: a cached plan keeps its (queue, kb)
-        // partitioning visible to the planner, a checkpoint under AQE
-        // does not, and then the write would shuffle the batch again.
-        val fresh = byLeaf(batch.toDF().withColumn("kb",
-            graft.operators.DedupOps.keyBucket(col("queue"), col("message_id"))))
+        // shuffled ONCE per trigger: the key collect fills the cache (a
+        // cache costs no job of its own, a localCheckpoint would) and
+        // the write reuses it in its (queue, kb) partitioning, so each
+        // leaf is written by one task.
+        val fresh = batch.toDF().withColumn("kb",
+            graft.operators.DedupOps.keyBucket(col("queue"), col("message_id")))
+          .repartition(n, col("queue"), col("kb"))
           .dropDuplicates("queue", "kb", "message_id")
           .persist()
-        // byLeaf again: free over the cache, and what keeps one task
-        // per leaf when a redelivery anti-join reshuffles the batch
-        try held.append(fresh, byLeaf)
+        try held.append(fresh)
         finally fresh.unpersist()
         ()
       }

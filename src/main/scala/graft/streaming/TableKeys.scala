@@ -66,11 +66,12 @@ private[graft] final class TableKeys(path: String, keys: Seq[String], parts: Seq
     if (own.size == 1) r.get(parts.size) else Row.fromSeq(own.indices.map(i => r.get(parts.size + i)))
 
   /** Appends the rows of `batch` whose keys the table does not hold,
-    * partitioned by `parts` and shaped by `layout` (e.g. a
-    * repartition). `batch` is read twice — its keys, then the write —
-    * so pass a persisted or checkpointed frame. Returns the history
-    * files this append read keys from. */
-  def append(batch: DataFrame, layout: DataFrame => DataFrame = identity): Seq[Path] = synchronized {
+    * partitioned by `parts`, in `batch`'s own partitioning (the
+    * anti-join, when there is one, broadcasts the present keys).
+    * `batch` is read twice — its keys, then the write — so pass a
+    * persisted or checkpointed frame. Returns the history files this
+    * append read keys from. */
+  def append(batch: DataFrame): Seq[Path] = synchronized {
     val spark = batch.sparkSession
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val hasData = TableKeys.hasParquetData(fs, root)
@@ -109,7 +110,7 @@ private[graft] final class TableKeys(path: String, keys: Seq[String], parts: Seq
     val unseen = split.collect { case (leaf, (_, out)) if out.nonEmpty => leaf -> out }
     val rows = if (present.isEmpty) batch else batch.join(
       broadcast(spark.createDataFrame(present.asJava, schema)), keys, "left_anti")
-    layout(rows).write.options(NioLocalFileSystem.options)
+    rows.write.options(NioLocalFileSystem.options)
       .mode("append").partitionBy(parts: _*).parquet(path)
 
     unseen.foreach { case (leaf, written) =>

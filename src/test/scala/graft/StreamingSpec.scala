@@ -1458,8 +1458,16 @@ class StreamingSpec extends AnyFunSuite {
         steps.zipWithIndex.forall { case ((edit, pick, seen, unseen), i) =>
           val batchKeys = (seen.map(j => pool(j % pool.size)) ++ unseen).distinct
           val batch = keyed(batchKeys, s"b$i")
-          // outside edits: a writer or a maintainer other than the sink
-          val files = dataFiles(root)
+          // outside edits: a writer or a maintainer other than the sink.
+          // Delete and rewrite target a file holding keys of this batch
+          // when there is one, so a stale held key would drop a row
+          val files = {
+            val holding = spark.read.parquet(table).withColumn("file", input_file_name())
+              .join(batch.select(keys.map(col): _*), keys, "left_semi")
+              .select("file").distinct().collect().map(r => new java.io.File(new java.net.URI(r.getString(0))))
+              .sortBy(_.getPath).toSeq
+            if (holding.nonEmpty) holding else dataFiles(root)
+          }
           edit match {
             case "delete" if files.nonEmpty =>
               delete(files(pick % files.size)); made(edit) += 1
@@ -1473,13 +1481,13 @@ class StreamingSpec extends AnyFunSuite {
                 made(edit) += 1
               }
             case "rewrite" if files.nonEmpty =>
-              // a compaction-like rewrite of one leaf under new file
-              // names, losing one row when it has more than one
+              // one leaf rewritten under new file names, losing one row
+              // when it has more than one
               val leaf = files(pick % files.size).getParentFile
-              val kept = spark.read.parquet(leaf.getPath).collect().toSeq
-              val schema = spark.read.parquet(leaf.getPath).schema
+              val kept = spark.read.parquet(leaf.getPath)
+              val rowsKept = kept.collect().toSeq
               dataFiles(leaf).foreach(delete)
-              spark.createDataFrame(kept.drop(if (kept.size > 1) 1 else 0).asJava, schema)
+              spark.createDataFrame(rowsKept.drop(if (rowsKept.size > 1) 1 else 0).asJava, kept.schema)
                 .write.mode("append").parquet(leaf.getPath)
               made(edit) += 1
             case _ =>
