@@ -1402,7 +1402,9 @@ class StreamingSpec extends AnyFunSuite {
     assert(rowsAgain === 0)
   }
 
-  test("held table keys equal a left-anti join against the whole table after every append (property)") {
+  // the unseen rows are what TableKeys.append lets through: after every
+  // append of one held instance they must equal a plain anti-join
+  test("unseenRows equals a left-anti join against the whole table (property)") {
     import org.scalacheck.{Gen, Prop, Test}
     import org.scalacheck.rng.Seed
     import spark.implicits._
