@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,10 +17,10 @@ import org.apache.spark.sql.functions._
 object Maintenance {
 
   /** Rewrite a parquet directory into ~`targetBytes`-sized files.
-    * Target file count = ceil(input bytes / targetBytes), derived from
-    * a RECURSIVE source listing via the Hadoop FileSystem API
-    * (HDFS/S3-correct, not java.io; recursion so a nested layout's
-    * bytes are counted, not silently missed). `shuffle = true`
+    * Target file count = ceil(input bytes / targetBytes), the bytes of
+    * the store walk [[Snapshot.dataFiles]] (Hadoop FileSystem API, so
+    * HDFS/S3-correct; recursive, so a nested layout's bytes are
+    * counted, not silently missed). `shuffle = true`
     * (default) repartitions for even output sizes; `false` coalesces —
     * no shuffle, but output files inherit input skew AND the count
     * only caps (coalesce cannot split partitions), the classic
@@ -30,18 +31,8 @@ object Maintenance {
   def compactTable(spark: SparkSession, srcDir: String, dstDir: String,
                    targetBytes: Long = 128L << 20,
                    shuffle: Boolean = true): Int = {
-    val fs = new org.apache.hadoop.fs.Path(srcDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def parquetBytes(dir: String): Long = {
-      val it = fs.listFiles(new org.apache.hadoop.fs.Path(dir), true)
-      var total = 0L
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet")) total += f.getLen
-      }
-      total
-    }
-    val bytes = parquetBytes(srcDir)
+    val fs = new Path(srcDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val bytes = Snapshot.dataFiles(fs, new Path(srcDir)).map(_.getLen).sum
     require(bytes > 0, s"no parquet data under $srcDir")
     val parts = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
     // snapshot-resolved: compacting a manifest-managed store into a
@@ -50,8 +41,7 @@ object Maintenance {
     val src = Snapshot.read(spark, srcDir)
     val out = if (shuffle) src.repartition(parts) else src.coalesce(parts)
     out.write.mode("overwrite").parquet(dstDir)
-    fs.listStatus(new org.apache.hadoop.fs.Path(dstDir))
-      .count(_.getPath.getName.endsWith(".parquet"))
+    Snapshot.dataFiles(fs, new Path(dstDir)).size
   }
 
   /** Partition-aware compaction: rewrite EACH Hive partition directory
@@ -61,31 +51,24 @@ object Maintenance {
     * the one-call compaction for the library's own partitioned
     * producers: the file-per-window sink (one dir per window) and the
     * kb-partitioned sink tables / index `ids`, all of which accrete a
-    * file per trigger. Walks nested `a=1/b=2/…` levels to the leaf
-    * data directories; a leaf with no parquet (e.g. only a marker
-    * file) is skipped, not an error. The per-partition rewrites run
-    * as successive Spark jobs — the loop is over partition COUNT
-    * (dimension-sized metadata, like the listing every scan does),
-    * never over rows. Returns total files written. */
+    * file per trigger. The leaf data directories are the parents of
+    * the store walk's files ([[Snapshot.dataFiles]]), so nested
+    * `a=1/b=2/…` levels are followed and a leaf with no parquet (e.g.
+    * only a marker file) is skipped, not an error. The per-partition
+    * rewrites run as successive Spark jobs — the loop is over
+    * partition COUNT (dimension-sized metadata, like the listing every
+    * scan does), never over rows. Returns total files written. */
   def compactPartitioned(spark: SparkSession, srcDir: String, dstDir: String,
                          targetBytes: Long = 128L << 20,
                          shuffle: Boolean = true): Int = {
-    val fs = new org.apache.hadoop.fs.Path(srcDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(srcDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // qualify the root the same way listStatus qualifies its results —
     // a RELATIVE srcDir would otherwise never prefix-match the
     // returned absolute leaf paths and the partition dirs would be
     // recreated under dstDir/<absolute-src-path>/, an unreadable tree
-    val root = fs.makeQualified(new org.apache.hadoop.fs.Path(srcDir))
-    def leafDirs(dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
-      val parts = fs.listStatus(dir)
-        .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-      if (parts.isEmpty) Seq(dir) else parts.toSeq.flatMap(p => leafDirs(p.getPath))
-    }
-    def hasParquet(dir: org.apache.hadoop.fs.Path): Boolean =
-      fs.listStatus(dir).exists(f => !f.isDirectory && f.getPath.getName.endsWith(".parquet"))
+    val root = fs.makeQualified(new Path(srcDir))
     val rootUri = root.toUri.getPath
-    leafDirs(root).filter(hasParquet).map { leaf =>
+    Snapshot.dataFiles(fs, root).map(_.getPath.getParent).toSeq.distinct.map { leaf =>
       val rel = fs.makeQualified(leaf).toUri.getPath
         .stripPrefix(rootUri).stripPrefix("/")
       val dst = if (rel.isEmpty) dstDir else s"$dstDir/$rel"

@@ -2,8 +2,12 @@ package graft.operators
 
 import java.util.UUID
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, PartitionSpec, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import scala.collection.mutable
 
 /** Generation-stamped snapshot manifests for append-only parquet
   * stores — what lets a SERVING process and in-place compaction share
@@ -38,10 +42,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * compaction (a crash between the tier rename and the manifest
   * commit) and is excluded — reading it alongside its still-live
   * sources would double rows; the next compactor call sweeps it. A
-  * store with no manifest at all reads as a plain directory (legacy
+  * store with no manifest at all resolves to every data file (legacy
   * mode — every pre-snapshot store keeps working unchanged, and a
   * `mode("overwrite")` rebuild deletes `_manifests` with the rest of
   * the dir, resetting the store to legacy cleanly).
+  *
+  * This object also owns the two store idioms every reader and walker
+  * of a store shares: which files are a store's data ([[dataFiles]]),
+  * and how a listed file set is scanned ([[scan]], a fixed file index —
+  * no Spark listing job). A read scans exactly the resolved set, so it
+  * is strictly isolated: a merge committing while the read runs never
+  * shows it a tier file next to that tier's retired sources.
   *
   * Writer cardinality: ONE maintenance writer per store (the owning
   * sink's trigger loop or an offline job), any number of readers in
@@ -78,22 +89,29 @@ object Snapshot {
     if (i < 0) "" else rel.substring(0, i)
   }
 
-  /** Recursive data-file listing as root-relative (path, bytes) pairs;
-    * `_`/`.`-prefixed entries (manifests, temp dirs, _SUCCESS, crcs)
-    * are skipped at every level. */
-  private def listData(fs: FileSystem, root: Path): Vector[(String, Long)] = {
+  /** A store's data files: the non-hidden `.parquet` files under
+    * `root`, found by one lazy walk — take the head to stop at the
+    * first file. `_`/`.`-prefixed names (manifests, temp dirs,
+    * `_SUCCESS`, crcs) are skipped at every level, and a directory's
+    * files come before its subdirectories'. `listStatus` builds no
+    * `LocatedFileStatus`, so on a local filesystem without libhadoop
+    * the walk forks no `ls` per file. A missing `root` has none. */
+  private[graft] def dataFiles(fs: FileSystem, root: Path): Iterator[FileStatus] = {
+    def walk(d: Path): Iterator[FileStatus] = {
+      val (files, dirs) = fs.listStatus(d)
+        .filterNot(s => s.getPath.getName.startsWith("_") || s.getPath.getName.startsWith("."))
+        .partition(_.isFile)
+      files.iterator.filter(_.getPath.getName.endsWith(".parquet")) ++
+        dirs.iterator.flatMap(s => walk(s.getPath))
+    }
+    if (fs.exists(root)) walk(root) else Iterator.empty
+  }
+
+  /** [[dataFiles]] keyed by their root-relative names. */
+  private def listData(fs: FileSystem, root: Path): Vector[(String, FileStatus)] = {
     val rootPath = root.toUri.getPath
-    def hidden(n: String) = n.startsWith("_") || n.startsWith(".")
-    def walk(d: Path): Vector[(String, Long)] =
-      fs.listStatus(d).toVector.flatMap { s =>
-        if (hidden(s.getPath.getName)) Vector.empty
-        else if (s.isDirectory) walk(s.getPath)
-        else if (s.getPath.getName.endsWith(".parquet"))
-          Vector((fs.makeQualified(s.getPath).toUri.getPath
-            .stripPrefix(rootPath).stripPrefix("/"), s.getLen))
-        else Vector.empty
-      }
-    walk(root)
+    dataFiles(fs, root).map(s => (fs.makeQualified(s.getPath).toUri.getPath
+      .stripPrefix(rootPath).stripPrefix("/"), s)).toVector
   }
 
   private def genOf(name: String): Option[Long] =
@@ -154,89 +172,98 @@ object Snapshot {
     }
   }
 
-  /** Shared resolution: (root-relative live names, on-disk names).
-    * Returns None when the store has no manifest (legacy mode). The
-    * manifest is read BEFORE the listing: a concurrent merge
-    * committing in between then shows up as an unknown tier file
+  /** The one resolution: the statuses of the store's live files, in
+    * root-relative name order — every data file when the store has no
+    * manifest. The manifest is read BEFORE the listing: a concurrent
+    * merge committing in between then shows up as an unknown tier file
     * (excluded) with its sources still live — the reverse order would
     * see the new generation's tier missing from the stale listing and
     * fail the lost-file check spuriously. */
-  private def resolveLive(fs: FileSystem, root: Path,
-                          dir: String): Option[(Vector[String], Vector[String])] = {
+  private def resolve(fs: FileSystem, root: Path, dir: String): Vector[FileStatus] = {
     val manifest = latestManifest(fs, root)
-    val onDisk = listData(fs, root).map(_._1)
-    manifest.map { m =>
-      val onDiskNames = onDisk.toSet
-      val missing = m.live.filterNot(onDiskNames)
+    val onDisk = listData(fs, root).sortBy(_._1)
+    manifest.fold(onDisk.map(_._2)) { m =>
+      val byName = onDisk.toMap
+      val missing = m.live.filterNot(byName.contains)
       require(missing.isEmpty,
         s"snapshot store $dir lost live files (externally deleted?): " +
           missing.take(5).mkString(", "))
       val known = m.live.toSet ++ m.retired.map(_._2)
-      val appends = onDisk.filter(n => !known(n) && !isTier(n))
-      ((m.live ++ appends).sorted, onDisk)
+      val appends = onDisk.map(_._1).filter(n => !known(n) && !isTier(n))
+      (m.live ++ appends).sorted.map(byName)
     }
   }
 
   /** The pinned snapshot: absolute FILE paths of the store's CURRENT
     * live set, resolved once. A serving process passes these to its
     * scan and is guaranteed they exist for `graceMs` after any
-    * concurrent compaction retires them — the strict isolation mode.
-    * Legacy (manifest-less) stores resolve to their full on-disk
-    * file set. */
+    * concurrent compaction retires them. Legacy (manifest-less) stores
+    * resolve to their full on-disk file set. */
   def files(spark: SparkSession, dir: String): Seq[String] = {
     val (fs, root) = fsOf(spark, dir)
-    resolveLive(fs, root, dir) match {
-      case None =>
-        listData(fs, root).map(f => new Path(root, f._1).toString).sorted
-      case Some((live, _)) => live.map(n => new Path(root, n).toString)
+    resolve(fs, root, dir).map(_.getPath.toString)
+  }
+
+  /** Snapshot-resolved read of a store dir: a [[scan]] of exactly the
+    * files [[files]] resolves, rooted at `dir`, so Hive partition
+    * columns (`kb=…`) are inferred and pruned as a whole-directory
+    * read would — a drop-in replacement for a whole-directory parquet
+    * read on every store the snapshot compactor may manage. The read is
+    * strictly isolated: it pins the resolved set, so a merge
+    * committing mid-read neither adds its tier file nor removes the
+    * retired sources (they outlive `graceMs`), and no listing job runs.
+    * A store without data (missing, or markers only) fails with
+    * Spark's own error. */
+  def read(spark: SparkSession, dir: String): DataFrame = {
+    val (fs, root) = fsOf(spark, dir)
+    val live = resolve(fs, root, dir)
+    if (live.nonEmpty) scan(spark, root, live)
+    else {
+      require(latestManifest(fs, root).isEmpty,
+        s"snapshot store $dir resolved to an empty live set")
+      spark.read.parquet(dir)
     }
   }
 
-  /** Snapshot-resolved read of a store dir: the manifest's live set
-    * (plus post-manifest appends) with `basePath = dir`, so Hive
-    * partition columns (`kb=…`) keep being inferred and pruned
-    * exactly as a whole-directory read would. Stores without a
-    * manifest read as plain directories — a drop-in replacement for
-    * `spark.read.parquet(dir)` on every store the snapshot compactor
-    * may manage.
-    *
-    * Path granularity is ADAPTIVE: a leaf whose on-disk set equals
-    * its live set (the steady state — no retired files awaiting GC,
-    * no crashed-commit orphans) is passed as its DIRECTORY, and only
-    * dirty leaves pin individual files. Per-file scans pay Spark's
-    * per-path resolution ceremony (a distributed listing job above
-    * the parallel-discovery threshold) on EVERY read — O(live files)
-    * per trigger, which measurably climbs a streaming sink's
-    * per-trigger cost as the store approaches its compaction
-    * equilibrium — while directory paths stay at the store's leaf
-    * count. The trade: under an exactly-concurrent merge commit, a
-    * directory-granular scan can see a leaf's tier file AND its
-    * retired sources (duplicate rows — which every composed reader
-    * of these stores already tolerates and collapses), where the
-    * per-file [[files]] pin stays bit-exact; callers needing strict
-    * isolation across processes pin with [[files]]. */
-  def read(spark: SparkSession, dir: String): DataFrame = {
-    val (fs, root) = fsOf(spark, dir)
-    if (!fs.exists(new Path(root, ManifestDirName)))
-      return spark.read.parquet(dir)
-    resolveLive(fs, root, dir) match {
-      case None => spark.read.parquet(dir)
-      case Some((live, onDisk)) =>
-        require(live.nonEmpty,
-          s"snapshot store $dir resolved to an empty live set")
-        if (live == onDisk.sorted) return spark.read.parquet(dir)
-        val liveByLeaf = live.groupBy(parentRel)
-        val diskByLeaf = onDisk.groupBy(parentRel)
-        val paths = (liveByLeaf.keySet ++ diskByLeaf.keySet).toSeq.sorted
-          .flatMap { leaf =>
-            val l = liveByLeaf.getOrElse(leaf, Vector.empty)
-            val d = diskByLeaf.getOrElse(leaf, Vector.empty)
-            if (leaf.nonEmpty && l.toSet == d.toSet)
-              Seq(new Path(root, leaf).toString)
-            else l.map(n => new Path(root, n).toString)
-          }
-        spark.read.option("basePath", root.toString).parquet(paths: _*)
-    }
+  /** Scans exactly `files` (listed statuses under `root`) through a
+    * fixed [[ListedFileIndex]], so no listing job runs. Partition
+    * columns come from the `k=v` directories between `root` and each
+    * file, and partition filters still prune. `schema` (data and
+    * partition columns) skips the footer read that otherwise infers
+    * the data columns; either way the columns read as nullable, as
+    * Spark's own file reads make them. */
+  private[graft] def scan(spark: SparkSession, root: Path, files: Seq[FileStatus],
+                          schema: Option[StructType] = None): DataFrame = {
+    val index = new ListedFileIndex(spark, root, files, schema)
+    val parts = index.partitionSchema
+    val data = schema.map(s => StructType(s.filterNot(f => parts.fieldNames.contains(f.name))))
+      .orElse(new ParquetFileFormat().inferSchema(spark, Map.empty, files))
+      .getOrElse(throw new IllegalArgumentException(s"no parquet files to scan under $root"))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, parts,
+      nullable(data).asInstanceOf[StructType], None, new ParquetFileFormat, Map.empty)(spark))
+  }
+
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  /** A file index over files already listed, like the index Spark's
+    * file sink reads its committed log through (`MetadataLogFileIndex`):
+    * scanning it lists nothing. */
+  private final class ListedFileIndex(spark: SparkSession, root: Path, files: Seq[FileStatus],
+                                      schema: Option[StructType])
+      extends PartitioningAwareFileIndex(spark, Map.empty, schema) {
+    override protected val leafFiles: mutable.LinkedHashMap[Path, FileStatus] =
+      mutable.LinkedHashMap.from(files.map(f => f.getPath -> f))
+    override protected val leafDirToChildrenFiles: Map[Path, Array[FileStatus]] =
+      files.toArray.groupBy(_.getPath.getParent)
+    private lazy val spec = inferPartitioning()
+    override def partitionSpec(): PartitionSpec = spec
+    override def rootPaths: Seq[Path] = Seq(root)
+    override def refresh(): Unit = ()
   }
 
   /** Snapshot-isolated size-tiered compaction of a FLAT append-only
@@ -294,7 +321,7 @@ object Snapshot {
         fs.delete(s.getPath, true)
     }
     val onDisk = listData(fs, root)
-    val sizes = onDisk.toMap
+    val byName = onDisk.toMap
     val manifest = latestManifest(fs, root) match {
       case Some(m) => m
       case None =>
@@ -361,19 +388,20 @@ object Snapshot {
     groups.sortBy(-_.length).foreach { g =>
       if (g.length > maxFiles + jitterOf(g) && budget >= 2 && jobs < maxMergeJobs) {
         jobs += 1
-        val sel = g.map(n => (sizes(n), n)).sorted
+        val sel = g.map(n => (byName(n).getLen, n)).sorted
           .take(math.min(math.min(g.length - maxFiles / 2 + 1, maxMergeFiles), budget))
           .map(_._2)
         budget -= sel.length
         val tmp = new Path(root, "_compact_tmp-" + UUID.randomUUID().toString)
-        spark.read.parquet(sel.map(n => new Path(root, n).toString): _*)
+        // rooted at the leaf, so the tier file keeps the sources'
+        // columns (no partition column inferred into the data)
+        val leaf = parentRel(sel.head)
+        scan(spark, if (leaf.isEmpty) root else new Path(root, leaf), sel.map(byName))
           .coalesce(1)
           .write.mode("overwrite").parquet(tmp.toString)
-        val part = fs.listStatus(tmp)
-          .find(_.getPath.getName.endsWith(".parquet"))
+        val part = dataFiles(fs, tmp).nextOption()
           .getOrElse(throw new IllegalStateException(
             s"merge wrote no parquet under $tmp"))
-        val leaf = parentRel(sel.head)
         val tierRel = (if (leaf.isEmpty) "" else leaf + "/") +
           "tier-" + UUID.randomUUID().toString + ".parquet"
         if (!fs.rename(part.getPath, new Path(root, tierRel)))
@@ -489,11 +517,11 @@ object Snapshot {
 
     /** The staged rows (readable BEFORE commit — invisible to every
       * other reader): rebuilds derive downstream tables from staged
-      * upstream data. `basePath` keeps Hive partition columns. */
+      * upstream data. Rooted at the store, so Hive partition columns
+      * are kept. */
     def staged: DataFrame = {
-      val (_, root) = fsOf(spark, dir)
-      spark.read.option("basePath", root.toString)
-        .parquet(stagedRel.map(n => new Path(root, n).toString): _*)
+      val (fs, root) = fsOf(spark, dir)
+      scan(spark, root, stagedRel.map(n => fs.getFileStatus(new Path(root, n))))
     }
 
     /** Atomic publish: new generation live = the staged set; all

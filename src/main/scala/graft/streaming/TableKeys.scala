@@ -1,12 +1,9 @@
 package graft.streaming
 
+import graft.operators.Snapshot
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.types.StructType
 import scala.collection.mutable
@@ -29,8 +26,9 @@ import scala.jdk.CollectionConverters._
   *  3. lists those leaves on the driver. A held leaf whose listing
   *     still has every held file reads only the files it has not seen;
   *     one whose held file vanished (compaction, migration, a manual
-  *     delete) is dropped and read whole. All reads are one scan through
-  *     a fixed [[TableKeys.LeafIndex]], so no listing job runs;
+  *     delete) is dropped and read whole. All reads are one
+  *     [[graft.operators.Snapshot.scan]] of the listed files with the
+  *     batch's key schema, so no listing job runs;
   *  4. anti-joins the batch against only the batch keys the table
   *     already holds — almost always none, and then there is no join;
   *  5. writes (through [[NioLocalFileSystem]] for `file:` tables) and
@@ -79,7 +77,6 @@ private[graft] final class TableKeys(path: String, keys: Seq[String], parts: Seq
     val cols = parts ++ own
     val keyed = batch.select(cols.map(col): _*)
     val schema = StructType(keyed.schema.map(_.copy(nullable = true)))
-    val partSchema = StructType(schema.take(parts.size))
     val batchKeys = keyed.collect().groupBy(leafOf)
     val dirs = batchKeys.keys.map(leaf => leaf -> TableKeys.dirOf(root, parts, leaf)).toMap
 
@@ -92,12 +89,7 @@ private[graft] final class TableKeys(path: String, keys: Seq[String], parts: Seq
       Option.when(unread.nonEmpty)(leaf -> unread)
     }
     if (toRead.nonEmpty) {
-      val toInternal = CatalystTypeConverters.createToCatalystConverter(partSchema)
-      val index = new TableKeys.LeafIndex(root, partSchema, toRead.map { case (leaf, files) =>
-        PartitionDirectory(toInternal(leaf).asInstanceOf[InternalRow], files.toArray)
-      })
-      spark.baseRelationToDataFrame(HadoopFsRelation(index, partSchema,
-          StructType(schema.drop(parts.size)), None, new ParquetFileFormat, Map.empty)(spark))
+      Snapshot.scan(spark, fs.makeQualified(root), toRead.flatMap(_._2), Some(schema))
         .select(cols.map(col): _*).collect()
         .foreach(r => held(leafOf(r)).keys += keyOf(r))
       toRead.foreach { case (leaf, files) => held(leaf).files ++= files.map(_.getPath.getName) }
@@ -128,8 +120,7 @@ private[graft] object TableKeys {
   /** Does the kb-partitioned sink table at `p` hold any parquet DATA?
     * A missing dir, or one with only markers (an all-empty first
     * append leaves `_SUCCESS` and no footers), is an absent table. The
-    * walk (`listStatus`, which builds no `LocatedFileStatus` and so
-    * forks no `ls` on a local filesystem without libhadoop) stops at
+    * store walk ([[graft.operators.Snapshot.dataFiles]]) stops at
     * the first data file, which must sit in a `kb=` directory:
     * anything else is a pre-kb layout and fails fast — never read as
     * absent, which would append duplicates forever. A table written
@@ -140,14 +131,9 @@ private[graft] object TableKeys {
     * committed. The one-time rewrite is
     * [[Pipelines.migrateTableToKb]] for a tableSink table (run with
     * the stream stopped). */
-  def hasParquetData(fs: FileSystem, p: Path): Boolean = {
-    def firstData(dir: Path): Option[Path] = {
-      val (files, subdirs) = fs.listStatus(dir).partition(_.isFile)
-      files.map(_.getPath).find(_.getName.endsWith(".parquet"))
-        .orElse(subdirs.iterator.map(d => firstData(d.getPath)).collectFirst { case Some(f) => f })
-    }
-    fs.exists(p) && firstData(p).exists { f =>
-      if (!f.getParent.getName.startsWith("kb="))
+  def hasParquetData(fs: FileSystem, p: Path): Boolean =
+    Snapshot.dataFiles(fs, p).nextOption().exists { f =>
+      if (!f.getPath.getParent.getName.startsWith("kb="))
         throw new IllegalStateException(
           s"$p holds a pre-kb (unbucketed) sink table; appending would mix " +
             "partition depths and wedge the stream on its next trigger. With " +
@@ -156,7 +142,6 @@ private[graft] object TableKeys {
             "the kb layout once, then resume.")
       true
     }
-  }
 
   /** The leaf directory of partition values `leaf`, named with Spark's
     * own partition-path escaping. */
@@ -174,23 +159,4 @@ private[graft] object TableKeys {
     case local: LocalFileSystem => Option(local.pathToFile(dir).list()).toSeq.flatten
     case _ => if (fs.exists(dir)) fs.listStatus(dir).toSeq.map(_.getPath.getName) else Nil
   }).filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
-
-  /** A [[FileIndex]] over leaf files already listed: scanning it starts
-    * no listing job. Partition filters the planner pushes into the scan
-    * still prune its directories. */
-  private final class LeafIndex(root: Path, val partitionSchema: StructType,
-                                dirs: Seq[PartitionDirectory]) extends FileIndex {
-    def rootPaths: Seq[Path] = Seq(root)
-    def listFiles(partitionFilters: Seq[Expression], dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
-      partitionFilters.reduceOption(And).fold(dirs) { f =>
-        val keep = Predicate.createInterpreted(f.transform { case a: AttributeReference =>
-          val i = partitionSchema.fieldIndex(a.name)
-          BoundReference(i, partitionSchema(i).dataType, nullable = true)
-        })
-        dirs.filter(d => keep.eval(d.values))
-      }
-    def inputFiles: Array[String] = dirs.flatMap(_.files.map(_.getPath.toString)).toArray
-    def refresh(): Unit = ()
-    def sizeInBytes: Long = dirs.flatMap(_.files.map(_.getLen)).sum
-  }
 }

@@ -580,6 +580,12 @@ class MaintenanceSpec extends AnyFunSuite {
       df.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     val rows = docs(spark.read.parquet(dir))
     val pinned = operators.Snapshot.files(spark, dir)
+    // the store's files are listed on the driver and scanned as listed:
+    // a read of ~60 leaves starts no listing job, before the merge and
+    // after it (retired files still on disk)
+    def listingJobsOfRead() = SparkSpec.listingJobs(
+      SparkSpec.jobDescriptions(docs(operators.Snapshot.read(spark, dir))))
+    assert(listingJobsOfRead().isEmpty, "a snapshot read listed the store in a job")
 
     val merged = operators.Snapshot.compactTieredPartitioned(spark, dir,
       maxFilesPerLeaf = 2, graceMs = 24L * 3600 * 1000)
@@ -589,6 +595,7 @@ class MaintenanceSpec extends AnyFunSuite {
 
     val snap = operators.Snapshot.read(spark, dir)
     assert(docs(snap) === rows)
+    assert(listingJobsOfRead().isEmpty, "a snapshot read listed the merged store in a job")
     // the kb partition column is still inferred and still prunes: a
     // one-bucket filter SCANS only that leaf's files (executed-plan
     // metric — inputFiles reports the unpruned relation)

@@ -15,4 +15,35 @@ object SparkSpec {
     * skips them with a message instead of erroring. */
   val sf01: String = sf.replaceAll("sf0\\.001$", "sf0.01")
   def sf01Available: Boolean = new java.io.File(sf01).isDirectory
+
+  /** The descriptions among `jobs` of Spark's parallel file-listing
+    * job, which a scan of a path set past the parallel-discovery
+    * threshold starts before it reads anything. */
+  def listingJobs(jobs: Iterable[String]): Seq[String] =
+    jobs.filter(_.contains("Listing leaf files and directories")).toSeq
+
+  /** Runs `body` and returns the descriptions of the Spark jobs it
+    * started (`spark.job.description`; a job without one is left out).
+    * The listener bus is asynchronous, so a marker job in its own group
+    * fences the collection. */
+  def jobDescriptions(body: => Any): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val marker = s"graft-job-fence-${java.util.UUID.randomUUID()}"
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          if (p.getProperty("spark.jobGroup.id") == marker) fenced.countDown()
+          else Option(p.getProperty("spark.job.description")).foreach(seen.add)
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.sparkContext.setJobGroup(marker, "listener fence")
+      try spark.range(1).collect() finally spark.sparkContext.clearJobGroup()
+      assert(fenced.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener fence never arrived")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    seen.toArray(Array.empty[String]).toSeq
+  }
 }
