@@ -842,18 +842,30 @@ object DedupOps {
   def keyBucket(keys: Column*): Column =
     pmod(xxhash64(keys: _*), lit(keyBuckets)).cast("int")
 
-  /** doc_ids already folded into an index, read PRUNED to the given
+  /** `id`s already folded into an index, read PRUNED to the given
     * key-hash buckets (≤ [[keyBuckets]] partition directories — per-
     * trigger read work is bounded by the batch's bucket span, not by
-    * index history). Indexes written before the `ids` table existed
-    * fall back to the unpruned single-column `sets` read. The fallback
-    * is an explicit EXISTENCE check: an `ids` store that exists but
-    * cannot be read pruned (e.g. written without `kb`) fails loudly
-    * rather than silently reading the whole `sets` history. */
-  def indexedIds(spark: SparkSession, idx: String, buckets: Seq[Int]): DataFrame =
+    * index history). Minhash indexes written before the `ids` table
+    * existed fall back to the unpruned single-column `sets` read. The
+    * fallback is an explicit EXISTENCE check: an `ids` store that
+    * exists but cannot be read pruned (e.g. written without `kb`)
+    * fails loudly rather than silently reading the whole `sets`
+    * history. */
+  def indexedIds(spark: SparkSession, idx: String, buckets: Seq[Int],
+                 id: String = "doc_id"): DataFrame =
     if (VectorOps.hExists(spark, s"$idx/ids"))
-      Snapshot.read(spark, s"$idx/ids").filter(col("kb").isin(buckets: _*)).select("doc_id")
-    else Snapshot.read(spark, s"$idx/sets").select("doc_id")
+      Snapshot.read(spark, s"$idx/ids").filter(col("kb").isin(buckets: _*)).select(id)
+    else Snapshot.read(spark, s"$idx/sets").select(id)
+
+  /** The rows of `keyed` (which carries `kb`, the [[keyBucket]] of
+    * `id`) whose `id` the index at `idx` does not hold: one collect of
+    * the batch's ≤ [[keyBuckets]] bucket values, then a left-anti join
+    * against [[indexedIds]] pruned to them — the membership check of
+    * every index sink and drift report. */
+  def unindexed(keyed: DataFrame, idx: String, id: String): DataFrame = {
+    val buckets = keyed.select("kb").distinct().collect().map(_.getInt(0)).toSeq
+    keyed.join(indexedIds(keyed.sparkSession, idx, buckets, id), Seq(id), "left_anti")
+  }
 
   /** Build the minhash dedup index to parquet — the state a streaming
     * ingestion pipeline maintains so NEW documents dedup against the
@@ -1036,7 +1048,6 @@ object DedupOps {
     val nBatchDf = batchDocs.agg(count(lit(1)).as("n_batch"))
     val keyed = batchDocs.select(col("doc_id"))
       .withColumn("kb", keyBucket(col("doc_id")))
-    val buckets = keyed.select("kb").distinct().collect().map(_.getInt(0)).toSeq
     // `memberCount` ≥ 0 replaces the one non-batch-shaped input — the
     // ids-store count, whose file-listing cost grows with trigger
     // history between compactions — with a caller-maintained total
@@ -1049,8 +1060,7 @@ object DedupOps {
         spark.range(1).select(lit(memberCount).as("_n_indexed"))
       else Snapshot.read(spark, s"$indexDir/ids")
         .agg(count(lit(1)).as("_n_indexed"))
-    val nNewDf = keyed.join(indexedIds(spark, indexDir, buckets),
-        Seq("doc_id"), "left_anti")
+    val nNewDf = unindexed(keyed, indexDir, "doc_id")
       .agg(count(lit(1)).as("_n_new"))
     nBatchDf
       .crossJoin(broadcast(fracDf))

@@ -20,6 +20,12 @@ object Exact {
   /** Cast a 2-dp money/ratio double to exact decimal(p,4). */
   def d4(c: Column, p: Int = 14): Column = c.cast(s"decimal($p,4)")
 
+  /** The revenue term p*(1-d) in exact decimal. */
+  def disc(p: Column, d: Column): Column = d4(p, 12) * (lit(1) - d4(d, 6))
+
+  /** A timestamp literal, cast as the oracle casts it. */
+  def ts(s: String): Column = lit(s).cast("timestamp")
+
   /** Exact decimal sum rounded to 2 dp, emitted as double. */
   def sum2(e: Column): Column = round(sum(e), 2).cast("double")
 

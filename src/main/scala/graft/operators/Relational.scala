@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Exact._
@@ -19,12 +19,6 @@ import Exact._
   *    to the DuckDB oracle.
   */
 object Relational {
-
-  private def ts(s: String): Column = lit(s).cast("timestamp")
-
-  /** revenue term p*(1-d) in exact decimal. */
-  private def disc(p: Column, d: Column): Column =
-    d4(p, 12) * (lit(1) - d4(d, 6))
 
   /** TPC-H Q1-style pricing summary: one shuffle, partial aggregation
     * map-side (HashAggregate partial→final), 8 aggregates in one pass. */

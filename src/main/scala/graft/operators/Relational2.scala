@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import Exact._
 
@@ -16,11 +16,6 @@ import Exact._
   * per agg, exact decimal money math.
   */
 object Relational2 {
-
-  private def ts(s: String): Column = lit(s).cast("timestamp")
-
-  private def disc(p: Column, d: Column): Column =
-    d4(p, 12) * (lit(1) - d4(d, 6))
 
   /** Q7 shape: shipping volume between nation pairs by year. */
   def q7Volume(spark: SparkSession, dir: String): DataFrame = {

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import Exact._
 
@@ -20,11 +20,6 @@ import Exact._
   * division of exact sums.
   */
 object Relational3 {
-
-  private def ts(s: String): Column = lit(s).cast("timestamp")
-
-  private def disc(p: Column, d: Column): Column =
-    d4(p, 12) * (lit(1) - d4(d, 6))
 
   private val discSql =
     "CAST(l_extendedprice AS DECIMAL(12,4))*(1-CAST(l_discount AS DECIMAL(6,4)))"

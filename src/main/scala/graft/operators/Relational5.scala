@@ -30,10 +30,6 @@ import Exact._
   */
 object Relational5 {
 
-  private def rev(p: org.apache.spark.sql.Column,
-                  d: org.apache.spark.sql.Column) =
-    d4(p, 12) * (lit(1) - d4(d, 6))
-
   /** Q2's argmin shape: for each STANDARD large part, the EUROPE-region
     * supplier that shipped it with the LOWEST account balance — min
     * per part over the region's shippers, joined back on (part, min)
@@ -111,7 +107,7 @@ object Relational5 {
       .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
       .join(orders, col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("n_name").as("nation"), col("o_year"))
-      .agg(sum2(rev(col("l_extendedprice"), col("l_discount"))).as("profit"))
+      .agg(sum2(disc(col("l_extendedprice"), col("l_discount"))).as("profit"))
   }
 
   val q9ProfitSql: String =
@@ -139,7 +135,7 @@ object Relational5 {
   def q11Share(spark: SparkSession, dir: String): DataFrame = {
     val perPart = Tables(spark, dir, "lineitem")
       .groupBy(col("l_partkey"))
-      .agg(sum(rev(col("l_extendedprice"), col("l_discount"))).as("val_d"))
+      .agg(sum(disc(col("l_extendedprice"), col("l_discount"))).as("val_d"))
     val total = perPart.agg(sum(col("val_d")).as("tot_d"))
     perPart.crossJoin(broadcast(total))
       .filter(col("val_d") * lit(2000) > col("tot_d"))

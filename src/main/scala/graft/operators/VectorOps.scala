@@ -1342,10 +1342,7 @@ object VectorOps {
     val spark = keyed.sparkSession
     if (!hExists(spark, s"$indexDir/ids/_SUCCESS"))
       writeIvfIds(spark, indexDir, listTable)
-    val buckets = keyed.select("kb").distinct().collect().map(_.getInt(0)).toSeq
-    val existing = Snapshot.read(spark, s"$indexDir/ids")
-      .filter(col("kb").isin(buckets: _*)).select("vec_id")
-    keyed.join(existing, Seq("vec_id"), "left_anti").localCheckpoint(true)
+    DedupOps.unindexed(keyed, indexDir, "vec_id").localCheckpoint(true)
   }
 
   /** Membership rows commit AFTER list rows in both appends: the
@@ -1361,7 +1358,7 @@ object VectorOps {
     * partitioning writes ~32 near-empty files PER TRIGGER, so the
     * store crosses its compaction threshold within a handful of
     * triggers and then serves every read with retired files awaiting
-    * GC in the dir (per-file pinned scans) while paying merge debt —
+    * GC in the dir while paying merge debt —
     * measured as the step-to-plateau in the sf1 vector sink curves.
     * Writing batch-sized appends (1 file per small trigger) keeps
     * the store near its floor for ~[[appendRowsPerFile]]·maxFiles
@@ -1495,9 +1492,6 @@ object VectorOps {
     val kBuiltDf = cents.agg(count(lit(1)).cast("int").as("k_built"))
     val keyed = batch.select(col("vec_id"))
       .withColumn("kb", DedupOps.keyBucket(col("vec_id")))
-    val buckets = keyed.select("kb").distinct().collect().map(_.getInt(0)).toSeq
-    val existing = Snapshot.read(spark, s"$indexDir/ids")
-      .filter(col("kb").isin(buckets: _*)).select("vec_id")
     // the membership TOTAL is the one input whose default derivation
     // is not batch-shaped: counting the ids store reads a file count
     // that grows with trigger history between compactions (measured
@@ -1511,7 +1505,7 @@ object VectorOps {
         spark.range(1).select(lit(memberCount).as("_n_indexed"))
       else Snapshot.read(spark, s"$indexDir/ids")
         .agg(count(lit(1)).as("_n_indexed"))
-    val nNewDf = keyed.join(existing, Seq("vec_id"), "left_anti")
+    val nNewDf = DedupOps.unindexed(keyed, indexDir, "vec_id")
       .agg(count(lit(1)).as("_n_new"))
     // ADC-RESIDUAL staleness (codebook-carrying indexes only): the
     // batch's unit-normalized vectors are PQ-reconstruction-scored

@@ -92,7 +92,7 @@ object GraftQueueSource {
   /** How the micro-batch stream names itself (`GraftQueueSource[q0,q1]`). */
   val DescriptionPrefix = "GraftQueueSource["
 
-  /** A trigger's `budget` split over queues holding `avail` rows each,
+  /** A trigger's or a bounded read's `budget` split over queues holding `avail` rows each,
     * by water-filling: queues are visited shortest first (ties in the
     * given order) and each takes at most the floor of an equal share of
     * what is left, so a short queue's leftover goes to the longer ones
@@ -401,15 +401,14 @@ class GraftQueueTable(options: CaseInsensitiveStringMap) extends Table with Supp
       new GraftQueueMicroBatchStream(brokerDir, queues, options)
 
     /** Bounded read of the current spool — SolaceIO's maxNumRecords
-      * bounded mode. */
+      * bounded mode, the budget split across the queues as the stream
+      * splits its per-trigger one ([[GraftQueueSource.waterFill]]). */
     override def toBatch: Batch = new Batch {
       override def planInputPartitions(): Array[InputPartition] = {
         val cap = Option(options.get("maxNumRecords")).map(_.toLong).getOrElse(Long.MaxValue)
-        var budget = cap
-        queues.map { q =>
-          val avail = math.min(GraftQueueSource.available(brokerDir, q), budget)
-          budget -= avail
-          GraftQueuePartition(brokerDir, q, 0L, avail,
+        val takes = GraftQueueSource.waterFill(queues.map(GraftQueueSource.available(brokerDir, _)), cap)
+        queues.zip(takes).map { case (q, n) =>
+          GraftQueuePartition(brokerDir, q, 0L, n,
             GraftQueueSource.ackedCount(brokerDir, q), permissive): InputPartition
         }.toArray
       }

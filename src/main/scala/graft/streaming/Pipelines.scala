@@ -349,12 +349,6 @@ object Pipelines {
   // (see [[TableKeys.hasParquetData]]); the one-time rewrite is
   // [[migrateTableToKb]].
 
-  /** The ≤ [[graft.operators.DedupOps.keyBuckets]] bucket values
-    * present in a batch — a dimension-bounded collect, never
-    * O(batch) rows. */
-  private[graft] def bucketsOf(batchKeyed: DataFrame): Seq[Int] =
-    batchKeyed.select("kb").distinct().collect().map(_.getInt(0)).toSeq
-
   /** One deterministic row per doc_id within a trigger: the latest
     * sender timestamp wins, ties broken by sequence number and then
     * payload text — a redelivered EDITED document resolves
@@ -475,7 +469,11 @@ object Pipelines {
     * only after `graceMs`), a SEPARATE serving process reading this
     * index through [[graft.operators.Snapshot.read]] (as
     * [[graft.operators.VectorOps.annIvfQuery]] does) stays
-    * bit-identical while maintenance runs live.
+    * bit-identical while maintenance runs live. The sink's own
+    * per-trigger `ids` membership read
+    * ([[graft.operators.DedupOps.unindexed]]) is such a read too: it
+    * scans the live files listed on the driver, so it starts no Spark
+    * listing job however many leaves the store has.
     *
     * `driftEvery = N` (0 = off) additionally runs
     * [[graft.operators.VectorOps.ivfDriftReport]] over every N-th
@@ -616,7 +614,9 @@ object Pipelines {
     * anti-join the existing table on (doc_a, doc_b) before appending.
     * Both per-trigger key checks are BOUNDED: the already-indexed
     * check prunes the index's kb-partitioned `ids` table to the
-    * batch's buckets ([[graft.operators.DedupOps.indexedIds]]), and
+    * batch's buckets ([[graft.operators.DedupOps.unindexed]], a
+    * [[graft.operators.Snapshot.read]] of the live files listed on the
+    * driver — no listing job), and
     * the pair table is kb-partitioned on (doc_a, doc_b) with its own
     * [[TableKeys]], which after a query's first trigger reads only
     * pair files it has not seen — neither read grows with stream
@@ -692,9 +692,8 @@ object Pipelines {
         // row per redelivery, growing the index without bound. First
         // version wins for an edited re-ingest — the index keeps one
         // deterministic copy per doc_id until a periodic rebuild.
-        val newDocs = docs.join(
-          graft.operators.DedupOps.indexedIds(spark, indexDir, bucketsOf(docs)),
-          Seq("doc_id"), "left_anti").select("doc_id", "text").localCheckpoint(true)
+        val newDocs = graft.operators.DedupOps.unindexed(docs, indexDir, "doc_id")
+          .select("doc_id", "text").localCheckpoint(true)
         if (!newDocs.isEmpty) {
           graft.operators.DedupOps.incrementalIndexUpdate(spark, newDocs, indexDir)
           if (memberCount >= 0) memberCount += newDocs.count()
@@ -825,9 +824,8 @@ object Pipelines {
         val sigs = signer(latestDocVersion(batch))
           .withColumn("kb", graft.operators.DedupOps.keyBucket(col("doc_id")))
           .localCheckpoint(true)
-        val newSigs = sigs.join(
-          graft.operators.DedupOps.indexedIds(spark, indexDir, bucketsOf(sigs)),
-          Seq("doc_id"), "left_anti").select(sigCols.map(col): _*).localCheckpoint(true)
+        val newSigs = graft.operators.DedupOps.unindexed(sigs, indexDir, "doc_id")
+          .select(sigCols.map(col): _*).localCheckpoint(true)
         if (!newSigs.isEmpty) update(spark, newSigs, indexDir)
         val pairs = probe(spark, sigs.select(sigCols.map(col): _*), indexDir)
           .withColumn("kb",
