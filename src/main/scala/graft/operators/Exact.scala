@@ -23,7 +23,7 @@ object Exact {
   /** The revenue term p*(1-d) in exact decimal. */
   def disc(p: Column, d: Column): Column = d4(p, 12) * (lit(1) - d4(d, 6))
 
-  /** A timestamp literal, cast as the oracle casts it. */
+  /** A timestamp literal. */
   def ts(s: String): Column = lit(s).cast("timestamp")
 
   /** Exact decimal sum rounded to 2 dp, emitted as double. */
