@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
 /** Streaming-sink cost curve — the measurement seat for the sinks'
   * bounded idempotency contract (the SkewBench idiom: make the design
@@ -14,10 +14,15 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * climbing tail; the pass condition is a flat (or JIT-declining)
   * tail: last-10-trigger mean ≤ ~first-10 mean.
   *
-  * Two modes, one per stateful sink:
+  * Six modes over the four stateful index sinks:
   *  - `dedup` — the ~10% document slice through
   *    [[graft.streaming.Pipelines.incrementalDedupSink]] (minhash
   *    index + kb-partitioned pair table);
+  *  - `phash`, `audio-phash`, `video-phash` — the same document slice
+  *    through [[graft.streaming.Pipelines.phashIndexSink]] for the
+  *    image, audio and video signature families (the sink's population
+  *    filter drops the payloads its family does not sign, map-side —
+  *    the realistic mixed-ingest shape);
   *  - `vector` — a third of the embedding corpus through
   *    [[graft.streaming.Pipelines.vectorIndexSink]] against a
   *    frozen-quantizer IVF index of the other two thirds (the
@@ -67,9 +72,7 @@ object SinkBench {
       java.nio.file.Files.createTempDirectory(p).toFile.getAbsolutePath
 
     def stream(broker: String, queue: String, slice: Int,
-               sink: org.apache.spark.sql.DataFrame =>
-                 org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row])
-        : (StreamingQuery, Long) = {
+               sink: DataFrame => DataStreamWriter[Row]): (StreamingQuery, Long) = {
       val per = math.max(1L, slice.toLong / triggers)
       val msgs = streaming.Pipelines.readQueues(
         spark, broker, Seq(queue), maxRecordsPerTrigger = Some(per))
@@ -79,30 +82,40 @@ object SinkBench {
       (q, per)
     }
 
+    // the document modes: the index covers the corpus minus the
+    // streamed doc_id % 10 residues, and the slice arrives as document
+    // messages. sliceTenths = 1 keeps the historical {7} residue so
+    // prior artifacts stay comparable; wider slices stream the top
+    // residues {10-w .. 9}.
+    def docMode(build: (String, Column) => Unit,
+                sink: (String, String) => DataFrame => DataStreamWriter[Row])
+        : (StreamingQuery, Long) = {
+      val streamed: Column =
+        if (sliceTenths == 1) pmod(col("doc_id"), lit(10)) === 7
+        else pmod(col("doc_id"), lit(10)) >= (10 - sliceTenths)
+      val idx = tmp("graft-sinkbench-idx")
+      build(idx, !streamed)
+      val slice = Tables(spark, sfDir, "documents")
+        .filter(streamed)
+        .select("doc_id", "text").collect()
+        .map(r => (r.getLong(0), r.getString(1)))
+      val broker = tmp("graft-sinkbench-broker")
+      sources.GraftQueueBroker.publish(broker, "docs", slice.map { case (id, text) =>
+        sources.GraftQueueBroker.textMsg(
+          id, 1700000000000000L + id * 1000L, "t/docs/0", text)
+      })
+      stream(broker, "docs", slice.length, sink(idx, tmp("graft-sinkbench-table")))
+    }
+
+    val phashFamilies = Map(
+      "phash" -> operators.MultimodalOps.imagePhashFamily,
+      "audio-phash" -> operators.MultimodalOps.audioPhashFamily,
+      "video-phash" -> operators.MultimodalOps.videoPhashFamily)
+
     val (q, per) = mode match {
       case "dedup" =>
-        // index over the corpus minus the streamed slice (the spec
-        // setup). sliceTenths = 1 keeps the historical {7} residue so
-        // prior artifacts stay comparable; wider slices stream the
-        // top residues {10-w .. 9}.
-        val streamed: Column =
-          if (sliceTenths == 1) pmod(col("doc_id"), lit(10)) === 7
-          else pmod(col("doc_id"), lit(10)) >= (10 - sliceTenths)
-        val idx = tmp("graft-sinkbench-idx")
-        operators.DedupOps.incrementalIndexBuild(spark, sfDir, idx,
-          docFilter = !streamed)
-        val slice = Tables(spark, sfDir, "documents")
-          .filter(streamed)
-          .select("doc_id", "text").collect()
-          .map(r => (r.getLong(0), r.getString(1)))
-        val broker = tmp("graft-sinkbench-broker")
-        sources.GraftQueueBroker.publish(broker, "docs", slice.map { case (id, text) =>
-          sources.GraftQueueBroker.textMsg(
-            id, 1700000000000000L + id * 1000L, "t/docs/0", text)
-        })
-        val table = tmp("graft-sinkbench-table")
-        stream(broker, "docs", slice.length,
-          streaming.Pipelines.incrementalDedupSink(_, idx, table,
+        docMode(operators.DedupOps.incrementalIndexBuild(spark, sfDir, _, _),
+          (idx, table) => streaming.Pipelines.incrementalDedupSink(_, idx, table,
             graceMs = graceMs))
 
       case "vector" | "vector-drift" =>
@@ -135,76 +148,11 @@ object SinkBench {
           streaming.Pipelines.vectorIndexSink(_, idx, driftEvery = driftEvery,
             graceMs = graceMs))
 
-      case "phash" =>
-        // the dedup-mode setup at the image granularity: signature
-        // index over the corpus minus the streamed residues, the
-        // slice arrives as document messages (the sink's population
-        // filter drops non-raster payloads map-side, the realistic
-        // mixed-ingest shape)
-        val streamed: Column =
-          if (sliceTenths == 1) pmod(col("doc_id"), lit(10)) === 7
-          else pmod(col("doc_id"), lit(10)) >= (10 - sliceTenths)
-        val idx = tmp("graft-sinkbench-phidx")
-        operators.MultimodalOps.phashIndexBuild(spark, sfDir, idx, !streamed)
-        val slice = Tables(spark, sfDir, "documents")
-          .filter(streamed)
-          .select("doc_id", "text").collect()
-          .map(r => (r.getLong(0), r.getString(1)))
-        val broker = tmp("graft-sinkbench-broker")
-        sources.GraftQueueBroker.publish(broker, "docs", slice.map { case (id, text) =>
-          sources.GraftQueueBroker.textMsg(
-            id, 1700000000000000L + id * 1000L, "t/docs/0", text)
-        })
-        val table = tmp("graft-sinkbench-phtable")
-        stream(broker, "docs", slice.length,
-          streaming.Pipelines.phashIndexSink(_, idx, table, graceMs = graceMs))
-
-      case "video-phash" =>
-        // the phash-mode setup at the video granularity: slot-keyed
-        // signature index over the corpus minus the streamed residues;
-        // the sink's population + demux dispatch drop non-video and
-        // non-demuxable payloads map-side
-        val streamed: Column =
-          if (sliceTenths == 1) pmod(col("doc_id"), lit(10)) === 7
-          else pmod(col("doc_id"), lit(10)) >= (10 - sliceTenths)
-        val idx = tmp("graft-sinkbench-vphidx")
-        operators.MultimodalOps.videoPhashRebuildIndex(spark,
-          operators.MultimodalOps.videoPhashSigs(spark, sfDir, !streamed), idx)
-        val slice = Tables(spark, sfDir, "documents")
-          .filter(streamed)
-          .select("doc_id", "text").collect()
-          .map(r => (r.getLong(0), r.getString(1)))
-        val broker = tmp("graft-sinkbench-broker")
-        sources.GraftQueueBroker.publish(broker, "docs", slice.map { case (id, text) =>
-          sources.GraftQueueBroker.textMsg(
-            id, 1700000000000000L + id * 1000L, "t/docs/0", text)
-        })
-        val table = tmp("graft-sinkbench-vphtable")
-        stream(broker, "docs", slice.length,
-          streaming.Pipelines.videoPhashIndexSink(_, idx, table, graceMs = graceMs))
-
-      case "audio-phash" =>
-        // the phash-mode setup at the audio granularity: same
-        // (doc_id, sig) index layout under the audio population
-        // marker; the sink's WAV-tag gate drops other payloads
-        // map-side
-        val streamed: Column =
-          if (sliceTenths == 1) pmod(col("doc_id"), lit(10)) === 7
-          else pmod(col("doc_id"), lit(10)) >= (10 - sliceTenths)
-        val idx = tmp("graft-sinkbench-aphidx")
-        operators.MultimodalOps.audioPhashIndexBuild(spark, sfDir, idx, !streamed)
-        val slice = Tables(spark, sfDir, "documents")
-          .filter(streamed)
-          .select("doc_id", "text").collect()
-          .map(r => (r.getLong(0), r.getString(1)))
-        val broker = tmp("graft-sinkbench-broker")
-        sources.GraftQueueBroker.publish(broker, "docs", slice.map { case (id, text) =>
-          sources.GraftQueueBroker.textMsg(
-            id, 1700000000000000L + id * 1000L, "t/docs/0", text)
-        })
-        val table = tmp("graft-sinkbench-aphtable")
-        stream(broker, "docs", slice.length,
-          streaming.Pipelines.audioPhashIndexSink(_, idx, table, graceMs = graceMs))
+      case m if phashFamilies.contains(m) =>
+        val family = phashFamilies(m)
+        docMode(operators.MultimodalOps.phashIndexBuild(spark, family, sfDir, _, _),
+          (idx, table) => streaming.Pipelines.phashIndexSink(_, family, idx, table,
+            graceMs = graceMs))
 
       case other =>
         throw new IllegalArgumentException(

@@ -1219,7 +1219,7 @@ object DedupOps {
     * path tolerates the duplicate rows ([[probeIndex]] dedups by
     * doc_id, candidate pairs are `distinct()`), spec-pinned. The
     * caller owns the one-copy-per-doc_id contract ACROSS calls — the
-    * streaming sink anti-joins the batch against [[indexedIds]]
+    * streaming sink keeps only the batch's [[unindexed]] docs
     * first — because two different texts folded in under one doc_id
     * would make later verifications pick an arbitrary copy.
     *

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -17,10 +17,12 @@ import org.apache.spark.sql.functions._
 object Maintenance {
 
   /** Rewrite a parquet directory into ~`targetBytes`-sized files.
-    * Target file count = ceil(input bytes / targetBytes), the bytes of
-    * the store walk [[Snapshot.dataFiles]] (Hadoop FileSystem API, so
-    * HDFS/S3-correct; recursive, so a nested layout's bytes are
-    * counted, not silently missed). `shuffle = true`
+    * Target file count = ceil(live bytes / targetBytes): the store's
+    * LIVE files, resolved once through [[Snapshot.liveFiles]] (every
+    * data file of a plain directory — Hadoop FileSystem API, so
+    * HDFS/S3-correct, recursive, so a nested layout's bytes count; a
+    * manifest-managed store's live set, so retired files awaiting GC
+    * are neither sized nor copied). `shuffle = true`
     * (default) repartitions for even output sizes; `false` coalesces —
     * no shuffle, but output files inherit input skew AND the count
     * only caps (coalesce cannot split partitions), the classic
@@ -31,17 +33,21 @@ object Maintenance {
   def compactTable(spark: SparkSession, srcDir: String, dstDir: String,
                    targetBytes: Long = 128L << 20,
                    shuffle: Boolean = true): Int = {
-    val fs = new Path(srcDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = Snapshot.dataFiles(fs, new Path(srcDir)).map(_.getLen).sum
-    require(bytes > 0, s"no parquet data under $srcDir")
+    val (root, live) = Snapshot.liveFiles(spark, srcDir)
+    rewrite(spark, root, live, dstDir, targetBytes, shuffle)
+  }
+
+  /** [[compactTable]] of a resolved live file set under `root`. */
+  private def rewrite(spark: SparkSession, root: Path, live: Seq[FileStatus],
+                      dstDir: String, targetBytes: Long, shuffle: Boolean): Int = {
+    val bytes = live.map(_.getLen).sum
+    require(bytes > 0, s"no parquet data under $root")
     val parts = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    // snapshot-resolved: compacting a manifest-managed store into a
-    // fresh dir must copy the LIVE rows only (a raw dir read would
-    // also copy retired files awaiting GC); plain dirs read unchanged
-    val src = Snapshot.read(spark, srcDir)
+    val src = Snapshot.scan(spark, root, live)
     val out = if (shuffle) src.repartition(parts) else src.coalesce(parts)
     out.write.mode("overwrite").parquet(dstDir)
-    Snapshot.dataFiles(fs, new Path(dstDir)).size
+    val dst = new Path(dstDir)
+    Snapshot.dataFiles(dst.getFileSystem(spark.sparkContext.hadoopConfiguration), dst).size
   }
 
   /** Partition-aware compaction: rewrite EACH Hive partition directory
@@ -51,28 +57,28 @@ object Maintenance {
     * the one-call compaction for the library's own partitioned
     * producers: the file-per-window sink (one dir per window) and the
     * kb-partitioned sink tables / index `ids`, all of which accrete a
-    * file per trigger. The leaf data directories are the parents of
-    * the store walk's files ([[Snapshot.dataFiles]]), so nested
-    * `a=1/b=2/…` levels are followed and a leaf with no parquet (e.g.
-    * only a marker file) is skipped, not an error. The per-partition
-    * rewrites run as successive Spark jobs — the loop is over
-    * partition COUNT (dimension-sized metadata, like the listing every
-    * scan does), never over rows. Returns total files written. */
+    * file per trigger. The live set is resolved ONCE at the store root
+    * ([[Snapshot.liveFiles]] — a manifest there covers every leaf, so
+    * files a snapshot merge retired are not copied), and each leaf
+    * directory's live files are rewritten through [[Snapshot.scan]]
+    * rooted at the leaf; nested `a=1/b=2/…` levels are followed, and a
+    * leaf with no live parquet is skipped, not an error. The
+    * per-partition rewrites run as successive Spark jobs — the loop is
+    * over partition COUNT (dimension-sized metadata, like the listing
+    * every scan does), never over rows. Returns total files written. */
   def compactPartitioned(spark: SparkSession, srcDir: String, dstDir: String,
                          targetBytes: Long = 128L << 20,
                          shuffle: Boolean = true): Int = {
-    val fs = new Path(srcDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // qualify the root the same way listStatus qualifies its results —
+    // the root is qualified the way listStatus qualifies its results —
     // a RELATIVE srcDir would otherwise never prefix-match the
     // returned absolute leaf paths and the partition dirs would be
     // recreated under dstDir/<absolute-src-path>/, an unreadable tree
-    val root = fs.makeQualified(new Path(srcDir))
+    val (root, live) = Snapshot.liveFiles(spark, srcDir)
     val rootUri = root.toUri.getPath
-    Snapshot.dataFiles(fs, root).map(_.getPath.getParent).toSeq.distinct.map { leaf =>
-      val rel = fs.makeQualified(leaf).toUri.getPath
-        .stripPrefix(rootUri).stripPrefix("/")
+    live.groupBy(_.getPath.getParent).toSeq.map { case (leaf, files) =>
+      val rel = leaf.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
       val dst = if (rel.isEmpty) dstDir else s"$dstDir/$rel"
-      compactTable(spark, leaf.toString, dst, targetBytes, shuffle)
+      rewrite(spark, leaf, files, dst, targetBytes, shuffle)
     }.sum
   }
 

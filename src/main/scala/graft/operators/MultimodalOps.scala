@@ -1704,9 +1704,7 @@ object MultimodalOps {
     * distinct — the dedup_simhash class; at 100 TB only signatures
     * shuffle, never payloads. */
   def imagePhash(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.hammingBandJoin(imagePhashSigs(spark, dir), phashMaxHamming)
-      .select(col("doc_a"), col("doc_b"),
-        col("hamming").cast("long").as("hamming"))
+    phashPairs(imagePhashFamily, imagePhashSigs(spark, dir))
 
   /** DuckDB twin: identical pixels (planted gradient or text bytes),
     * identical integer sampling, the SAME 64-bit value assembled as
@@ -1744,34 +1742,80 @@ object MultimodalOps {
        |WHERE bit_count(xor(a.sig, b.sig)) <= $phashMaxHamming""".stripMargin
   }
 
-  // ---- image-signature index (streaming ingestion state) ---------------
+  // ---- perceptual-signature index (streaming ingestion state) ----------
 
-  /** The 28-band-pair inverted-index rows of a signature frame —
-    * (band, bkey, doc_id, sig): the signature rides along so a probe
-    * verifies Hamming in the band join itself, no second sets
-    * lookup. */
-  private def phashBands(sigs: DataFrame): DataFrame =
-    sigs.select(col("doc_id"), col("sig"),
-        explode(array(DedupOps.hammingBandPairKeys(col("sig")): _*)).as("bb"))
-      .select(col("bb.band").as("band"), col("bb.bkey").as("bkey"),
-        col("doc_id"), col("sig"))
+  /** One perceptual-signature family — what the index, the ingestion
+    * sink and the batch operator need to know about it:
+    *  - `population`: the signed-population version marker (below);
+    *  - `signer`: the per-batch signer over a (doc_id, text) frame,
+    *    yielding (doc_id, slotKeys…, sig) rows;
+    *  - `slotKeys`: keys a pair must share beyond the band key (the
+    *    video frame `slot`; the [[DedupOps.hammingBandJoin]] extraKeys);
+    *  - `pairs`: the step from verified (slotKeys…, doc_a, doc_b,
+    *    hamming) candidates to the family's pair rows.
+    *
+    * SIGNED-POPULATION version markers (r17, the r16 advice): widening
+    * a signer's population (the r16 GIF addition to
+    * [[imagePhashSigsOf]]) silently invalidates any index built before
+    * the widening — a completion-marker-only check would happily probe
+    * an index that lacks every GIF member and miss pairs against
+    * pre-indexed docs with no error. Each index build stamps a
+    * `_POPULATION` marker naming the signer population + version it
+    * was built under; every fold and probe checks the marker against
+    * the family's CURRENT population and fails with a rebuild message
+    * on mismatch (including the missing-marker case: any index built
+    * before r17 predates the GIF widening's gate, and a cross-family
+    * probe fails the same way). Bump the version string whenever a
+    * signer's population or kernel changes shape. */
+  final case class PhashFamily(population: String,
+                               signer: DataFrame => DataFrame,
+                               slotKeys: Seq[String],
+                               pairs: DataFrame => DataFrame)
 
-  /** SIGNED-POPULATION version markers for the signature indexes
-    * (r17, the r16 advice): widening a signer's population (the r16
-    * GIF addition to [[imagePhashSigsOf]]) silently invalidates any
-    * index built before the widening — a completion-marker-only check
-    * would happily probe an index that lacks every GIF member and
-    * miss pairs against pre-indexed docs with no error. Each index
-    * build stamps a `_POPULATION` marker naming the signer population
-    * + version it was built under; every require checks the marker
-    * against the CURRENT population id and fails with a rebuild
-    * message on mismatch (including the missing-marker case: any
-    * index built before r17 predates the GIF widening's gate). Bump
-    * the version string whenever a signer's population or kernel
-    * changes shape. */
-  val imagePhashPopulation = "image:bmp+gif:v2"
-  val audioPhashPopulation = "audio:wav:v1"
-  val videoPhashPopulation = "video:mp4:v1"
+  /** Image and audio pairs: one row per (doc_a, doc_b), hamming long. */
+  private def hammingPairs(candidates: DataFrame): DataFrame =
+    candidates.select(col("doc_a"), col("doc_b"),
+      col("hamming").cast("long").as("hamming"))
+
+  /** Video pairs: frame pairs (one per shared slot) aggregated per
+    * video pair, kept when ≥ [[videoMinSharedFrames]] instants match. */
+  private def videoPairs(framePairs: DataFrame): DataFrame =
+    framePairs.groupBy(col("doc_a"), col("doc_b"))
+      .agg(count(lit(1)).cast("long").as("frames_matched"),
+        min(col("hamming")).cast("long").as("min_hamming"))
+      .filter(col("frames_matched") >= videoMinSharedFrames)
+
+  val imagePhashFamily = PhashFamily("image:bmp+gif:v2", imagePhashSigsOf, Nil, hammingPairs)
+  val audioPhashFamily = PhashFamily("audio:wav:v1", audioPhashSigsOf, Nil, hammingPairs)
+  val videoPhashFamily = PhashFamily("video:mp4:v1", videoPhashSigsOf, Seq("slot"), videoPairs)
+
+  /** A family's batch pairs over a signature frame: the shared band
+    * join (slot-keyed for video), then the family's pair step. */
+  private def phashPairs(family: PhashFamily, sigs: DataFrame): DataFrame =
+    family.pairs(DedupOps.hammingBandJoin(sigs, phashMaxHamming,
+      extraKeys = family.slotKeys))
+
+  /** The band-pair inverted-index rows of a signature frame —
+    * (slotKeys…, band, bkey, doc_id, sig): the signature rides along so
+    * a probe verifies Hamming in the band join itself, no second sets
+    * lookup, and a video's slot rides in the key so a probe only ever
+    * meets same-instant frames ([[videoPhash]]'s join geometry). */
+  private def phashBands(family: PhashFamily, sigs: DataFrame): DataFrame = {
+    val sk = family.slotKeys.map(col)
+    sigs.select(sk ++ Seq(col("doc_id"), col("sig"),
+        explode(array(DedupOps.hammingBandPairKeys(col("sig")): _*)).as("bb")): _*)
+      .select(sk ++ Seq(col("bb.band").as("band"), col("bb.bkey").as("bkey"),
+        col("doc_id"), col("sig")): _*)
+  }
+
+  /** The kb-partitioned membership rows of a signature frame: one per
+    * doc — image and audio frames already are, a video's per-slot rows
+    * collapse through a distinct. */
+  private def phashIds(family: PhashFamily, sigs: DataFrame): DataFrame = {
+    val ids = sigs.select(col("doc_id"))
+    (if (family.slotKeys.isEmpty) ids else ids.distinct())
+      .select(col("doc_id"), DedupOps.keyBucket(col("doc_id")).as("kb"))
+  }
 
   private def populationPath(idx: String) =
     new org.apache.hadoop.fs.Path(s"$idx/_POPULATION")
@@ -1800,58 +1844,59 @@ object MultimodalOps {
     }
   }
 
-  private def requireSigIndex(spark: SparkSession, idx: String,
-                              population: String, rebuildHint: String): Unit = {
+  private def requireSigIndex(spark: SparkSession, family: PhashFamily,
+                              idx: String): Unit = {
     require(graft.operators.VectorOps.hExists(spark, s"$idx/bands/_SUCCESS"),
       s"$idx is not a complete signature index (crashed mid-rebuild? " +
-        s"re-run $rebuildHint)")
+        "re-run phashRebuildIndex)")
     val got = readPopulationMarker(spark, idx)
-    require(got.contains(population),
+    require(got.contains(family.population),
       s"$idx was built under signer population ${got.getOrElse("<pre-marker>")} " +
-        s"but the current signer is $population — its members are missing from " +
-        s"the index and probes would silently miss pairs; re-run $rebuildHint")
+        s"but the current signer is ${family.population} — its members are missing " +
+        "from the index and probes would silently miss pairs; re-run phashRebuildIndex")
   }
 
-  private def requirePhashIndex(spark: SparkSession, idx: String,
-                                population: String = imagePhashPopulation): Unit =
-    requireSigIndex(spark, idx, population, "phashRebuildIndex")
-
-  /** (Re)build the image-signature dedup index from an arbitrary
-    * (doc_id, sig) frame — the state the streaming ingestion sink
+  /** (Re)build a family's signature dedup index from its signature
+    * frame — the state the streaming ingestion sink
     * ([[graft.streaming.Pipelines.phashIndexSink]]) maintains so NEW
-    * images dedup against the corpus without recomputing corpus-wide
+    * payloads dedup against the corpus without recomputing corpus-wide
     * signatures:
     *  - `ids`: the [[DedupOps.keyBucket]]-partitioned membership
-    *    table (kb-pruned already-indexed checks, the minhash-index
-    *    layout — readable through [[DedupOps.indexedIds]]);
+    *    table, one row per doc (kb-pruned already-indexed checks, the
+    *    minhash-index layout — checked through [[DedupOps.unindexed]]);
+    *  - `_POPULATION`: the family's population marker;
     *  - `bands`: the band-pair inverted index, written LAST so
     *    `bands/_SUCCESS` is the build-complete marker.
     * Single-writer contract per index dir (the minhash rule). Unlike
     * the minhash index there is NO frozen-universe drift: the
-    * signature kernel is corpus-independent, so incremental folds
+    * signature kernels are corpus-independent, so incremental folds
     * never degrade and a rebuild is only ever a compaction concern. */
-  def phashRebuildIndex(spark: SparkSession, sigs: DataFrame, idx: String,
-                        population: String = imagePhashPopulation): Unit = {
+  def phashRebuildIndex(spark: SparkSession, family: PhashFamily, sigs: DataFrame,
+                        idx: String): Unit = {
     val s = sigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = s.count()
-      s.select(col("doc_id"), DedupOps.keyBucket(col("doc_id")).as("kb"))
-        .coalesce(graft.operators.VectorOps.appendParts(n))
+      phashIds(family, s).coalesce(graft.operators.VectorOps.appendParts(n))
         .write.mode("overwrite").partitionBy("kb").parquet(s"$idx/ids")
       // population marker BEFORE bands: `bands/_SUCCESS` stays the one
       // completion marker — a crash here leaves an index that fails
       // the completion check, never a marker-less complete index
-      writePopulationMarker(spark, idx, population)
-      phashBands(s).coalesce(graft.operators.VectorOps.appendParts(n * 28))
+      writePopulationMarker(spark, idx, family.population)
+      phashBands(family, s).coalesce(graft.operators.VectorOps.appendParts(n * 28))
         .write.mode("overwrite").parquet(s"$idx/bands")
     } finally s.unpersist()
   }
 
-  /** Build the index over a directory's decodable payloads. */
-  def phashIndexBuild(spark: SparkSession, dir: String, idx: String,
-                      docFilter: Column = lit(true)): Unit =
-    phashRebuildIndex(spark,
-      imagePhashSigsOf(Tables(spark, dir, "documents").filter(docFilter)), idx)
+  /** Build a family's index over a directory's decodable payloads. The
+    * video signer demuxes every payload, so its scan fans out as
+    * [[videoPhashSigs]]' does. */
+  def phashIndexBuild(spark: SparkSession, family: PhashFamily, dir: String, idx: String,
+                      docFilter: Column = lit(true)): Unit = {
+    val docs =
+      if (family.slotKeys.isEmpty) Tables(spark, dir, "documents")
+      else Tables.fanned(spark, dir, "documents")
+    phashRebuildIndex(spark, family, family.signer(docs.filter(docFilter)), idx)
+  }
 
   /** Fold a batch of signatures INTO the index. Crash-safe ordering:
     * the `ids` membership record lands LAST, after the band rows — a
@@ -1859,46 +1904,49 @@ object MultimodalOps {
     * replay re-folds (duplicate band rows are tolerated: the probe's
     * pair set is `distinct()`); the reverse order would be a silent
     * recall hole. Caller owns the one-copy-per-doc_id contract across
-    * calls (the sink anti-joins [[DedupOps.indexedIds]] first), and
+    * calls (the sink folds only [[DedupOps.unindexed]] rows), and
     * `batchSigs` must not be a plan that reads this index's paths
     * (localCheckpoint first, as the sink does). */
-  def phashIndexUpdate(spark: SparkSession, batchSigs: DataFrame, idx: String,
-                       population: String = imagePhashPopulation): Unit = {
-    requirePhashIndex(spark, idx, population)
+  def phashIndexUpdate(spark: SparkSession, family: PhashFamily, batchSigs: DataFrame,
+                       idx: String): Unit = {
+    requireSigIndex(spark, family, idx)
     val s = batchSigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = s.count()
-      phashBands(s).coalesce(graft.operators.VectorOps.appendParts(n * 28))
+      phashBands(family, s).coalesce(graft.operators.VectorOps.appendParts(n * 28))
         .write.mode("append").parquet(s"$idx/bands")
-      s.select(col("doc_id"), DedupOps.keyBucket(col("doc_id")).as("kb"))
-        .coalesce(graft.operators.VectorOps.appendParts(n))
+      phashIds(family, s).coalesce(graft.operators.VectorOps.appendParts(n))
         .write.mode("append").partitionBy("kb").parquet(s"$idx/ids")
     } finally s.unpersist()
   }
 
-  /** Probe a batch of signatures against the index: the batch's 28
-    * pair keys meet the inverted index in one equi-join (batch side
-    * broadcast-sized per trigger), exact Hamming verify at ≤
-    * [[phashMaxHamming]] happens IN the join row (both signatures
-    * present), pairs normalized to doc_a < doc_b and de-duplicated —
-    * so replay-duplicated index rows and both-in-batch double hits
-    * collapse. Output matches [[imagePhash]]'s (doc_a, doc_b,
-    * hamming) exactly: update-before-probe over the whole corpus
-    * reproduces the batch operator's pair set (spec-pinned). */
-  def phashProbeIndex(spark: SparkSession, batchSigs: DataFrame,
-                      idx: String,
-                      population: String = imagePhashPopulation): DataFrame = {
-    requirePhashIndex(spark, idx, population)
+  /** Probe a batch of signatures against the index: the batch's
+    * (slot-keyed) band-pair keys meet the inverted index in one
+    * equi-join, exact Hamming verify at ≤ [[phashMaxHamming]] happens
+    * IN the join row (both signatures present), candidates normalized
+    * to doc_a < doc_b and de-duplicated — so replay-duplicated index
+    * rows and both-in-batch double hits collapse — then the family's
+    * pair step. Output matches the batch operator's ([[imagePhash]],
+    * [[audioPhash]], [[videoPhash]]) exactly: update-before-probe over
+    * the whole corpus reproduces its pair set (spec-pinned). A video's
+    * slots all travel with its payload, so a pair's frames_matched is
+    * complete in whichever trigger sees the pair's second member —
+    * pairs never need cross-trigger re-aggregation. */
+  def phashProbeIndex(spark: SparkSession, family: PhashFamily, batchSigs: DataFrame,
+                      idx: String): DataFrame = {
+    requireSigIndex(spark, family, idx)
+    val keys = family.slotKeys ++ Seq("band", "bkey")
     val bands = Snapshot.read(spark, s"$idx/bands")
-    phashBands(batchSigs)
-      .join(bands.select(col("band"), col("bkey"),
-        col("doc_id").as("old_id"), col("sig").as("old_sig")), Seq("band", "bkey"))
+    family.pairs(phashBands(family, batchSigs)
+      .join(bands.select(keys.map(col) ++ Seq(col("doc_id").as("old_id"),
+        col("sig").as("old_sig")): _*), keys)
       .filter(col("doc_id") =!= col("old_id"))
-      .select(least(col("doc_id"), col("old_id")).as("doc_a"),
+      .select(family.slotKeys.map(col) ++ Seq(
+        least(col("doc_id"), col("old_id")).as("doc_a"),
         greatest(col("doc_id"), col("old_id")).as("doc_b"),
-        bit_count(col("sig").bitwiseXOR(col("old_sig"))).cast("long").as("hamming"))
+        bit_count(col("sig").bitwiseXOR(col("old_sig"))).as("hamming")): _*)
       .filter(col("hamming") <= phashMaxHamming)
-      .distinct()
+      .distinct())
   }
 
   // ---- video-content near-dup (frame-sampled perceptual signature) -----
@@ -1982,7 +2030,7 @@ object MultimodalOps {
 
   /** [[videoPhashSigs]] over an arbitrary (doc_id, text) frame — the
     * per-batch half the streaming ingestion sink runs
-    * ([[graft.streaming.Pipelines.videoPhashIndexSink]]), the
+    * ([[graft.streaming.Pipelines.phashIndexSink]]), the
     * [[imagePhashSigsOf]] contract at the video granularity:
     * identical population gate, demux schedule
     * ([[mp4SampleSchedule]] — the one shared sampler), and signature
@@ -2015,11 +2063,7 @@ object MultimodalOps {
     * geometry spec can drive constructed signatures through the
     * exact production join+aggregate. */
   def videoPhashFromSigs(sigs: DataFrame): DataFrame =
-    DedupOps.hammingBandJoin(sigs, phashMaxHamming, extraKeys = Seq("slot"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).cast("long").as("frames_matched"),
-        min(col("hamming")).cast("long").as("min_hamming"))
-      .filter(col("frames_matched") >= videoMinSharedFrames)
+    phashPairs(videoPhashFamily, sigs)
 
   /** VIDEO-content near-dup pairs — the image→video rung of the
     * perceptual dedup ladder, composed entirely from hash-gated
@@ -2102,95 +2146,6 @@ object MultimodalOps {
   val videoPhashSql: String = videoPhashSqlFor(slice = false)
   val videoPhashSliceSql: String = videoPhashSqlFor(slice = true)
 
-  // ---- video-signature index (streaming ingestion state) ----------------
-
-  /** The slot-keyed band-pair inverted-index rows of a video signature
-    * frame — (slot, band, bkey, doc_id, sig): [[phashBands]] with the
-    * sample instant riding in the key, so a probe only ever meets
-    * same-instant frames ([[videoPhash]]'s join geometry — the
-    * extraKeys multiplication of the key domain, never of candidate
-    * volume). */
-  private def videoPhashBands(sigs: DataFrame): DataFrame =
-    sigs.select(col("doc_id"), col("slot"), col("sig"),
-        explode(array(DedupOps.hammingBandPairKeys(col("sig")): _*)).as("bb"))
-      .select(col("slot"), col("bb.band").as("band"), col("bb.bkey").as("bkey"),
-        col("doc_id"), col("sig"))
-
-  private def requireVideoPhashIndex(spark: SparkSession, idx: String): Unit =
-    requireSigIndex(spark, idx, videoPhashPopulation, "videoPhashRebuildIndex")
-
-  /** (Re)build the video-signature dedup index from a (doc_id, slot,
-    * sig) frame — the [[phashRebuildIndex]] layout one granularity
-    * down: `ids` holds one membership row per VIDEO (kb-partitioned),
-    * `bands` the slot-keyed inverted index, written LAST as the
-    * build-complete marker. Same single-writer and no-drift contracts
-    * (the signature kernel is corpus-independent). */
-  def videoPhashRebuildIndex(spark: SparkSession, sigs: DataFrame, idx: String): Unit = {
-    val s = sigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = s.count()
-      s.select(col("doc_id")).distinct()
-        .select(col("doc_id"), DedupOps.keyBucket(col("doc_id")).as("kb"))
-        .coalesce(graft.operators.VectorOps.appendParts(n))
-        .write.mode("overwrite").partitionBy("kb").parquet(s"$idx/ids")
-      writePopulationMarker(spark, idx, videoPhashPopulation)
-      videoPhashBands(s).coalesce(graft.operators.VectorOps.appendParts(n * 28))
-        .write.mode("overwrite").parquet(s"$idx/bands")
-    } finally s.unpersist()
-  }
-
-  /** Fold a batch of video signatures INTO the index — the
-    * [[phashIndexUpdate]] contract (bands first, ids LAST so a crash
-    * replays the fold; duplicate band rows are tolerated through the
-    * probe's distinct), with the per-video membership row
-    * deduplicated from the per-slot signature rows. */
-  def videoPhashIndexUpdate(spark: SparkSession, batchSigs: DataFrame,
-                            idx: String): Unit = {
-    requireVideoPhashIndex(spark, idx)
-    val s = batchSigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = s.count()
-      videoPhashBands(s).coalesce(graft.operators.VectorOps.appendParts(n * 28))
-        .write.mode("append").parquet(s"$idx/bands")
-      s.select(col("doc_id")).distinct()
-        .select(col("doc_id"), DedupOps.keyBucket(col("doc_id")).as("kb"))
-        .coalesce(graft.operators.VectorOps.appendParts(n))
-        .write.mode("append").partitionBy("kb").parquet(s"$idx/ids")
-    } finally s.unpersist()
-  }
-
-  /** Probe a batch of video signatures against the index: the batch's
-    * slot-keyed pair keys meet the inverted index in one equi-join,
-    * exact Hamming verify in the join row, per-slot hits deduplicated
-    * (replay-duplicated index rows collapse), then the ≥
-    * [[videoMinSharedFrames]] pair aggregate — output matches
-    * [[videoPhash]]'s (doc_a, doc_b, frames_matched, min_hamming)
-    * exactly: update-before-probe over the whole corpus reproduces
-    * the batch operator's pair set (spec-pinned). A video's slots all
-    * travel with its payload, so a pair's frames_matched is complete
-    * in whichever trigger sees the pair's second member — pairs never
-    * need cross-trigger re-aggregation. */
-  def videoPhashProbeIndex(spark: SparkSession, batchSigs: DataFrame,
-                           idx: String): DataFrame = {
-    requireVideoPhashIndex(spark, idx)
-    val bands = Snapshot.read(spark, s"$idx/bands")
-    videoPhashBands(batchSigs)
-      .join(bands.select(col("slot"), col("band"), col("bkey"),
-        col("doc_id").as("old_id"), col("sig").as("old_sig")),
-        Seq("slot", "band", "bkey"))
-      .filter(col("doc_id") =!= col("old_id"))
-      .select(col("slot"),
-        least(col("doc_id"), col("old_id")).as("doc_a"),
-        greatest(col("doc_id"), col("old_id")).as("doc_b"),
-        bit_count(col("sig").bitwiseXOR(col("old_sig"))).as("hamming"))
-      .filter(col("hamming") <= phashMaxHamming)
-      .distinct()
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).cast("long").as("frames_matched"),
-        min(col("hamming")).cast("long").as("min_hamming"))
-      .filter(col("frames_matched") >= videoMinSharedFrames)
-  }
-
   // ---- audio-content near-dup (windowed energy-contour signature) -------
 
   /** Planted perceptual near-dup AUDIO pairs — the [[phashPlanted]]
@@ -2263,9 +2218,7 @@ object MultimodalOps {
     * candidate distinct — the dedup_simhash class; at 100 TB only
     * 16-byte signature rows shuffle, never PCM payloads. */
   def audioPhash(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.hammingBandJoin(audioPhashSigs(spark, dir), phashMaxHamming)
-      .select(col("doc_a"), col("doc_b"),
-        col("hamming").cast("long").as("hamming"))
+    phashPairs(audioPhashFamily, audioPhashSigs(spark, dir))
 
   /** DuckDB twin: identical PCM bytes (planted body or text bytes),
     * identical 65-window integer energies ((b−128)², floor-divided
@@ -2302,18 +2255,4 @@ object MultimodalOps {
        |FROM ap a JOIN ap b ON a.doc_id < b.doc_id
        |WHERE bit_count(xor(a.sig, b.sig)) <= $phashMaxHamming""".stripMargin
   }
-
-  /** Build the audio-signature dedup index over a directory's WAV
-    * payloads — the [[phashIndexBuild]] contract at the audio
-    * granularity: the audio signatures share the image family's
-    * (doc_id, sig) shape, so the banded index layout, fold, and probe
-    * are the SAME machinery ([[phashRebuildIndex]]/[[phashIndexUpdate]]/
-    * [[phashProbeIndex]]) under the [[audioPhashPopulation]] marker —
-    * which also guarantees an audio index and an image index can
-    * never be silently probed for each other. */
-  def audioPhashIndexBuild(spark: SparkSession, dir: String, idx: String,
-                           docFilter: Column = lit(true)): Unit =
-    phashRebuildIndex(spark,
-      audioPhashSigsOf(Tables(spark, dir, "documents").filter(docFilter)), idx,
-      population = audioPhashPopulation)
 }

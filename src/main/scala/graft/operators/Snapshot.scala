@@ -3,9 +3,12 @@ package graft.operators
 import java.util.UUID
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, PartitionSpec, PartitioningAwareFileIndex}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import scala.collection.mutable
 
@@ -199,9 +202,15 @@ object Snapshot {
     * scan and is guaranteed they exist for `graceMs` after any
     * concurrent compaction retires them. Legacy (manifest-less) stores
     * resolve to their full on-disk file set. */
-  def files(spark: SparkSession, dir: String): Seq[String] = {
+  def files(spark: SparkSession, dir: String): Seq[String] =
+    liveFiles(spark, dir)._2.map(_.getPath.toString)
+
+  /** The store's qualified root and the statuses of its live files,
+    * resolved once — for callers that size or [[scan]] the set
+    * themselves. */
+  private[graft] def liveFiles(spark: SparkSession, dir: String): (Path, Vector[FileStatus]) = {
     val (fs, root) = fsOf(spark, dir)
-    resolve(fs, root, dir).map(_.getPath.toString)
+    (root, resolve(fs, root, dir))
   }
 
   /** Snapshot-resolved read of a store dir: a [[scan]] of exactly the
@@ -226,10 +235,10 @@ object Snapshot {
   }
 
   /** Scans exactly `files` (listed statuses under `root`) through a
-    * fixed [[ListedFileIndex]], so no listing job runs. Partition
-    * columns come from the `k=v` directories between `root` and each
-    * file, and partition filters still prune. `schema` (data and
-    * partition columns) skips the footer read that otherwise infers
+    * fixed [[ListedFileIndex]], so no Spark job runs until an action.
+    * Partition columns come from the `k=v` directories between `root`
+    * and each file, and partition filters still prune. `schema` (data
+    * and partition columns) skips the footer read that otherwise infers
     * the data columns; either way the columns read as nullable, as
     * Spark's own file reads make them. */
   private[graft] def scan(spark: SparkSession, root: Path, files: Seq[FileStatus],
@@ -237,10 +246,23 @@ object Snapshot {
     val index = new ListedFileIndex(spark, root, files, schema)
     val parts = index.partitionSchema
     val data = schema.map(s => StructType(s.filterNot(f => parts.fieldNames.contains(f.name))))
-      .orElse(new ParquetFileFormat().inferSchema(spark, Map.empty, files))
-      .getOrElse(throw new IllegalArgumentException(s"no parquet files to scan under $root"))
+      .getOrElse(footerSchema(spark, files.headOption.getOrElse(
+        throw new IllegalArgumentException(s"no parquet files to scan under $root"))))
     spark.baseRelationToDataFrame(HadoopFsRelation(index, parts,
       nullable(data).asInstanceOf[StructType], None, new ParquetFileFormat, Map.empty)(spark))
+  }
+
+  /** The data schema Spark's parquet inference gives a file set whose
+    * schemas are not merged: the first file's footer, its Spark row
+    * metadata when present (field metadata included), else the parquet
+    * schema converted under the session's settings. Read here on the
+    * driver, where the inference would start a job to read it. */
+  private def footerSchema(spark: SparkSession, first: FileStatus): StructType = {
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(first, spark.sessionState.newHadoopConf()),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(first.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
   private def nullable(t: DataType): DataType = t match {

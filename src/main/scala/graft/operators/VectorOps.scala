@@ -1593,8 +1593,8 @@ object VectorOps {
     * membership store — [[DedupOps.keyBucket]]-partitioned, read
     * PRUNED to the incoming batch's key-hash buckets, so the check
     * is bounded by the batch's bucket span (≤ keyBuckets dirs), not
-    * by index history (the minhash index's
-    * [[DedupOps.indexedIds]] layout; pre-ids indexes migrate once on
+    * by index history (the minhash index's `ids` layout, checked
+    * through [[DedupOps.unindexed]]; pre-ids indexes migrate once on
     * first append). A replayed batch is therefore a no-op — and even
     * WITHOUT the guard a duplicate append cannot corrupt results,
     * because every search path collapses duplicate candidates

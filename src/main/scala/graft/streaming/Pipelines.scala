@@ -711,106 +711,41 @@ object Pipelines {
       }
   }
 
-  /** Ingestion-time IMAGE dedup on the stream — the
-    * [[incrementalDedupSink]] pattern at the image-signature
-    * granularity, closing the minhash(text)/vector(embedding)/
-    * phash(image) symmetry: every micro-batch's decodable payloads
-    * are signed ([[graft.operators.MultimodalOps.imagePhashSigsOf]] —
-    * bit-identical to the batch operator's signatures), FOLDED into
-    * the banded signature index
+  /** Ingestion-time PERCEPTUAL dedup on the stream — the
+    * [[incrementalDedupSink]] pattern at the signature granularity, one
+    * sink for the image, audio and video families
+    * ([[graft.operators.MultimodalOps.PhashFamily]]): every
+    * micro-batch's decodable payloads are signed by the family's signer
+    * (bit-identical to the batch operator's signatures), FOLDED into
+    * the family's banded signature index
     * ([[graft.operators.MultimodalOps.phashIndexUpdate]], ids-last
     * crash ordering), then PROBED against it
-    * ([[graft.operators.MultimodalOps.phashProbeIndex]]); verified
-    * Hamming-≤6 pairs land in an idempotently-merged parquet table.
-    * Update-before-probe: two near-identical images in one trigger
-    * pair up, and each image pairs against all earlier triggers
-    * without a rebuild.
+    * ([[graft.operators.MultimodalOps.phashProbeIndex]]); the
+    * family's verified pairs (Hamming ≤ 6; for video, ≥ 2 matching
+    * instants) land in an idempotently-merged parquet table.
+    * Update-before-probe: two near-identical payloads in one trigger
+    * pair up, and each pairs against all earlier triggers without a
+    * rebuild. A video's slots all travel with its payload, so its pair
+    * aggregate is complete in the trigger that sees the second member.
     *
     * Unlike the minhash sink there is no frozen-universe drift (the
-    * signature kernel is corpus-independent), so no driftlog seat —
+    * signature kernels are corpus-independent), so no driftlog seat —
     * incremental folds never decay and rebuilds are purely a
     * compaction concern. Exactly-once pairs under redelivery and
-    * replay, the [[tableSink]] contract: the already-indexed check
-    * prunes the kb-partitioned `ids` table to the batch's buckets
-    * ([[graft.operators.DedupOps.indexedIds]] — the stores share the
-    * minhash layout), the pair table is kb-partitioned on
-    * (doc_a, doc_b) and anti-joined before each append, and a
-    * replayed fold's duplicate band rows collapse in the probe's
-    * distinct. Per-trigger row work is batch-bounded; the file-count
-    * tail is held flat by the same snapshot-isolated tiered
+    * replay, the [[tableSink]] contract: only signatures the index
+    * does not hold are folded ([[graft.operators.DedupOps.unindexed]],
+    * pruned to the batch's buckets of the kb-partitioned `ids` table —
+    * the stores share the minhash layout), the pair table is
+    * kb-partitioned on (doc_a, doc_b) and anti-joined before each
+    * append, and a replayed fold's duplicate band rows collapse in the
+    * probe's distinct. Per-trigger row work is batch-bounded; the
+    * file-count tail is held flat by the same snapshot-isolated tiered
     * compaction as the other index sinks. */
-  def phashIndexSink(messages: DataFrame, indexDir: String,
-                     tablePath: String,
+  def phashIndexSink(messages: DataFrame,
+                     family: graft.operators.MultimodalOps.PhashFamily,
+                     indexDir: String, tablePath: String,
                      graceMs: Long = graft.operators.Snapshot.DefaultGraceMs)
-      : DataStreamWriter[Row] =
-    sigIndexSink(messages, graft.operators.MultimodalOps.imagePhashSigsOf,
-      Seq("doc_id", "sig"),
-      graft.operators.MultimodalOps.phashIndexUpdate(_, _, _,
-        graft.operators.MultimodalOps.imagePhashPopulation),
-      graft.operators.MultimodalOps.phashProbeIndex(_, _, _,
-        graft.operators.MultimodalOps.imagePhashPopulation),
-      indexDir, tablePath, graceMs)
-
-  /** Ingestion-time AUDIO dedup on the stream — the FIFTH signature
-    * family's batch/stream symmetry (r17): [[phashIndexSink]]'s exact
-    * composition with [[graft.operators.MultimodalOps.audioPhashSigsOf]]
-    * as the per-batch signer. Audio signatures share the image
-    * family's (doc_id, sig) shape, so the fold/probe/idempotency
-    * machinery is literally the same code under the audio population
-    * marker; like the image and video sinks there is no driftlog seat
-    * (the energy-contour kernel is corpus-independent — folds never
-    * decay, rebuilds are a compaction concern). */
-  def audioPhashIndexSink(messages: DataFrame, indexDir: String,
-                          tablePath: String,
-                          graceMs: Long = graft.operators.Snapshot.DefaultGraceMs)
-      : DataStreamWriter[Row] =
-    sigIndexSink(messages, graft.operators.MultimodalOps.audioPhashSigsOf,
-      Seq("doc_id", "sig"),
-      graft.operators.MultimodalOps.phashIndexUpdate(_, _, _,
-        graft.operators.MultimodalOps.audioPhashPopulation),
-      graft.operators.MultimodalOps.phashProbeIndex(_, _, _,
-        graft.operators.MultimodalOps.audioPhashPopulation),
-      indexDir, tablePath, graceMs)
-
-  /** Ingestion-time VIDEO dedup on the stream — the [[phashIndexSink]]
-    * composition at the video granularity, closing the batch/stream
-    * symmetry for the fourth signature family: every micro-batch's
-    * demuxable payloads are signed per sample instant
-    * ([[graft.operators.MultimodalOps.videoPhashSigsOf]] — the one
-    * shared demux sampler, bit-identical to the batch operator's
-    * (doc_id, slot, sig) rows), FOLDED into the slot-keyed banded
-    * index ([[graft.operators.MultimodalOps.videoPhashIndexUpdate]],
-    * ids-last crash ordering), then PROBED against it
-    * ([[graft.operators.MultimodalOps.videoPhashProbeIndex]]); pairs
-    * matching on ≥ 2 instants at Hamming ≤ 6 land in the
-    * idempotently-merged parquet table. Update-before-probe: a
-    * video's slots all travel with its payload, so a pair's
-    * frames_matched is complete in whichever trigger sees the second
-    * member — no cross-trigger pair re-aggregation, and the pair
-    * table's (doc_a, doc_b) anti-join stays the whole idempotency
-    * story (the image sink's contract, slot-keyed). No driftlog seat:
-    * the signature kernel is corpus-independent, like the image one. */
-  def videoPhashIndexSink(messages: DataFrame, indexDir: String,
-                          tablePath: String,
-                          graceMs: Long = graft.operators.Snapshot.DefaultGraceMs)
-      : DataStreamWriter[Row] =
-    sigIndexSink(messages, graft.operators.MultimodalOps.videoPhashSigsOf,
-      Seq("doc_id", "slot", "sig"), graft.operators.MultimodalOps.videoPhashIndexUpdate,
-      graft.operators.MultimodalOps.videoPhashProbeIndex, indexDir, tablePath, graceMs)
-
-  /** The shared signature-ingestion sink the image, audio and video
-    * families instantiate: `signer` signs each trigger's latest doc
-    * versions into `sigCols` rows, `update` folds the genuinely new
-    * ones into the banded index and `probe` pairs the whole batch
-    * against it (update-before-probe); the pairs land in the
-    * idempotently-merged table under `tablePath`. */
-  private def sigIndexSink(messages: DataFrame,
-                           signer: DataFrame => DataFrame,
-                           sigCols: Seq[String],
-                           update: (SparkSession, DataFrame, String) => Unit,
-                           probe: (SparkSession, DataFrame, String) => DataFrame,
-                           indexDir: String, tablePath: String,
-                           graceMs: Long): DataStreamWriter[Row] = {
+      : DataStreamWriter[Row] = {
     val pairKeys = new TableKeys(tablePath + "/data", Seq("doc_a", "doc_b"), Seq("kb"))
     messages.writeStream
       .outputMode("append")
@@ -821,13 +756,15 @@ object Pipelines {
         // because the sigs feed the membership anti-join, the fold,
         // and the probe — and the fold appends to paths the probe
         // reads (the incrementalDedupSink self-scan rule)
-        val sigs = signer(latestDocVersion(batch))
+        val sigs = family.signer(latestDocVersion(batch))
           .withColumn("kb", graft.operators.DedupOps.keyBucket(col("doc_id")))
           .localCheckpoint(true)
         val newSigs = graft.operators.DedupOps.unindexed(sigs, indexDir, "doc_id")
-          .select(sigCols.map(col): _*).localCheckpoint(true)
-        if (!newSigs.isEmpty) update(spark, newSigs, indexDir)
-        val pairs = probe(spark, sigs.select(sigCols.map(col): _*), indexDir)
+          .drop("kb").localCheckpoint(true)
+        if (!newSigs.isEmpty)
+          graft.operators.MultimodalOps.phashIndexUpdate(spark, family, newSigs, indexDir)
+        val pairs = graft.operators.MultimodalOps
+          .phashProbeIndex(spark, family, sigs.drop("kb"), indexDir)
           .withColumn("kb",
             graft.operators.DedupOps.keyBucket(col("doc_a"), col("doc_b")))
           .localCheckpoint(true)

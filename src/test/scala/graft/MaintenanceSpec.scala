@@ -567,15 +567,24 @@ class MaintenanceSpec extends AnyFunSuite {
       (rows ++ (5000L until 5003L)).sorted)
   }
 
-  test("snapshot compaction of a partitioned store keeps layout and pruning") {
-    val dir = tmp("graft-snap-part")
-    val base = spark.range(200)
-      .select(col("id").as("doc_id"),
-        operators.DedupOps.keyBucket(col("id")).as("kb"))
+  /** 200 doc ids kb-partitioned in 12 appends: each of ~60 leaves
+    * accretes a few small files, the file-per-trigger shape. */
+  private def kbBase = spark.range(200)
+    .select(col("id").as("doc_id"),
+      operators.DedupOps.keyBucket(col("id")).as("kb"))
+
+  private def kbStore(prefix: String): String = {
+    val dir = tmp(prefix)
     (0 until 12).foreach { i =>
-      base.filter(col("doc_id") % 12 === i)
+      kbBase.filter(col("doc_id") % 12 === i)
         .write.mode("append").partitionBy("kb").parquet(dir)
     }
+    dir
+  }
+
+  test("snapshot compaction of a partitioned store keeps layout and pruning") {
+    val dir = kbStore("graft-snap-part")
+    val base = kbBase
     def docs(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     val rows = docs(spark.read.parquet(dir))
@@ -624,5 +633,46 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(allParquet(new java.io.File(dir)).length ===
       operators.Snapshot.files(spark, dir).length)
     assert(docs(operators.Snapshot.read(spark, dir)) === rows)
+  }
+
+  test("compacting a snapshot-managed store copies only its live rows") {
+    val dir = kbStore("graft-snap-copy")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select("doc_id", "kb").collect()
+      .map(r => (r.getLong(0), r.getInt(1))).toSeq.sorted
+    val expected = rows(kbBase)
+    // the merge retires the small files but keeps them on disk for the
+    // grace window: only the manifest at the store root says they are gone
+    assert(operators.Snapshot.compactTieredPartitioned(spark, dir,
+      maxFilesPerLeaf = 2, graceMs = 24L * 3600 * 1000) > 0)
+    val dst = tmp("graft-snap-copy-part")
+    operators.Maintenance.compactPartitioned(spark, dir, dst, targetBytes = 256L << 20)
+    assert(spark.read.parquet(dst).count() === expected.size)
+    assert(rows(spark.read.parquet(dst)) === expected,
+      "a partitioned compaction must copy exactly the store's live rows")
+    // the target file count comes from the live bytes, not the retired ones
+    val liveBytes = operators.Snapshot.files(spark, dir)
+      .map(f => new java.io.File(new java.net.URI(f)).length).sum
+    val flat = tmp("graft-snap-copy-flat")
+    assert(operators.Maintenance.compactTable(spark, dir, flat,
+      targetBytes = liveBytes / 2 + 1) === 2)
+    assert(rows(spark.read.parquet(flat)) === expected)
+  }
+
+  test("building a snapshot read starts no Spark job and keeps Spark's schema") {
+    val dir = kbStore("graft-snap-nojob")
+    var read: org.apache.spark.sql.DataFrame = null
+    val jobs = SparkSpec.jobsStarted { read = operators.Snapshot.read(spark, dir) }
+    assert(jobs.isEmpty, s"building the read started ${jobs.size} job(s): $jobs")
+    // the schema Spark's own read gives: nullable data columns, then kb
+    assert(read.schema === spark.read.parquet(dir).schema)
+    // Spark's row metadata is read from the footer: field metadata survives
+    val meta = new org.apache.spark.sql.types.MetadataBuilder()
+      .putString("unit", "doc").build()
+    val flat = tmp("graft-snap-meta")
+    spark.range(3).select(col("id").as("doc_id", meta))
+      .write.mode("overwrite").parquet(flat)
+    val flatRead = operators.Snapshot.read(spark, flat)
+    assert(flatRead.schema("doc_id").metadata === meta)
+    assert(flatRead.schema === spark.read.parquet(flat).schema)
   }
 }

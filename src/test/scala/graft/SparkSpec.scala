@@ -22,20 +22,20 @@ object SparkSpec {
   def listingJobs(jobs: Iterable[String]): Seq[String] =
     jobs.filter(_.contains("Listing leaf files and directories")).toSeq
 
-  /** Runs `body` and returns the descriptions of the Spark jobs it
-    * started (`spark.job.description`; a job without one is left out).
-    * The listener bus is asynchronous, so a marker job in its own group
-    * fences the collection. */
-  def jobDescriptions(body: => Any): Seq[String] = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  /** Runs `body` and returns one entry per Spark job it started: the
+    * job's description (`spark.job.description`), or None for a job
+    * without one. The listener bus is asynchronous, so a marker job in
+    * its own group fences the collection. */
+  def jobsStarted(body: => Any): Seq[Option[String]] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
     val marker = s"graft-job-fence-${java.util.UUID.randomUUID()}"
     val fenced = new java.util.concurrent.CountDownLatch(1)
     val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).foreach { p =>
-          if (p.getProperty("spark.jobGroup.id") == marker) fenced.countDown()
-          else Option(p.getProperty("spark.job.description")).foreach(seen.add)
-        }
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        if (p.exists(_.getProperty("spark.jobGroup.id") == marker)) fenced.countDown()
+        else seen.add(p.flatMap(q => Option(q.getProperty("spark.job.description"))))
+      }
     }
     spark.sparkContext.addSparkListener(listener)
     try {
@@ -44,6 +44,10 @@ object SparkSpec {
       try spark.range(1).collect() finally spark.sparkContext.clearJobGroup()
       assert(fenced.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener fence never arrived")
     } finally spark.sparkContext.removeSparkListener(listener)
-    seen.toArray(Array.empty[String]).toSeq
+    seen.toArray(Array.empty[Option[String]]).toSeq
   }
+
+  /** The descriptions of the Spark jobs `body` started; a job without
+    * one is left out. */
+  def jobDescriptions(body: => Any): Seq[String] = jobsStarted(body).flatten
 }

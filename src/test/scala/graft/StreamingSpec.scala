@@ -936,46 +936,55 @@ class StreamingSpec extends AnyFunSuite {
     assert(spark.read.parquet(table + "/data").count() === streamed.size)
   }
 
-  test("streaming phash ingestion: stream-probed image pairs equal the " +
-    "batch operator on pairs touching the stream, replay is a no-op") {
+  /** The signature-sink ingestion contract on one family: an index
+    * prebuilt over the docs below `cut`, the rest (of container tag
+    * `tag` mod 8 only, when given) streamed in small triggers, so
+    * cross-trigger pairs must go through the INDEX, not batch
+    * locality. Stream-probed pairs must equal the batch operator's
+    * pairs touching the stream (prebuilt-prebuilt pairs are never
+    * probed), at least one prebuilt×streamed pair must exist, and a
+    * full replay from a fresh checkpoint must re-derive pairs that
+    * anti-join away without re-folding already-indexed docs. */
+  private def sigSinkIngestion(family: operators.MultimodalOps.PhashFamily, sf: String,
+                               cut: Long, tag: Option[Long], perTrigger: Long,
+                               batchPairs: => org.apache.spark.sql.DataFrame,
+                               members: String): Unit = {
     val broker = tmpDir("graft-broker")
-    val table = tmpDir("graft-phash-table")
-    val idx = tmpDir("graft-phidx-stream")
-    val sf = SparkSpec.sf
-    val cut = 100L // docs below stream in later; docs under cut pre-build
-    operators.MultimodalOps.phashIndexBuild(spark, sf, idx,
-      col("doc_id") < cut)
+    val table = tmpDir("graft-sig-table")
+    val idx = tmpDir("graft-sigidx-stream")
+    operators.MultimodalOps.phashIndexBuild(spark, family, sf, idx, col("doc_id") < cut)
     val incoming = Tables(spark, sf, "documents")
-      .filter(col("doc_id") >= cut).select("doc_id", "text").collect()
+      .filter(col("doc_id") >= cut &&
+        tag.fold(lit(true))(t => pmod(col("doc_id"), lit(8L)) === t))
+      .select("doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getString(1)))
     GraftQueueBroker.publish(broker, "docs", incoming.map { case (id, text) =>
       GraftQueueBroker.textMsg(id, 1700000000000000L + id * 1000000L, "t/docs/0", text)
     })
     def run(ckpt: String): Unit = {
-      // small trigger cap: planted pairs like (98 prebuilt, 138 streamed)
-      // and cross-trigger arrivals must go through the INDEX, not batch
-      // locality
       val msgs = Pipelines.readQueues(spark, broker, Seq("docs"),
-        maxRecordsPerTrigger = Some(100))
-      val q = Pipelines.phashIndexSink(msgs, idx, table)
+        maxRecordsPerTrigger = Some(perTrigger))
+      val q = Pipelines.phashIndexSink(msgs, family, idx, table)
         .option("checkpointLocation", ckpt).start()
       try q.processAllAvailable() finally q.stop()
     }
     run(tmpDir("graft-ckpt"))
-    def tablePairs() = spark.read.parquet(table + "/data")
-      .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
-        r.getAs[Long]("hamming"))).toSet
+    // every pair column is a long: (doc_a, doc_b, hamming) or (doc_a,
+    // doc_b, frames_matched, min_hamming)
+    val batchDf = batchPairs
+    def longs(df: org.apache.spark.sql.DataFrame) =
+      df.select(batchDf.columns.map(col).toSeq: _*).collect()
+        .map(r => r.toSeq.map(_.asInstanceOf[Long])).toSet
+    def tablePairs() = longs(spark.read.parquet(table + "/data"))
     // the ingestion contract: every batch pair TOUCHING the streamed
     // slice (prebuilt-prebuilt pairs were never probed)
-    val batch = operators.MultimodalOps.imagePhash(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .filter(p => p._1 >= cut || p._2 >= cut).toSet
+    val batch = longs(batchDf).filter(p => p(0) >= cut || p(1) >= cut)
     val streamed = tablePairs()
     assert(batch.nonEmpty && streamed === batch,
       "stream-probed pairs must equal the batch operator's touching pairs")
     assert(spark.read.parquet(table + "/data").count() === streamed.size,
       "duplicate pairs must be merged away")
-    assert(streamed.exists { case (a, b, _) => a < cut && b >= cut },
+    assert(streamed.exists(p => p(0) < cut && p(1) >= cut),
       "expected a pair between a prebuilt and a streamed doc (index path)")
     val idsBefore = operators.Snapshot.read(spark, idx + "/ids").count()
     // full replay from a fresh checkpoint: pairs re-derive and anti-join
@@ -984,7 +993,16 @@ class StreamingSpec extends AnyFunSuite {
     assert(tablePairs() === batch)
     assert(spark.read.parquet(table + "/data").count() === streamed.size)
     assert(operators.Snapshot.read(spark, idx + "/ids").count() === idsBefore,
-      "replay must not re-fold already-indexed docs")
+      s"replay must not re-fold already-indexed $members")
+  }
+
+  test("streaming phash ingestion: stream-probed image pairs equal the " +
+    "batch operator on pairs touching the stream, replay is a no-op") {
+    // every tag streams; planted pairs like (98 prebuilt, 138 streamed)
+    // cross the cut
+    sigSinkIngestion(operators.MultimodalOps.imagePhashFamily, SparkSpec.sf,
+      cut = 100L, tag = None, perTrigger = 100,
+      operators.MultimodalOps.imagePhash(spark, SparkSpec.sf), "docs")
   }
 
   test("pre-kb pair table: an index sink fails fast before appending a pair") {
@@ -993,7 +1011,8 @@ class StreamingSpec extends AnyFunSuite {
     val idx = tmpDir("graft-phidx-prekb")
     val sf = SparkSpec.sf
     val cut = 100L
-    operators.MultimodalOps.phashIndexBuild(spark, sf, idx, col("doc_id") < cut)
+    operators.MultimodalOps.phashIndexBuild(spark,
+      operators.MultimodalOps.imagePhashFamily, sf, idx, col("doc_id") < cut)
     val incoming = Tables(spark, sf, "documents")
       .filter(col("doc_id") >= cut).select("doc_id", "text").collect()
     GraftQueueBroker.publish(broker, "docs", incoming.map { r =>
@@ -1005,7 +1024,8 @@ class StreamingSpec extends AnyFunSuite {
     Seq((1L, 2L, 3L), (4L, 5L, 6L)).toDF("doc_a", "doc_b", "hamming")
       .write.parquet(table + "/data")
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      val q = Pipelines.phashIndexSink(Pipelines.readQueues(spark, broker, Seq("docs")), idx, table)
+      val q = Pipelines.phashIndexSink(Pipelines.readQueues(spark, broker, Seq("docs")),
+        operators.MultimodalOps.imagePhashFamily, idx, table)
         .option("checkpointLocation", tmpDir("graft-ckpt")).start()
       try q.processAllAvailable() finally q.stop()
     }
@@ -1019,140 +1039,80 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming audio-phash ingestion: stream-probed audio pairs equal " +
     "the batch operator on pairs touching the stream, replay is a no-op") {
-    val broker = tmpDir("graft-broker")
-    val table = tmpDir("graft-aphash-table")
-    val idx = tmpDir("graft-aphidx-stream")
-    val sf = SparkSpec.sf
-    val cut = 100L // group (19,59) pre-builds whole; (99,139) crosses the cut
-    operators.MultimodalOps.audioPhashIndexBuild(spark, sf, idx,
-      col("doc_id") < cut)
-    // only the WAV tag streams — other tags never sign
-    val incoming = Tables(spark, sf, "documents")
-      .filter(col("doc_id") >= cut && pmod(col("doc_id"), lit(8L)) === 3)
-      .select("doc_id", "text").collect()
-      .map(r => (r.getLong(0), r.getString(1)))
-    GraftQueueBroker.publish(broker, "docs", incoming.map { case (id, text) =>
-      GraftQueueBroker.textMsg(id, 1700000000000000L + id * 1000000L, "t/docs/0", text)
-    })
-    def run(ckpt: String): Unit = {
-      // small trigger cap: cross-trigger pairs must go through the
-      // INDEX, not batch locality
-      val msgs = Pipelines.readQueues(spark, broker, Seq("docs"),
-        maxRecordsPerTrigger = Some(10))
-      val q = Pipelines.audioPhashIndexSink(msgs, idx, table)
-        .option("checkpointLocation", ckpt).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    run(tmpDir("graft-ckpt"))
-    def tablePairs() = spark.read.parquet(table + "/data")
-      .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
-        r.getAs[Long]("hamming"))).toSet
-    // the ingestion contract: every batch pair TOUCHING the streamed
-    // slice (prebuilt-prebuilt pairs were never probed)
-    val batch = operators.MultimodalOps.audioPhash(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .filter(p => p._1 >= cut || p._2 >= cut).toSet
-    val streamed = tablePairs()
-    assert(batch.nonEmpty && streamed === batch,
-      "stream-probed pairs must equal the batch operator's touching pairs")
-    assert(spark.read.parquet(table + "/data").count() === streamed.size,
-      "duplicate pairs must be merged away")
-    assert(streamed.exists { case (a, b, _) => a < cut && b >= cut },
-      "expected a pair between a prebuilt and a streamed doc (index path)")
-    val idsBefore = operators.Snapshot.read(spark, idx + "/ids").count()
-    // full replay from a fresh checkpoint: pairs re-derive and anti-join
-    // away; already-indexed docs must not re-fold
-    run(tmpDir("graft-ckpt"))
-    assert(tablePairs() === batch)
-    assert(spark.read.parquet(table + "/data").count() === streamed.size)
-    assert(operators.Snapshot.read(spark, idx + "/ids").count() === idsBefore,
-      "replay must not re-fold already-indexed audios")
+    // group (19,59) pre-builds whole; (99,139) crosses the cut. Only the
+    // WAV tag streams — other tags never sign
+    sigSinkIngestion(operators.MultimodalOps.audioPhashFamily, SparkSpec.sf,
+      cut = 100L, tag = Some(3L), perTrigger = 10,
+      operators.MultimodalOps.audioPhash(spark, SparkSpec.sf), "audios")
   }
 
   test("signature-index population markers: a stale or missing marker fails " +
     "loud with a rebuild message, and families never cross-probe") {
+    import operators.MultimodalOps.{audioPhashFamily, imagePhashFamily, phashIndexBuild,
+      phashProbeIndex, phashRebuildIndex, videoPhashFamily}
     val sf = SparkSpec.sf
     val idx = tmpDir("graft-phidx-marker")
-    operators.MultimodalOps.phashIndexBuild(spark, sf, idx)
+    phashIndexBuild(spark, imagePhashFamily, sf, idx)
     // healthy: the probe accepts the index it just built
     val sigs = operators.MultimodalOps.imagePhashSigs(spark, sf).limit(1)
-    operators.MultimodalOps.phashProbeIndex(spark, sigs, idx).count()
+    phashProbeIndex(spark, imagePhashFamily, sigs, idx).count()
     // an image index is NOT an audio index: the same layout under the
     // wrong population marker must fail loud, not silently miss pairs
     val crossEx = intercept[IllegalArgumentException] {
-      operators.MultimodalOps.phashProbeIndex(spark, sigs, idx,
-        operators.MultimodalOps.audioPhashPopulation).count()
+      phashProbeIndex(spark, audioPhashFamily, sigs, idx).count()
     }
     assert(crossEx.getMessage.contains("re-run"), crossEx.getMessage)
+    // nor is a video index an image index, and the reverse: a constructed
+    // (doc_id, slot, sig) frame builds a healthy video index
+    import spark.implicits._
+    val vidx = tmpDir("graft-vphidx-marker")
+    val vsigs = Seq((1L, 0, 5L), (2L, 0, 7L), (2L, 1, 9L)).toDF("doc_id", "slot", "sig")
+    phashRebuildIndex(spark, videoPhashFamily, vsigs, vidx)
+    phashProbeIndex(spark, videoPhashFamily, vsigs, vidx).count()
+    val videoAsImage = intercept[IllegalArgumentException] {
+      phashProbeIndex(spark, imagePhashFamily, sigs, vidx).count()
+    }
+    assert(videoAsImage.getMessage.contains("re-run"), videoAsImage.getMessage)
+    val imageAsVideo = intercept[IllegalArgumentException] {
+      phashProbeIndex(spark, videoPhashFamily, vsigs, idx).count()
+    }
+    assert(imageAsVideo.getMessage.contains("re-run"), imageAsVideo.getMessage)
     // a marker-less index (pre-r17 build: predates the GIF widening's
-    // gate) must fail loud with the rebuild hint
-    val p = new org.apache.hadoop.fs.Path(s"$idx/_POPULATION")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false)
+    // gate) must fail loud with the rebuild hint — for every family
+    def dropMarker(i: String): Unit = {
+      val p = new org.apache.hadoop.fs.Path(s"$i/_POPULATION")
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false)
+    }
+    dropMarker(idx)
     val staleEx = intercept[IllegalArgumentException] {
-      operators.MultimodalOps.phashProbeIndex(spark, sigs, idx).count()
+      phashProbeIndex(spark, imagePhashFamily, sigs, idx).count()
     }
     assert(staleEx.getMessage.contains("pre-marker") &&
       staleEx.getMessage.contains("re-run phashRebuildIndex"), staleEx.getMessage)
+    dropMarker(vidx)
+    val videoStale = intercept[IllegalArgumentException] {
+      phashProbeIndex(spark, videoPhashFamily, vsigs, vidx).count()
+    }
+    assert(videoStale.getMessage.contains("pre-marker") &&
+      videoStale.getMessage.contains("re-run phashRebuildIndex"), videoStale.getMessage)
     // a rebuild under the current signer heals it
-    operators.MultimodalOps.phashIndexBuild(spark, sf, idx)
-    operators.MultimodalOps.phashProbeIndex(spark, sigs, idx).count()
+    phashIndexBuild(spark, imagePhashFamily, sf, idx)
+    phashProbeIndex(spark, imagePhashFamily, sigs, idx).count()
   }
 
   test("streaming video-phash ingestion: stream-probed video pairs equal " +
     "the batch operator on pairs touching the stream, replay is a no-op") {
     // sf0.01: the planted video classes (mod 320) need ≥ 199 docs
     assume(SparkSpec.sf01Available, s"${SparkSpec.sf01} absent — skipping")
-    val broker = tmpDir("graft-broker")
-    val table = tmpDir("graft-vphash-table")
-    val idx = tmpDir("graft-vphidx-stream")
-    val sf = SparkSpec.sf01
-    val cut = 100L // docs below pre-build; group 0's planted pair (70, 198) crosses
-    operators.MultimodalOps.videoPhashRebuildIndex(spark,
-      operators.MultimodalOps.videoPhashSigs(spark, sf, col("doc_id") < cut), idx)
-    // only the video tag streams: other tags never sign, and the full
-    // sf0.01 backlog would stretch the trigger count for nothing
-    val incoming = Tables(spark, sf, "documents")
-      .filter(col("doc_id") >= cut && pmod(col("doc_id"), lit(8L)) === 6)
-      .select("doc_id", "text").collect()
-      .map(r => (r.getLong(0), r.getString(1)))
-    GraftQueueBroker.publish(broker, "docs", incoming.map { case (id, text) =>
-      GraftQueueBroker.textMsg(id, 1700000000000000L + id * 1000000L, "t/docs/0", text)
-    })
-    def run(ckpt: String): Unit = {
-      // small trigger cap: cross-trigger pairs must go through the
-      // INDEX, not batch locality
-      val msgs = Pipelines.readQueues(spark, broker, Seq("docs"),
-        maxRecordsPerTrigger = Some(20))
-      val q = Pipelines.videoPhashIndexSink(msgs, idx, table)
-        .option("checkpointLocation", ckpt).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    run(tmpDir("graft-ckpt"))
-    def tablePairs() = spark.read.parquet(table + "/data")
-      .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
-        r.getAs[Long]("frames_matched"), r.getAs[Long]("min_hamming"))).toSet
-    // the ingestion contract: every batch pair TOUCHING the streamed
-    // slice, with IDENTICAL frames_matched/min_hamming (a video's
-    // slots all travel with its payload, so pair aggregates are
-    // complete in the trigger that sees the second member)
-    val batch = operators.MultimodalOps.videoPhash(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .filter(p => p._1 >= cut || p._2 >= cut).toSet
-    val streamed = tablePairs()
-    assert(batch.nonEmpty && streamed === batch,
-      "stream-probed pairs must equal the batch operator's touching pairs")
-    assert(spark.read.parquet(table + "/data").count() === streamed.size,
-      "duplicate pairs must be merged away")
-    assert(streamed.exists { case (a, b, _, _) => a < cut && b >= cut },
-      "expected a pair between a prebuilt and a streamed doc (index path)")
-    val idsBefore = operators.Snapshot.read(spark, idx + "/ids").count()
-    // full replay from a fresh checkpoint: pairs re-derive and anti-join
-    // away; already-indexed docs must not re-fold
-    run(tmpDir("graft-ckpt"))
-    assert(tablePairs() === batch)
-    assert(spark.read.parquet(table + "/data").count() === streamed.size)
-    assert(operators.Snapshot.read(spark, idx + "/ids").count() === idsBefore,
-      "replay must not re-fold already-indexed videos")
+    // group 0's planted pair (70, 198) crosses the cut. Only the video
+    // tag streams: other tags never sign, and the full sf0.01 backlog
+    // would stretch the trigger count for nothing. Pairs must match
+    // with IDENTICAL frames_matched/min_hamming (a video's slots all
+    // travel with its payload, so pair aggregates are complete in the
+    // trigger that sees the second member)
+    sigSinkIngestion(operators.MultimodalOps.videoPhashFamily, SparkSpec.sf01,
+      cut = 100L, tag = Some(6L), perTrigger = 20,
+      operators.MultimodalOps.videoPhash(spark, SparkSpec.sf01), "videos")
   }
 
   test("dedup sink drift log: in-vocabulary triggers record clean, novel-vocabulary ones flag") {
