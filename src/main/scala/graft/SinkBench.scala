@@ -54,7 +54,7 @@ object SinkBench {
     // the steady state a real deployment (grace ≪ run length) sees.
     val graceMs = args.lift(4).map(_.toLong)
       .getOrElse(operators.Snapshot.DefaultGraceMs)
-    // dedup mode: how many doc_id%10 residues stream (rest are
+    // document modes: how many doc_id%10 residues stream (rest are
     // indexed). Default 1 = the historical {7} slice; larger widths
     // exist to push rows/trigger toward REAL batch sizes (10⁴) that
     // the 10% slice cannot reach while keeping ≥36 triggers — the
