@@ -1,9 +1,12 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Benchmark main (driver contract): times every SparkEntry query at
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
-  * Each query is warmed once at sf0.001 first (untimed), then timed
+  * Each query is warmed once at sf0.001 first (untimed; a warm-up
+  * failure is kept in the artifact's `error_causes`), then timed
   * three times at the target SF in deterministic (sorted) order. The
   * headline per-query number is the minimum — steady-state operator
   * cost, not JIT/GC noise — and a "spread" map carries [min, max] per
@@ -50,9 +53,7 @@ object Bench {
       require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
       all.filter { case (n, _) => want(n) }
     }
-    queries.foreach { case (_, fn) =>
-      try fn(spark, warmDir).count() catch { case _: Throwable => () }
-    }
+    val warmCauses = warmUp(spark, queries, warmDir)
 
     // A query that throws reports -1 (never a misleading elapsed time)
     // and is listed under "errors"; its first exception is kept for the
@@ -130,16 +131,36 @@ object Bench {
     println(prefix(omitted, keptMap))
     // Defensive full-precision copy: a truncated stdout capture must
     // not lose the round's numbers.
-    import HostStat.jsonString
-    val errorCauses = causes.map { case (k, e) =>
-      val cls = jsonString(e.getClass.getName)
-      val msg = jsonString(String.valueOf(e.getMessage))
-      s"""${jsonString(k)}:{"class":$cls,"message":$msg}"""
-    }.mkString("{", ",", "}")
+    val errorCauses = errorCausesJson(causes, warmCauses)
     val line = s"""{"metric":"total","value":$total,"unit":"sec","steal_ticks":$stealTotal,"queries":$qs,"spread":$spread,"steal":$steal,"errors":$errors,"error_causes":$errorCauses,"sf":"$sfDir"}"""
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench-results.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), line + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] artifact write failed: $e") }
     spark.stop()
+  }
+
+  /** Runs each query once over `dir`, untimed, and returns the first
+    * failure of every query that threw. */
+  private[graft] def warmUp(spark: SparkSession,
+                            queries: Seq[(String, (SparkSession, String) => DataFrame)],
+                            dir: String): Seq[(String, Throwable)] =
+    queries.flatMap { case (name, fn) =>
+      try { fn(spark, dir).count(); None } catch { case e: Throwable => Some(name -> e) }
+    }
+
+  /** The artifact's `error_causes`: per failing query, the first
+    * timed-run exception (`class`, `message`) and, when the warm-up
+    * failed too, its exception under `warmup`. */
+  private[graft] def errorCausesJson(timed: collection.Map[String, Throwable],
+                                     warm: Seq[(String, Throwable)]): String = {
+    import HostStat.jsonString
+    def cause(e: Throwable) =
+      s""""class":${jsonString(e.getClass.getName)},"message":${jsonString(String.valueOf(e.getMessage))}"""
+    val warmOf = warm.toMap
+    (timed.keys ++ warm.map(_._1)).toSeq.distinct.map { k =>
+      val fields = timed.get(k).map(cause).toSeq ++
+        warmOf.get(k).map(e => s""""warmup":{${cause(e)}}""")
+      jsonString(k) + fields.mkString(":{", ",", "}")
+    }.mkString("{", ",", "}")
   }
 }

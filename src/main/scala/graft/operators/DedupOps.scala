@@ -390,30 +390,13 @@ object DedupOps {
     * ([[dupClusterBest]], [[docSplitLeakproof]]) instead of paying
     * the O(pairs × diameter) propagation per call. */
   def dupClustersOf(pairs0: DataFrame): DataFrame = {
-    val spark = pairs0.sparkSession
-    // Iteration layout (guide §2.4 — share one exchange per keying):
-    // edges are hash-clustered on dst ONCE and labels on id ONCE, with
-    // an EXPLICIT partition count (AQE never re-coalesces a
-    // numPartitions-pinned repartition, so the two sides stay
-    // co-partitioned across every round), and localCheckpoint
-    // preserves the partitioning in the LogicalRDD. Each iteration's
-    // neighbor join and label join are then ZERO-exchange
-    // co-partitioned joins — only the per-src min aggregate shuffles,
-    // 1 exchange per round instead of 4 (the edge stream, the larger
-    // side, previously re-shuffled every round). SHUFFLE_HASH hints
-    // drop the per-round sort-merge sorts; build sides are one
-    // labels/nlbl partition (8-byte id/lbl rows), never the edge
-    // stream.
-    val nPart = spark.sessionState.conf.numShufflePartitions
     val pairs = pairs0.select("doc_a", "doc_b").localCheckpoint()
     val nodes = pairs.select(col("doc_a").as("id"))
       .union(pairs.select(col("doc_b").as("id"))).distinct()
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .repartition(nPart, col("dst"))
       .localCheckpoint()
-    var labels = nodes.select(col("id"), col("id").as("lbl"))
-      .repartition(nPart, col("id")).localCheckpoint()
+    var labels = nodes.select(col("id"), col("id").as("lbl")).localCheckpoint()
     // Labels only ever decrease, so the (exact decimal) label sum is
     // strictly monotone until the fixpoint — equal sums ⟺ converged.
     // Dup clusters converge in 2-3 rounds; ccIters is the backstop.
@@ -427,9 +410,9 @@ object DedupOps {
     var iter = 0
     var converged = false
     while (iter < ccIters && !converged) {
-      val nb = edges.join(labels.hint("shuffle_hash"), col("dst") === col("id"))
+      val nb = edges.join(labels, col("dst") === col("id"))
         .groupBy(col("src")).agg(min(col("lbl")).as("nlbl"))
-      labels = labels.join(nb.hint("shuffle_hash"), col("id") === col("src"), "left_outer")
+      labels = labels.join(nb, col("id") === col("src"), "left_outer")
         .select(col("id"),
           least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
         .localCheckpoint()
@@ -845,17 +828,12 @@ object DedupOps {
   /** `id`s already folded into an index, read PRUNED to the given
     * key-hash buckets (≤ [[keyBuckets]] partition directories — per-
     * trigger read work is bounded by the batch's bucket span, not by
-    * index history). Minhash indexes written before the `ids` table
-    * existed fall back to the unpruned single-column `sets` read. The
-    * fallback is an explicit EXISTENCE check: an `ids` store that
-    * exists but cannot be read pruned (e.g. written without `kb`)
-    * fails loudly rather than silently reading the whole `sets`
-    * history. */
+    * index history). An index without an `ids` store fails with the
+    * missing path, and one whose `ids` cannot be read pruned (written
+    * without `kb`) fails too — rebuild either. */
   def indexedIds(spark: SparkSession, idx: String, buckets: Seq[Int],
                  id: String = "doc_id"): DataFrame =
-    if (VectorOps.hExists(spark, s"$idx/ids"))
-      Snapshot.read(spark, s"$idx/ids").filter(col("kb").isin(buckets: _*)).select(id)
-    else Snapshot.read(spark, s"$idx/sets").select(id)
+    Snapshot.read(spark, s"$idx/ids").filter(col("kb").isin(buckets: _*)).select(id)
 
   /** The rows of `keyed` (which carries `kb`, the [[keyBucket]] of
     * `id`) whose `id` the index at `idx` does not hold: one collect of
@@ -898,15 +876,13 @@ object DedupOps {
     * — the round-9 compaction machinery applied to whole-store
     * replacement): every table's new generation is staged as
     * invisible tier files while the old index keeps serving through
-    * the (arbitrarily long) corpus passes, then the swap window is
-    * five fast manifest commits bracketed by the completion-marker
-    * protocol — `bands/_SUCCESS` is deleted first and restored by the
-    * LAST table's commit, so a crash anywhere inside the window
-    * leaves an index that FAILS the completion check instead of a
-    * mixed-generation one (old bands + old marker over new
-    * sets/universe would serve stale band keys against the new
-    * verify sets: silently missing pairs, no error). A reader that
-    * pinned its snapshot BEFORE the swap ([[Snapshot.read]] resolves
+    * the (arbitrarily long) corpus passes, then [[Snapshot.swap]]
+    * publishes them with `bands` as the marker table, so a crash
+    * anywhere inside the window leaves an index that FAILS the
+    * completion check instead of a mixed-generation one (old bands +
+    * old marker over new sets/universe would serve stale band keys
+    * against the new verify sets: silently missing pairs, no error).
+    * A reader that pinned its snapshot BEFORE the swap ([[Snapshot.read]] resolves
     * at construction) finishes bit-identically on the old generation
     * — retired files outlive the grace window; a reader constructed
     * AFTER it sees the new index; a construction racing the
@@ -947,20 +923,8 @@ object DedupOps {
       partitionCols = Seq("kb"), graceMs = graceMs)
     val rBands = Snapshot.stageReplace(spark, s"$indexDir/bands",
       minhashBands(sets), graceMs = graceMs)
-    // the swap: marker out, five commits, marker back (bands LAST —
-    // its commit restores bands/_SUCCESS, the completion marker)
-    val marker = new org.apache.hadoop.fs.Path(s"$indexDir/bands/_SUCCESS")
-    marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(marker, false)
-    rSets.commit(); rUniverse.commit(); rVocab.commit(); rIds.commit()
-    rBands.commit()
+    Snapshot.swap(Seq(rSets, rUniverse, rVocab, rIds, rBands))
   }
-
-  /** Whether an index carries the [[minhashDriftReport]] baseline —
-    * the streaming sink's drift log probes this to skip (not wedge)
-    * on a pre-vocabstats index. */
-  private[graft] def hasVocabStats(spark: SparkSession, indexDir: String): Boolean =
-    VectorOps.hExists(spark, s"$indexDir/vocabstats/_SUCCESS")
 
   /** Build-time vocabulary baseline (`vocabstats`, 1 row): the build
     * population and the fraction of the build corpus' own shingle
@@ -981,11 +945,6 @@ object DedupOps {
           lit(1.0) - col("_inst_kept") / col("_inst_total"))
           .otherwise(lit(0.0)).as("frac_out_build"))
   }
-
-  private def writeVocabStats(spark: SparkSession, corpusDocs: DataFrame,
-                              indexDir: String): Unit =
-    vocabStatsOf(corpusDocs, Snapshot.read(spark, s"$indexDir/sets"))
-      .write.mode("overwrite").parquet(s"$indexDir/vocabstats")
 
   /** WHEN to rebuild the minhash index — the scheduling half of the
     * frozen-UNIVERSE drift contract, the twin of
@@ -1016,27 +975,14 @@ object DedupOps {
     * ONE Spark job per report (every scalar enters the plan as a
     * 1-row broadcast aggregate); the universe-membership join is the
     * probe path's own per-trigger join shape, paid at monitoring
-    * cadence. Indexes built before `vocabstats` existed derive a
-    * baseline once from their current membership (corpus ∩ ids —
-    * necessarily including any already-appended drift, so the legacy
-    * baseline is conservative; the next full rebuild writes the
-    * clean one). */
-  def minhashDriftReport(spark: SparkSession, dir: String, indexDir: String,
+    * cadence. An index without its `vocabstats` baseline fails with
+    * the missing path — [[rebuildIndex]] writes it. */
+  def minhashDriftReport(spark: SparkSession, indexDir: String,
                          batchDocs: DataFrame,
                          driftFrac: Double = 0.10,
                          memberCount: Long = -1L): DataFrame = {
     require(VectorOps.hExists(spark, s"$indexDir/bands/_SUCCESS"),
       s"$indexDir is not a complete minhash index")
-    if (!hasVocabStats(spark, indexDir)) {
-      require(dir.nonEmpty,
-        s"$indexDir has no vocabstats baseline and no corpus dir was " +
-          "given to derive one — rebuild via rebuildIndex, or call " +
-          "with the corpus dir once to migrate")
-      val ids = Snapshot.read(spark, s"$indexDir/ids").select("doc_id")
-      writeVocabStats(spark,
-        Tables(spark, dir, "documents").select("doc_id", "text")
-          .join(ids, Seq("doc_id"), "left_semi"), indexDir)
-    }
     val stats = Snapshot.read(spark, s"$indexDir/vocabstats")
     val universe = Snapshot.read(spark, s"$indexDir/universe")
       .select(col("s"), lit(1).as("_in_u"))

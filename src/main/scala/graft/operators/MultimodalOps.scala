@@ -1865,10 +1865,16 @@ object MultimodalOps {
     *    table, one row per doc (kb-pruned already-indexed checks, the
     *    minhash-index layout — checked through [[DedupOps.unindexed]]);
     *  - `_POPULATION`: the family's population marker;
-    *  - `bands`: the band-pair inverted index, written LAST so
-    *    `bands/_SUCCESS` is the build-complete marker.
-    * Single-writer contract per index dir (the minhash rule). Unlike
-    * the minhash index there is NO frozen-universe drift: the
+    *  - `bands`: the band-pair inverted index, `bands/_SUCCESS` the
+    *    build-complete marker.
+    * Both stores stage invisibly while the old index keeps serving,
+    * then [[Snapshot.swap]] publishes them with `bands` as the marker
+    * table and `_POPULATION` written inside the window (the
+    * [[DedupOps.rebuildIndex]] isolation: a probe built before the
+    * swap finishes on the old generation, a crash mid-swap fails the
+    * completion check). Single-writer contract per index dir (the
+    * minhash rule). Unlike the minhash index there is NO
+    * frozen-universe drift: the
     * signature kernels are corpus-independent, so incremental folds
     * never degrade and a rebuild is only ever a compaction concern. */
   def phashRebuildIndex(spark: SparkSession, family: PhashFamily, sigs: DataFrame,
@@ -1876,14 +1882,15 @@ object MultimodalOps {
     val s = sigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = s.count()
-      phashIds(family, s).coalesce(graft.operators.VectorOps.appendParts(n))
-        .write.mode("overwrite").partitionBy("kb").parquet(s"$idx/ids")
-      // population marker BEFORE bands: `bands/_SUCCESS` stays the one
-      // completion marker — a crash here leaves an index that fails
-      // the completion check, never a marker-less complete index
-      writePopulationMarker(spark, idx, family.population)
-      phashBands(family, s).coalesce(graft.operators.VectorOps.appendParts(n * 28))
-        .write.mode("overwrite").parquet(s"$idx/bands")
+      val rIds = Snapshot.stageReplace(spark, s"$idx/ids",
+        phashIds(family, s).coalesce(graft.operators.VectorOps.appendParts(n)),
+        partitionCols = Seq("kb"))
+      val rBands = Snapshot.stageReplace(spark, s"$idx/bands",
+        phashBands(family, s).coalesce(graft.operators.VectorOps.appendParts(n * 28)))
+      // population marker BEFORE bands commit: `bands/_SUCCESS` stays
+      // the one completion marker — a crash here leaves an index that
+      // fails the completion check, never a marker-less complete index
+      Snapshot.swap(Seq(rIds, rBands), writePopulationMarker(spark, idx, family.population))
     } finally s.unpersist()
   }
 

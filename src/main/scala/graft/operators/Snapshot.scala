@@ -479,14 +479,9 @@ object Snapshot {
     *
     * Crash contract: a crash before commit leaves orphaned tier files
     * (invisible; swept by the next stage or compaction) and the old
-    * generation fully serving. Multi-table stores (an index) get
-    * cross-table atomicity from the caller's completion-marker
-    * protocol: delete the marker table's `_SUCCESS` after staging
-    * everything, commit every table, and commit the marker table LAST
-    * (commit restores `_SUCCESS`) — a crash anywhere inside that
-    * window leaves an index that FAILS the completion check rather
-    * than serving mixed generations. Single maintenance writer per
-    * store, like the compactor. */
+    * generation fully serving. Multi-table stores (an index) commit
+    * through [[swap]], which gives them cross-table atomicity. Single
+    * maintenance writer per store, like the compactor. */
   def stageReplace(spark: SparkSession, dir: String, df: DataFrame,
                    partitionCols: Seq[String] = Nil,
                    graceMs: Long = DefaultGraceMs): StagedReplace = {
@@ -531,10 +526,27 @@ object Snapshot {
     new StagedReplace(spark, dir, staged.result(), graceMs)
   }
 
+  /** The completion-marker swap of a multi-table rebuild: every store
+    * of an index is staged first, then `tables` (the MARKER table
+    * last) publish in one short window — the marker table's `_SUCCESS`
+    * is deleted, every other table commits, `inWindow` runs (markers
+    * kept outside the stores), and the marker table commits last,
+    * which restores `_SUCCESS`. A crash anywhere inside the window
+    * leaves an index that FAILS its completion check rather than
+    * serving mixed generations; re-running the rebuild heals it. */
+  def swap(tables: Seq[StagedReplace], inWindow: => Unit = ()): Unit = {
+    val marker = tables.last
+    val (fs, root) = fsOf(marker.spark, marker.dir)
+    fs.delete(new Path(root, "_SUCCESS"), false)
+    tables.init.foreach(_.commit())
+    inWindow
+    marker.commit()
+  }
+
   /** Handle over a staged-but-uncommitted replacement — see
     * [[stageReplace]]. */
   final class StagedReplace private[Snapshot] (
-      spark: SparkSession, dir: String,
+      private[Snapshot] val spark: SparkSession, private[Snapshot] val dir: String,
       private[graft] val stagedRel: Vector[String], graceMs: Long) {
 
     /** The staged rows (readable BEFORE commit — invisible to every
@@ -548,8 +560,8 @@ object Snapshot {
 
     /** Atomic publish: new generation live = the staged set; all
       * previously-live files retire (GC after grace). Restores the
-      * store's `_SUCCESS` marker as its LAST step — the caller's
-      * completion-marker protocol hangs on that ordering. */
+      * store's `_SUCCESS` marker as its LAST step — [[swap]] hangs on
+      * that ordering. */
     def commit(): Unit = {
       val (fs, root) = fsOf(spark, dir)
       val manifest = latestManifest(fs, root).getOrElse(

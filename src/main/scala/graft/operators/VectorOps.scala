@@ -978,11 +978,10 @@ object VectorOps {
     * 1.00 vs 0.92. */
   /** Rank-1 assignment CARRYING the member→centroid angle — the
     * radius statistic's raw signal, shared by the fused range index,
-    * the persisted builds ([[ivfBuildIndexFrom]]/[[ivfpqBuildIndexFrom]]),
-    * the appends' monotonic widening, and the legacy-index derive
-    * ([[writeRangeRadius]]) — ONE kernel, so a slack or identity fix
-    * applied anywhere covers every producer of the exactness
-    * certificate. `centsN` must carry (cid, cv, cnorm); the angle
+    * the persisted builds ([[ivfBuildIndexFrom]]/[[ivfpqBuildIndexFrom]])
+    * and the appends' monotonic widening — ONE kernel, so a slack or
+    * identity fix applied anywhere covers every producer of the
+    * exactness certificate. `centsN` must carry (cid, cv, cnorm); the angle
     * derives from the already-computed d2 by the law-of-cosines
     * identity (zero extra array kernels in the n × k fan), and the
     * min-struct keeps the map-side-collapse shape ([[assignTo]]
@@ -1118,12 +1117,9 @@ object VectorOps {
     * for every later range query — exactly the frozen-statistic
     * staleness class the drift reports exist to catch). full_outer:
     * an arrival landing rank-1 in a previously-memberless list creates
-    * that list's radius row. Indexes that predate the radius table
-    * skip (the serving path derives over the full membership on first
-    * use, covering these arrivals too). */
+    * that list's radius row. */
   private def widenRadius(spark: SparkSession, batchVecs: DataFrame,
                           indexDir: String): Unit = {
-    if (!hExists(spark, s"$indexDir/radius/_SUCCESS")) return
     val centsN = Snapshot.read(spark, s"$indexDir/centroids")
       .withColumn("cnorm", vecNorm(col("cv")))
     val batchRad = assignAng(
@@ -1136,30 +1132,6 @@ object VectorOps {
         greatest(coalesce(col("dev"), lit(0.0)),
           coalesce(col("bdev"), lit(0.0))).as("dev"))
     Snapshot.stageReplace(spark, s"$indexDir/radius", widened).commit()
-  }
-
-  /** Legacy-index migration: (re)derive the per-list angular radius
-    * for an index written before the radius table existed — rank-1
-    * angles over the index's MEMBERSHIP (`ids` ∩ the data dir's
-    * vectors), the build-time statistic recomputed. Contract: the
-    * data dir must cover the index membership (the [[annIvfQuery]]
-    * build-if-missing contract; an explicit indexDir whose membership
-    * outgrew its data dir must rebuild instead — a member whose
-    * vector the derive can't see could sit outside the derived
-    * radius). */
-  private def writeRangeRadius(spark: SparkSession, dir: String,
-                               indexDir: String): Unit = {
-    val listTable =
-      if (hExists(spark, s"$indexDir/invlist/_SUCCESS")) "invlist" else "codes"
-    if (!hExists(spark, s"$indexDir/ids/_SUCCESS"))
-      writeIvfIds(spark, indexDir, listTable)
-    val pts = vecs(spark, dir).select(col("vec_id"), col("vd"), col("norm"))
-      .join(Snapshot.read(spark, s"$indexDir/ids").select("vec_id"), Seq("vec_id"))
-    val centsN = Snapshot.read(spark, s"$indexDir/centroids")
-      .withColumn("cnorm", vecNorm(col("cv")))
-    Snapshot.stageReplace(spark, s"$indexDir/radius",
-      assignAng(pts, centsN).groupBy(col("cid")).agg(max(col("ang")).as("dev")))
-      .commit()
   }
 
   /** Serving half of the RANGE split (benched as `ann_range_ivf_query`):
@@ -1177,9 +1149,9 @@ object VectorOps {
     * mode exact-scores candidates, so the PQ codes themselves are
     * not consulted). The certificate survives appends because
     * [[ivfAppend]]/[[ivfpqAppend]] WIDEN the stored radius
-    * monotonically before any list row lands ([[widenRadius]]);
-    * pre-radius indexes derive it on first use
-    * ([[writeRangeRadius]]). Cache contract = [[annIvfQuery]]'s —
+    * monotonically before any list row lands ([[widenRadius]]); an
+    * index without its `radius` store fails with the missing path
+    * (rebuild it). Cache contract = [[annIvfQuery]]'s —
     * the default key IS annIvfQuery's, so one shared index serves
     * both the top-k and range modes. */
   def annRangeIvfQuery(spark: SparkSession, dir: String,
@@ -1196,8 +1168,6 @@ object VectorOps {
     if (!hExists(spark, s"$idx/invlist/_SUCCESS") &&
         !hExists(spark, s"$idx/codes/_SUCCESS"))
       ivfBuildIndex(spark, dir, idx, kk)
-    if (!hExists(spark, s"$idx/radius/_SUCCESS"))
-      writeRangeRadius(spark, dir, idx)
     val centsN = Snapshot.read(spark, s"$idx/centroids")
       .withColumn("cnorm", vecNorm(col("cv")))
     val radius = Snapshot.read(spark, s"$idx/radius")
@@ -1231,10 +1201,9 @@ object VectorOps {
     * like [[DedupOps.rebuildIndex]], SNAPSHOT-ISOLATED against live
     * serving via [[Snapshot.stageReplace]]: every table stages
     * invisibly while the old index serves through the Lloyd passes,
-    * then the swap is four fast manifest commits under the
-    * completion-marker protocol (`invlist/_SUCCESS` — what
-    * [[annIvfQuery]]'s build-if-missing probe checks — deleted first,
-    * restored by invlist's LAST commit). A pre-swap [[annIvfQuery]]
+    * then [[Snapshot.swap]] publishes them with `invlist` as the
+    * marker table (`invlist/_SUCCESS` is what [[annIvfQuery]]'s
+    * build-if-missing probe checks). A pre-swap [[annIvfQuery]]
     * construction finishes bit-identically on its pinned old
     * generation; a crash mid-swap fails the completion check, never
     * serving new lists against old centroids. The final assignment
@@ -1293,33 +1262,8 @@ object VectorOps {
     // so the stats pass can't see a re-planned Lloyd
     val rDist = Snapshot.stageReplace(spark, s"$indexDir/diststats",
       distStatsOf(corpus, rCents.staged), graceMs = graceMs)
-    val marker = new org.apache.hadoop.fs.Path(s"$indexDir/invlist/_SUCCESS")
-    marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(marker, false)
-    rCents.commit(); rIds.commit(); rRad.commit(); rDist.commit()
-    rInv.commit()
+    Snapshot.swap(Seq(rCents, rIds, rRad, rDist, rInv))
   }
-
-  /** (Re)derive a vector index's `ids` membership store from its list
-    * table (`invlist`, or `codes` for IVF-PQ): distinct vec_ids,
-    * Hive-partitioned by the shared [[DedupOps.keyBucket]] hash so
-    * the appends' already-indexed check reads only the incoming
-    * batch's buckets — the same bounded membership layout the minhash
-    * index carries. One column-pruned pass over the list table; also
-    * the one-time MIGRATION for indexes written before the ids store
-    * existed. */
-  private def writeIvfIds(spark: SparkSession, indexDir: String,
-                          listTable: String = "invlist"): Unit =
-    Snapshot.read(spark, s"$indexDir/$listTable")
-      .select(col("neighbor_id").as("vec_id")).distinct()
-      .withColumn("kb", DedupOps.keyBucket(col("vec_id")))
-      .write.mode("overwrite").partitionBy("kb").parquet(s"$indexDir/ids")
-
-  /** Whether an index carries the [[ivfDriftReport]] baseline —
-    * the streaming sink's drift log probes this to skip (not wedge)
-    * on a pre-diststats index. */
-  private[graft] def hasDistStats(spark: SparkSession, indexDir: String): Boolean =
-    hExists(spark, s"$indexDir/diststats/_SUCCESS")
 
   /** Existence probe through the Hadoop FileSystem API (matching
     * [[Snapshot]] / the sinks' pre-kb probes) so
@@ -1337,13 +1281,8 @@ object VectorOps {
     * bucket span (≤ [[DedupOps.keyBuckets]] dirs), never an O(index)
     * scan. Returns (vec_id, vd, kb) survivors, localCheckpointed
     * because both the list write AND the ids write consume them. */
-  private def notIndexed(keyed: DataFrame, indexDir: String,
-                         listTable: String): DataFrame = {
-    val spark = keyed.sparkSession
-    if (!hExists(spark, s"$indexDir/ids/_SUCCESS"))
-      writeIvfIds(spark, indexDir, listTable)
+  private def notIndexed(keyed: DataFrame, indexDir: String): DataFrame =
     DedupOps.unindexed(keyed, indexDir, "vec_id").localCheckpoint(true)
-  }
 
   /** Membership rows commit AFTER list rows in both appends: the
     * cross-write crash window re-appends (duplicate list rows, which
@@ -1417,11 +1356,6 @@ object VectorOps {
         percentile_approx(col("recon_err"), lit(0.95), lit(10000))
           .as("p95_recon"))
 
-  private def writeIvfDistStats(spark: SparkSession, points: DataFrame,
-                                cents: DataFrame, indexDir: String): Unit =
-    distStatsOf(points, cents)
-      .write.mode("overwrite").parquet(s"$indexDir/diststats")
-
   /** WHEN to rebuild — the scheduling half of the frozen-quantizer
     * drift contract. [[ivfAppend]]'s scaladoc says appends from a
     * drifting distribution erode recall and the periodic
@@ -1444,10 +1378,9 @@ object VectorOps {
     *    the index is serving at half its intended list resolution
     *    and the report flags regardless of distances.
     *
-    * Indexes built before `diststats` existed derive a baseline once
-    * from their current membership (corpus ∩ ids — necessarily
-    * including any already-appended drift, so the legacy baseline is
-    * conservative; the next full rebuild writes the clean one).
+    * An index without a baseline it needs (`diststats`, and `pqstats`
+    * when it carries codebooks) or without its `ids` store fails with
+    * the missing path — the builders write every one of them.
     * ONE Spark job per report: the centroid count, the `ids`
     * membership count, and the batch's new-id count all enter the
     * returned plan as 1-row broadcast aggregates (the scalar-subquery
@@ -1461,27 +1394,10 @@ object VectorOps {
     * codec guard) counts as BEYOND the envelope: a vector the
     * quantizer cannot even score must never dilute
     * `frac_beyond_p95` toward "not drifted". */
-  def ivfDriftReport(spark: SparkSession, dir: String, indexDir: String,
+  def ivfDriftReport(spark: SparkSession, indexDir: String,
                      batch: DataFrame, driftFrac: Double = 0.10,
                      memberCount: Long = -1L): DataFrame = {
     val cents = Snapshot.read(spark, s"$indexDir/centroids")
-    // a pre-append index may not carry the ids membership store yet —
-    // the same one-time derivation the append guard performs, against
-    // whichever list table this layout has
-    if (!hExists(spark, s"$indexDir/ids/_SUCCESS"))
-      writeIvfIds(spark, indexDir,
-        if (hExists(spark, s"$indexDir/invlist/_SUCCESS")) "invlist" else "codes")
-    if (!hExists(spark, s"$indexDir/diststats/_SUCCESS")) {
-      require(dir.nonEmpty,
-        s"$indexDir has no diststats baseline and no corpus dir was " +
-          "given to derive one — rebuild via ivfBuildIndex, or call " +
-          "with the corpus dir once to migrate")
-      val ids = Snapshot.read(spark, s"$indexDir/ids").select("vec_id")
-      val pts = vecs(spark, dir).filter(col("vec_id") >= nQueries)
-        .select(col("vec_id"), col("vd"))
-        .join(ids, Seq("vec_id"), "left_semi")
-      writeIvfDistStats(spark, pts, cents, indexDir)
-    }
     val stats = Snapshot.read(spark, s"$indexDir/diststats")
     // k_built is the SERVING list count (what the index actually has —
     // Lloyd can land under the sizing-rule k when clusters empty);
@@ -1513,40 +1429,24 @@ object VectorOps {
     // `pqstats` envelope — the signal that catches a residual shift
     // the coarse quantizer tolerates (centroid distances clean while
     // every codeword misfits), which is exactly what silently erodes
-    // `codebooks = true` serving quality. A pre-pqstats legacy index
-    // derives the baseline once from its current membership (the
-    // diststats migration shape — conservative, replaced by the next
-    // rebuild); a legacy index reached with dir = "" (the streaming
-    // sink) reports null recon columns until migrated.
+    // `codebooks = true` serving quality.
     val reconDf: Option[DataFrame] =
       if (!hExists(spark, s"$indexDir/codebook/_SUCCESS")) None
       else {
-        if (!hExists(spark, s"$indexDir/pqstats/_SUCCESS") && dir.nonEmpty) {
-          val ids = Snapshot.read(spark, s"$indexDir/ids").select("vec_id")
-          val pts = vecs(spark, dir).filter(col("vec_id") >= nQueries)
-            .withColumn("vn", transform(col("vd"), x => x / col("norm")))
-            .select(col("vec_id"), col("vn"))
-            .join(ids, Seq("vec_id"), "left_semi")
-          pqStatsOf(pts, Snapshot.read(spark, s"$indexDir/codebook"))
-            .write.mode("overwrite").parquet(s"$indexDir/pqstats")
-        }
-        if (!hExists(spark, s"$indexDir/pqstats/_SUCCESS")) None
-        else {
-          val pq = Snapshot.read(spark, s"$indexDir/pqstats")
-            .select(col("p95_recon"))
-          val batchVn = batch
-            .select(col("vec_id"), col("embedding").as("vd"))
-            .withColumn("norm", vecNorm(col("vd")))
-            .withColumn("vn", transform(col("vd"), x => x / col("norm")))
-            .select(col("vec_id"), col("vn"))
-          Some(pqReconErr(batchVn, Snapshot.read(spark, s"$indexDir/codebook"))
-            .crossJoin(broadcast(pq))
-            .agg(
-              avg(when(col("recon_err").isNull ||
-                  col("recon_err") > col("p95_recon"), 1.0)
-                .otherwise(0.0)).as("frac_beyond_p95_recon"),
-              first(col("p95_recon")).as("p95_recon")))
-        }
+        val pq = Snapshot.read(spark, s"$indexDir/pqstats")
+          .select(col("p95_recon"))
+        val batchVn = batch
+          .select(col("vec_id"), col("embedding").as("vd"))
+          .withColumn("norm", vecNorm(col("vd")))
+          .withColumn("vn", transform(col("vd"), x => x / col("norm")))
+          .select(col("vec_id"), col("vn"))
+        Some(pqReconErr(batchVn, Snapshot.read(spark, s"$indexDir/codebook"))
+          .crossJoin(broadcast(pq))
+          .agg(
+            avg(when(col("recon_err").isNull ||
+                col("recon_err") > col("p95_recon"), 1.0)
+              .otherwise(0.0)).as("frac_beyond_p95_recon"),
+            first(col("p95_recon")).as("p95_recon")))
       }
     // drift measures the WHOLE batch (a redelivered vector scoring
     // in-envelope is correct — redelivery is not drift)
@@ -1571,7 +1471,7 @@ object VectorOps {
         // coalesce: an empty batch has a null frac (avg over zero
         // rows) — report "not drifted" rather than a null verdict
         // that would NPE a Boolean reader; a null recon frac (no
-        // codebooks / unmigrated legacy) likewise never flags
+        // codebooks) likewise never flags
         coalesce(col("frac_beyond_p95") > lit(driftFrac), lit(false)) ||
           coalesce(col("frac_beyond_p95_recon") > lit(driftFrac), lit(false)) ||
           col("k_auto") >= col("k_built") * 2)
@@ -1594,9 +1494,9 @@ object VectorOps {
     * PRUNED to the incoming batch's key-hash buckets, so the check
     * is bounded by the batch's bucket span (≤ keyBuckets dirs), not
     * by index history (the minhash index's `ids` layout, checked
-    * through [[DedupOps.unindexed]]; pre-ids indexes migrate once on
-    * first append). A replayed batch is therefore a no-op — and even
-    * WITHOUT the guard a duplicate append cannot corrupt results,
+    * through [[DedupOps.unindexed]]; an index without `ids` fails
+    * with the missing path). A replayed batch is therefore a no-op —
+    * and even WITHOUT the guard a duplicate append cannot corrupt results,
     * because every search path collapses duplicate candidates
     * (ivfSearch's pair distinct, the IVF-PQ per-subspace min):
     * duplicates cost index bytes, not correctness. A crashed append
@@ -1621,7 +1521,7 @@ object VectorOps {
     val pts = notIndexed(
       batch.select(col("vec_id"), col("embedding").as("vd"))
         .withColumn("kb", DedupOps.keyBucket(col("vec_id"))),
-      indexDir, "invlist")
+      indexDir)
     val nNew = pts.count() // checkpointed — cheap; sizes the writes too
     // radius widens BEFORE any list row lands (see widenRadius for
     // the crash-ordering argument)
@@ -1634,16 +1534,6 @@ object VectorOps {
     // genuinely-new count — what a per-trigger caller adds to its
     // running membership total
     nNew
-  }
-
-  /** One-time membership count for a per-trigger caller seeding its
-    * running total (deriving the ids store first if the index
-    * predates it) — paid once per stream start, not per report. */
-  private[graft] def idsCount(spark: SparkSession, indexDir: String): Long = {
-    if (!hExists(spark, s"$indexDir/ids/_SUCCESS"))
-      writeIvfIds(spark, indexDir,
-        if (hExists(spark, s"$indexDir/invlist/_SUCCESS")) "invlist" else "codes")
-    Snapshot.read(spark, s"$indexDir/ids").count()
   }
 
   /** Query half of the deployment split: nprobe search against a
@@ -1897,9 +1787,8 @@ object VectorOps {
 
     // snapshot-isolated build/rebuild — the [[ivfBuildIndex]] shape:
     // stage everything (downstream tables from staged upstream data),
-    // then swap under the completion-marker protocol with
-    // codes/_SUCCESS (the [[annIvfPqQuery]] build-if-missing probe)
-    // restored by the LAST commit
+    // then swap with `codes` as the marker table (codes/_SUCCESS is
+    // the [[annIvfPqQuery]] build-if-missing probe)
     val rCents = Snapshot.stageReplace(spark, s"$indexDir/centroids",
       cents, graceMs = graceMs)
     val cRead = rCents.staged
@@ -1936,12 +1825,7 @@ object VectorOps {
     val rPq = Snapshot.stageReplace(spark, s"$indexDir/pqstats",
       pqStatsOf(corpus.select(col("vec_id"), col("vn")), rCb.staged),
       graceMs = graceMs)
-    val marker = new org.apache.hadoop.fs.Path(s"$indexDir/codes/_SUCCESS")
-    marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(marker, false)
-    rCents.commit(); rCb.commit(); rIds.commit(); rRad.commit()
-    rDist.commit(); rPq.commit()
-    rCodes.commit()
+    Snapshot.swap(Seq(rCents, rCb, rIds, rRad, rDist, rPq, rCodes))
   }
 
   /** [[ivfAppend]] for the composed IVF-PQ index: new vectors are
@@ -1963,7 +1847,7 @@ object VectorOps {
         .select(col("vec_id"), col("embedding").as("vd"), vecNorm(col("embedding")).as("norm"))
         .withColumn("vn", transform(col("vd"), x => x / col("norm")))
         .withColumn("kb", DedupOps.keyBucket(col("vec_id"))),
-      indexDir, "codes")
+      indexDir)
     val nNew = pts.count() // checkpointed — cheap; sizes the writes
     // radius widens BEFORE any code row lands (see widenRadius)
     if (nNew > 0) widenRadius(spark, pts, indexDir)

@@ -481,9 +481,9 @@ object Pipelines {
     * the batch id) to `<indexDir>/driftlog` — the monitoring feed
     * that schedules the periodic rebuild; an ingestion stream whose
     * arrivals have drifted off the frozen quantizer erodes recall
-    * silently otherwise. Indexes without the diststats baseline
-    * (built before it existed) skip the log rather than wedging the
-    * trigger — rebuild to start monitoring. foreachBatch is
+    * silently otherwise. An index without a store the report reads
+    * (`diststats`, `ids`) fails the trigger with the missing path —
+    * rebuild it. foreachBatch is
     * at-least-once, so a trigger replayed after a crash re-appends
     * its report row under the SAME batch_id (deterministically
     * identical values — the report depends only on the batch, the
@@ -552,13 +552,13 @@ object Pipelines {
         // append will consume the decode
         val vecs =
           if (driftEvery > 0) decoded.localCheckpoint(true) else decoded
-        val reporting = driftEvery > 0 && batchId % driftEvery == 0 && !vecs.isEmpty &&
-          graft.operators.VectorOps.hasDistStats(spark, indexDir)
+        val reporting = driftEvery > 0 && batchId % driftEvery == 0 && !vecs.isEmpty
         if (reporting) {
           if (memberCount < 0)
-            memberCount = graft.operators.VectorOps.idsCount(spark, indexDir)
+            memberCount = graft.operators.Snapshot
+              .read(spark, s"$indexDir/ids").count()
           graft.operators.VectorOps
-            .ivfDriftReport(spark, "", indexDir, vecs, memberCount = memberCount)
+            .ivfDriftReport(spark, indexDir, vecs, memberCount = memberCount)
             .withColumn("batch_id", lit(batchId))
             .write.mode("append").parquet(s"$indexDir/driftlog")
         }
@@ -649,10 +649,9 @@ object Pipelines {
     * collapses replayed batch_ids; the report runs BEFORE the index
     * update, and a replay's re-derived row is deterministically
     * identical either way because the frozen universe never changes
-    * between rebuilds and membership totals cancel). A minhash index
-    * without the vocabstats baseline (built before it existed) skips
-    * the log rather than wedging the trigger — rebuild to start
-    * monitoring. The driftlog joins the maintenance sweep like the
+    * between rebuilds and membership totals cancel). An index without
+    * its `vocabstats` baseline fails the trigger with the missing path
+    * — rebuild it. The driftlog joins the maintenance sweep like the
     * index stores. */
   def incrementalDedupSink(messages: DataFrame, indexDir: String,
                            tablePath: String,
@@ -676,13 +675,12 @@ object Pipelines {
         val docs = latestDocVersion(batch).localCheckpoint(true)
         // drift report BEFORE the index update (frozen universe + the
         // whole batch — redelivery is not drift, the vector sink's rule)
-        if (driftEvery > 0 && batchId % driftEvery == 0 && !docs.isEmpty &&
-            graft.operators.DedupOps.hasVocabStats(spark, indexDir)) {
+        if (driftEvery > 0 && batchId % driftEvery == 0 && !docs.isEmpty) {
           if (memberCount < 0)
             memberCount = graft.operators.Snapshot
               .read(spark, s"$indexDir/ids").count()
           graft.operators.DedupOps
-            .minhashDriftReport(spark, "", indexDir,
+            .minhashDriftReport(spark, indexDir,
               docs.select("doc_id", "text"), memberCount = memberCount)
             .withColumn("batch_id", lit(batchId))
             .write.mode("append").parquet(s"$indexDir/driftlog")

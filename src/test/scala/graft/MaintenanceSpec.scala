@@ -312,10 +312,7 @@ class MaintenanceSpec extends AnyFunSuite {
     val idxFull = tmp("graft-ivfsnap-full")
     operators.VectorOps.ivfBuildIndex(spark, sf, idxFull)
     val idx = tmp("graft-ivfsnap")
-    spark.read.parquet(idxFull + "/centroids").write.parquet(idx + "/centroids")
-    spark.read.parquet(idxFull + "/invlist")
-      .filter(pmod(col("neighbor_id"), lit(3)) =!= 0)
-      .write.parquet(idx + "/invlist")
+    SinkBench.carveIndex(spark, idxFull, idx, id => pmod(id, lit(3)) =!= 0)
     val rest = Tables(spark, sf, "embeddings")
       .filter(col("vec_id") >= operators.VectorOps.nQueries &&
         pmod(col("vec_id"), lit(3)) === 0)
@@ -402,6 +399,44 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(operators.VectorOps.hExists(spark, idx + "/bands/_SUCCESS"))
   }
 
+  test("signature probeIndex serves across a live phashRebuildIndex — " +
+    "image, audio and video") {
+    import operators.MultimodalOps.{audioPhashFamily, imagePhashFamily,
+      phashProbeIndex, phashRebuildIndex, videoPhashFamily}
+    val sess = spark
+    import sess.implicits._
+    // two generations over disjoint signature neighbourhoods: the first
+    // build indexes docs 1-2 next to `s`, the rebuild docs 10-11 next
+    // to `t`; the probe batch carries one signature of each
+    val (s, t) = (0x0F0F0F0F0F0F0F0FL, 0x7070707070707070L)
+    def near(a: Long, b: Long, sig: Long) = Seq((a, sig), (b, sig ^ 1L))
+    Seq(imagePhashFamily, audioPhashFamily, videoPhashFamily).foreach { family =>
+      // a video signs each frame slot; two shared slots make a pair
+      def sigs(rows: Seq[(Long, Long)]) =
+        if (family.slotKeys.isEmpty) rows.toDF("doc_id", "sig")
+        else rows.flatMap { case (d, g) => Seq((d, 0, g), (d, 1, g)) }
+          .toDF("doc_id", "slot", "sig")
+      def pairs(df: org.apache.spark.sql.DataFrame) =
+        df.select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val idx = tmp("graft-sigrebuild")
+      phashRebuildIndex(spark, family, sigs(near(1L, 2L, s)), idx)
+      val batch = sigs(Seq((100L, s), (101L, t)))
+      val before = pairs(phashProbeIndex(spark, family, batch, idx))
+      assert(before === Set((1L, 100L), (2L, 100L)), family.population)
+      // a probe built before the rebuild pins the old generation ...
+      val inFlight = phashProbeIndex(spark, family, batch, idx)
+      val pinned = operators.Snapshot.files(spark, idx + "/bands")
+      phashRebuildIndex(spark, family, sigs(near(10L, 11L, t)), idx)
+      assert(pairs(inFlight) === before,
+        s"${family.population}: the in-flight probe must finish on its pinned generation")
+      // ... and a probe built after it sees only the new one
+      assert(operators.Snapshot.files(spark, idx + "/bands").toSet
+        .intersect(pinned.toSet).isEmpty, family.population)
+      assert(pairs(phashProbeIndex(spark, family, batch, idx)) ===
+        Set((10L, 101L), (11L, 101L)), family.population)
+    }
+  }
+
   test("crash mid-swap: the index fails the completion check loudly — " +
     "never serves mixed generations") {
     val idx = tmp("graft-mhcrash")
@@ -410,18 +445,15 @@ class MaintenanceSpec extends AnyFunSuite {
     val batch = corpus.filter(pmod(col("doc_id"), lit(10)) === 7)
     val oldBands = operators.Snapshot.read(spark, idx + "/bands").count()
     assert(oldBands > 0)
-    // reproduce the swap's worst crash point byte-for-byte: new
-    // generations staged, marker deleted, SOME tables committed,
-    // bands (the marker table) NOT
+    // the swap's worst crash point: new generations staged, marker
+    // deleted, SOME tables committed, bands (the marker table) NOT
     val rU = operators.Snapshot.stageReplace(spark, idx + "/universe",
       operators.Snapshot.read(spark, idx + "/universe").limit(1))
     val rB = operators.Snapshot.stageReplace(spark, idx + "/bands",
       operators.Snapshot.read(spark, idx + "/bands").limit(1))
-    val marker = new org.apache.hadoop.fs.Path(idx + "/bands/_SUCCESS")
-    marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(marker, false)
-    rU.commit()
-    // -- crash: rB never commits --
+    intercept[IllegalStateException] {
+      operators.Snapshot.swap(Seq(rU, rB), throw new IllegalStateException("crash"))
+    }
     assert(rB.stagedRel.nonEmpty) // the orphaned tier files exist...
     assert(operators.Snapshot.read(spark, idx + "/bands").count() === oldBands,
       "uncommitted staged bands must stay invisible — old generation serves")
@@ -438,6 +470,27 @@ class MaintenanceSpec extends AnyFunSuite {
     operators.DedupOps.rebuildIndex(spark, corpus, idx)
     assert(operators.VectorOps.hExists(spark, idx + "/bands/_SUCCESS"))
     assert(operators.DedupOps.probeIndex(spark, batch, idx).collect().nonEmpty)
+
+    // the signature rebuild crashes inside the same window: a directory
+    // squatting on `_POPULATION` fails the marker write after `ids`
+    // committed and before `bands` does
+    import operators.MultimodalOps.{imagePhashFamily, phashIndexUpdate, phashProbeIndex,
+      phashRebuildIndex}
+    val sess = spark
+    import sess.implicits._
+    val sidx = tmp("graft-sigcrash")
+    val sigs = Seq((1L, 0x0F0F0F0F0F0F0F0FL), (2L, 0x0F0F0F0F0F0F0F0EL)).toDF("doc_id", "sig")
+    phashRebuildIndex(spark, imagePhashFamily, sigs, sidx)
+    val squat = new java.io.File(sidx + "/_POPULATION")
+    assert(squat.delete() && new java.io.File(squat, "x").mkdirs())
+    intercept[java.io.IOException](phashRebuildIndex(spark, imagePhashFamily, sigs, sidx))
+    intercept[IllegalArgumentException] {
+      phashProbeIndex(spark, imagePhashFamily, sigs, sidx).collect()
+    }
+    intercept[IllegalArgumentException](phashIndexUpdate(spark, imagePhashFamily, sigs, sidx))
+    SparkSpec.deleteDir(squat.getPath)
+    phashRebuildIndex(spark, imagePhashFamily, sigs, sidx)
+    assert(phashProbeIndex(spark, imagePhashFamily, sigs, sidx).collect().nonEmpty)
   }
 
   test("synchronized leaf crossings smear over calls: per-call merge work is budgeted") {

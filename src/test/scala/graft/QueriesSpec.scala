@@ -226,29 +226,25 @@ class QueriesSpec extends AnyFunSuite {
 
     // same quantizer, one-third of the corpus missing from the lists
     val idxPart = Files.createTempDirectory("graft-ivf-part").toString
-    spark.read.parquet(idxFull + "/centroids").write.parquet(idxPart + "/centroids")
-    spark.read.parquet(idxFull + "/invlist")
-      .filter(pmod(col("neighbor_id"), lit(3)) =!= 0)
-      .write.parquet(idxPart + "/invlist")
+    SinkBench.carveIndex(spark, idxFull, idxPart, id => pmod(id, lit(3)) =!= 0)
 
     val batch = Tables(spark, sf, "embeddings")
       .filter(col("vec_id") >= operators.VectorOps.nQueries &&
         pmod(col("vec_id"), lit(3)) === 0)
       .select("vec_id", "embedding")
     operators.VectorOps.ivfAppend(spark, batch, idxPart)
-    val appended = spark.read.parquet(idxPart + "/invlist")
+    val appended = operators.Snapshot.read(spark, idxPart + "/invlist")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(appended === fullInv,
       "append under the frozen quantizer must reproduce the builder's assignment")
 
     // replayed batch: the anti-join guard makes it a no-op
     operators.VectorOps.ivfAppend(spark, batch, idxPart)
-    assert(spark.read.parquet(idxPart + "/invlist").count() === fullInv.size)
+    assert(operators.Snapshot.read(spark, idxPart + "/invlist").count() === fullInv.size)
 
-    // the ids membership store (migrated on first append — idxPart was
-    // written without one) must track invlist membership exactly, and
-    // carry each vec_id once despite the replay
-    val ids = spark.read.parquet(idxPart + "/ids")
+    // the ids membership store must track invlist membership exactly,
+    // and carry each vec_id once despite the replay
+    val ids = operators.Snapshot.read(spark, idxPart + "/ids").select("vec_id")
       .collect().map(_.getLong(0)).toSeq
     assert(ids.toSet === fullInv.map(_._1))
     assert(ids.length === ids.toSet.size, "replay must not duplicate ids rows")
@@ -261,7 +257,7 @@ class QueriesSpec extends AnyFunSuite {
     assert(qPart === qFull)
   }
 
-  test("ivfDriftReport: in-distribution arrivals pass; shifted ones flag the rebuild; legacy baseline derives") {
+  test("ivfDriftReport: in-distribution arrivals pass; shifted ones flag the rebuild") {
     import org.apache.spark.sql.functions.{col, lit, pmod, transform}
     val idx = Files.createTempDirectory("graft-ivf-drift").toString
     operators.VectorOps.ivfBuildIndex(spark, sf, idx)
@@ -272,7 +268,7 @@ class QueriesSpec extends AnyFunSuite {
 
     // a same-distribution slice lands inside the build-time envelope:
     // ~5% beyond the p95 by construction, nowhere near the 10% flag
-    val ok = operators.VectorOps.ivfDriftReport(spark, sf, idx, batch)
+    val ok = operators.VectorOps.ivfDriftReport(spark, idx, batch)
       .collect().head
     assert(!ok.getAs[Boolean]("drifted"))
     assert(ok.getAs[Double]("frac_beyond_p95") <= 0.10)
@@ -284,7 +280,7 @@ class QueriesSpec extends AnyFunSuite {
     // baseline, but k_auto has outgrown 2× the built list count
     val small = Files.createTempDirectory("graft-ivf-small").toString
     operators.VectorOps.ivfBuildIndex(spark, sf, small, k = 4)
-    val sizeDrift = operators.VectorOps.ivfDriftReport(spark, sf, small, batch)
+    val sizeDrift = operators.VectorOps.ivfDriftReport(spark, small, batch)
       .collect().head
     assert(sizeDrift.getAs[Boolean]("drifted"))
     assert(sizeDrift.getAs[Int]("k_auto") >= sizeDrift.getAs[Int]("k_built") * 2)
@@ -293,35 +289,25 @@ class QueriesSpec extends AnyFunSuite {
     // blow past the baseline and the report demands a rebuild
     val shifted = batch.withColumn("embedding",
       transform(col("embedding"), x => x * lit(5.0f) + lit(3.0f)))
-    val bad = operators.VectorOps.ivfDriftReport(spark, sf, idx, shifted)
+    val bad = operators.VectorOps.ivfDriftReport(spark, idx, shifted)
       .collect().head
     assert(bad.getAs[Boolean]("drifted"))
     assert(bad.getAs[Double]("frac_beyond_p95") > 0.5)
-
-    // an index built before diststats existed derives a baseline once
-    // from its current membership and reports identically
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm); f.delete()
-    }
-    rm(new java.io.File(idx + "/diststats"))
-    val rederived = operators.VectorOps.ivfDriftReport(spark, sf, idx, batch)
-      .collect().head
-    assert(!rederived.getAs[Boolean]("drifted"))
 
     // the IVF-PQ builder writes the same baseline (the coarse
     // quantizer is the drift surface) — the report serves both layouts
     val pq = Files.createTempDirectory("graft-ivfpq-drift").toString
     operators.VectorOps.ivfpqBuildIndex(spark, sf, pq)
-    val pqOk = operators.VectorOps.ivfDriftReport(spark, sf, pq, batch)
+    val pqOk = operators.VectorOps.ivfDriftReport(spark, pq, batch)
       .collect().head
     assert(!pqOk.getAs[Boolean]("drifted"))
     assert(operators.VectorOps
-      .ivfDriftReport(spark, sf, pq, shifted).collect().head
+      .ivfDriftReport(spark, pq, shifted).collect().head
       .getAs[Boolean]("drifted"))
   }
 
   test("ivfDriftReport ADC-residual staleness: reflected residuals flag while " +
-    "coarse stays clean; legacy index derives pqstats; plain IVF reports null") {
+    "coarse stays clean; a missing pqstats fails loud; plain IVF reports null") {
     import org.apache.spark.sql.functions.{col, pmod, lit}
     val pq = Files.createTempDirectory("graft-ivfpq-adc").toString
     operators.VectorOps.ivfpqBuildIndex(spark, sf, pq)
@@ -336,7 +322,7 @@ class QueriesSpec extends AnyFunSuite {
 
     // same-distribution arrivals: BOTH signals inside their envelopes
     val identity = df(base.toSeq.map { case (id, v) => (1000000L + id, v) })
-    val ok = operators.VectorOps.ivfDriftReport(spark, sf, pq, identity)
+    val ok = operators.VectorOps.ivfDriftReport(spark, pq, identity)
       .collect().head
     assert(!ok.getAs[Boolean]("drifted"))
     assert(ok.getAs[Double]("frac_beyond_p95_recon") <= 0.10)
@@ -354,7 +340,7 @@ class QueriesSpec extends AnyFunSuite {
       Array.tabulate(v.length)(i => (2.0 * c(i) - v(i)).toFloat)
     }
     val reflected = df(base.toSeq.map { case (id, v) => (2000000L + id, reflect(v)) })
-    val bad = operators.VectorOps.ivfDriftReport(spark, sf, pq, reflected)
+    val bad = operators.VectorOps.ivfDriftReport(spark, pq, reflected)
       .collect().head
     assert(bad.getAs[Double]("frac_beyond_p95") <= 0.10,
       "reflection must leave the coarse signal clean — that blindness is the point")
@@ -362,25 +348,18 @@ class QueriesSpec extends AnyFunSuite {
       "the ADC-residual signal must catch the flipped residuals")
     assert(bad.getAs[Boolean]("drifted"))
 
-    // legacy index (pre-pqstats): one dir-bearing call derives the
-    // baseline from current membership; dir-less calls then serve
-    // off the stored baseline (the streaming sink's shape)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm); f.delete()
+    // a codebook-carrying index without its pqstats baseline fails
+    // with the missing path — it never reports the ADC signal as null
+    SparkSpec.deleteDir(pq + "/pqstats")
+    SparkSpec.assertFailsNaming(pq + "/pqstats") {
+      operators.VectorOps.ivfDriftReport(spark, pq, reflected).collect()
     }
-    rm(new java.io.File(pq + "/pqstats"))
-    val rederived = operators.VectorOps.ivfDriftReport(spark, sf, pq, reflected)
-      .collect().head
-    assert(rederived.getAs[Double]("frac_beyond_p95_recon") > 0.10)
-    val dirless = operators.VectorOps.ivfDriftReport(spark, "", pq, reflected)
-      .collect().head
-    assert(dirless.getAs[Double]("frac_beyond_p95_recon") > 0.10)
 
     // a codebook-less IVF index reports null recon columns and never
     // flags on them
     val ivf = Files.createTempDirectory("graft-ivf-adc").toString
     operators.VectorOps.ivfBuildIndex(spark, sf, ivf)
-    val plain = operators.VectorOps.ivfDriftReport(spark, sf, ivf, identity)
+    val plain = operators.VectorOps.ivfDriftReport(spark, ivf, identity)
       .collect().head
     assert(plain.isNullAt(plain.fieldIndex("frac_beyond_p95_recon")))
     assert(!plain.getAs[Boolean]("drifted"))
@@ -394,18 +373,14 @@ class QueriesSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
 
     val idxPart = Files.createTempDirectory("graft-ivfpq-part").toString
-    spark.read.parquet(idxFull + "/centroids").write.parquet(idxPart + "/centroids")
-    spark.read.parquet(idxFull + "/codebook").write.parquet(idxPart + "/codebook")
-    spark.read.parquet(idxFull + "/codes")
-      .filter(pmod(col("neighbor_id"), lit(3)) =!= 0)
-      .write.parquet(idxPart + "/codes")
+    SinkBench.carveIndex(spark, idxFull, idxPart, id => pmod(id, lit(3)) =!= 0)
 
     val batch = Tables(spark, sf, "embeddings")
       .filter(col("vec_id") >= operators.VectorOps.nQueries &&
         pmod(col("vec_id"), lit(3)) === 0)
       .select("vec_id", "embedding")
     operators.VectorOps.ivfpqAppend(spark, batch, idxPart)
-    val appended = spark.read.parquet(idxPart + "/codes")
+    val appended = operators.Snapshot.read(spark, idxPart + "/codes")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
     assert(appended === fullCodes,
       "frozen-codebook encode must reproduce the builder's codes")
@@ -676,7 +651,7 @@ class QueriesSpec extends AnyFunSuite {
       "membership lands with the re-fold")
   }
 
-  test("indexedIds reads sets only when ids is absent; an unbucketed ids fails loudly") {
+  test("indexedIds: an unbucketed ids fails loudly; a missing ids fails naming its path") {
     val idx = Files.createTempDirectory("graft-mhidx-ids").toString
     operators.DedupOps.incrementalIndexBuild(spark, sf, idx)
     val all = (0 until operators.DedupOps.keyBuckets).toSeq
@@ -690,12 +665,9 @@ class QueriesSpec extends AnyFunSuite {
     val unbucketed = operators.Snapshot.read(spark, s"$idx/ids").select("doc_id").localCheckpoint()
     unbucketed.write.mode("overwrite").parquet(s"$idx/ids")
     intercept[org.apache.spark.sql.AnalysisException](ids())
-    // an index from before `ids` existed still reads its members from sets
-    java.nio.file.Files.walk(java.nio.file.Paths.get(s"$idx/ids"))
-      .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(p => java.nio.file.Files.delete(p))
-    assert(ids() === operators.Snapshot.read(spark, s"$idx/sets").select("doc_id")
-      .collect().map(_.getLong(0)).toSet)
+    // nor does a missing `ids` fall back to the `sets` history
+    SparkSpec.deleteDir(s"$idx/ids")
+    SparkSpec.assertFailsNaming(s"$idx/ids")(ids())
   }
 
   test("universe drift: new-vocabulary near-dups pair only after the full rebuild") {
@@ -732,7 +704,7 @@ class QueriesSpec extends AnyFunSuite {
       "post-rebuild, the new-vocabulary pair must be found")
   }
 
-  test("minhashDriftReport: in-vocabulary batch passes; novel vocabulary flags; legacy baseline derives") {
+  test("minhashDriftReport: in-vocabulary batch passes; novel vocabulary flags; a missing baseline fails loud") {
     import org.apache.spark.sql.functions.{col, lit, pmod}
     import spark.implicits._
     val idx = java.nio.file.Files.createTempDirectory("graft-mhidx-driftrep").toString
@@ -743,7 +715,7 @@ class QueriesSpec extends AnyFunSuite {
     // baseline, so the report must not flag
     val inVocab = Tables(spark, sf, "documents")
       .filter(pmod(col("doc_id"), lit(10)) === 3).select("doc_id", "text")
-    val ok = operators.DedupOps.minhashDriftReport(spark, "", idx, inVocab).head
+    val ok = operators.DedupOps.minhashDriftReport(spark, idx, inVocab).head
     assert(!ok.getAs[Boolean]("drifted"),
       s"in-vocabulary batch flagged: $ok")
     assert(ok.getAs[Long]("n_batch") > 0)
@@ -753,7 +725,7 @@ class QueriesSpec extends AnyFunSuite {
     val novel = (1 to 50).map(i =>
       (20000000L + i, (1 to 40).map(j => s"qzvw${i}x$j").mkString(" ")))
       .toDF("doc_id", "text")
-    val bad = operators.DedupOps.minhashDriftReport(spark, "", idx, novel).head
+    val bad = operators.DedupOps.minhashDriftReport(spark, idx, novel).head
     assert(bad.getAs[Boolean]("drifted"), s"novel-vocabulary batch passed: $bad")
     assert(bad.getAs[Double]("frac_beyond_univ") > 0.9)
 
@@ -763,18 +735,16 @@ class QueriesSpec extends AnyFunSuite {
     val grown = Tables(spark, sf, "documents")
       .select((col("doc_id") + lit(30000000L)).as("doc_id"), col("text"))
       .limit((n + 1).toInt)
-    val sized = operators.DedupOps.minhashDriftReport(spark, "", idx, grown).head
+    val sized = operators.DedupOps.minhashDriftReport(spark, idx, grown).head
     assert(sized.getAs[Boolean]("drifted"), s"2x-membership batch passed: $sized")
     assert(sized.getAs[Long]("n_auto") >= sized.getAs[Long]("n_built") * 2)
 
-    // legacy index (no vocabstats): baseline derives once from the
-    // given corpus dir, then the clean batch still passes
-    val fs = new org.apache.hadoop.fs.Path(s"$idx/vocabstats")
-    fs.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(fs, true)
-    assertThrows[IllegalArgumentException](
-      operators.DedupOps.minhashDriftReport(spark, "", idx, inVocab))
-    val rederived = operators.DedupOps.minhashDriftReport(spark, sf, idx, inVocab).head
-    assert(!rederived.getAs[Boolean]("drifted"))
+    // an index without its vocabstats baseline fails with the
+    // missing path
+    SparkSpec.deleteDir(s"$idx/vocabstats")
+    SparkSpec.assertFailsNaming(s"$idx/vocabstats") {
+      operators.DedupOps.minhashDriftReport(spark, idx, inVocab).head
+    }
   }
 
   test("training_pipeline scale modes: hashed-decontam survivors equal raw survivors; pii run redacts shards") {
@@ -1823,7 +1793,7 @@ class QueriesSpec extends AnyFunSuite {
   }
 
   test("ann_range_ivf_query: serves exactly off the prebuilt radius-carrying " +
-    "layout (both index families); a pre-radius index derives on first use") {
+    "layout (both index families); a pre-radius index fails loud") {
     val exact = operators.VectorOps.annRangeExact(spark, sf).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(exact.nonEmpty)
@@ -1837,18 +1807,12 @@ class QueriesSpec extends AnyFunSuite {
       .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(served === exact,
       "prebuilt-index range serving must equal the exact twin bit-for-bit")
-    // legacy pre-radius index: delete the radius table; first use
-    // re-derives it over the membership and stays exact
-    import java.nio.file.{Path, Paths}
-    import java.util.Comparator
-    Files.walk(Paths.get(idxFull + "/radius")).sorted(Comparator.reverseOrder[Path]())
-      .forEach(p => Files.deleteIfExists(p))
-    assert(!new java.io.File(idxFull + "/radius/_SUCCESS").exists)
-    val servedLegacy = operators.VectorOps.annRangeIvfQuery(spark, sf, idxFull).collect()
-      .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    assert(servedLegacy === exact, "derive-on-first-use must restore exactness")
-    assert(new java.io.File(idxFull + "/radius/_SUCCESS").exists,
-      "the derive must persist the radius for subsequent calls")
+    // an index without its radius table fails with the missing path
+    // (the certificate is never re-derived from the data dir)
+    SparkSpec.deleteDir(idxFull + "/radius")
+    SparkSpec.assertFailsNaming(idxFull + "/radius") {
+      operators.VectorOps.annRangeIvfQuery(spark, sf, idxFull).collect()
+    }
     // IVF-PQ layout: range mode serves off the codes table's
     // (neighbor_id, cid) pairs with the same certificate
     val idxPq = Files.createTempDirectory("graft-range-srv-pq").toString

@@ -50,4 +50,24 @@ object SparkSpec {
   /** The descriptions of the Spark jobs `body` started; a job without
     * one is left out. */
   def jobDescriptions(body: => Any): Seq[String] = jobsStarted(body).flatten
+
+  /** Deletes a directory tree; a missing one is left alone. */
+  def deleteDir(dir: String): Unit = {
+    val root = java.nio.file.Paths.get(dir)
+    if (java.nio.file.Files.exists(root))
+      java.nio.file.Files.walk(root)
+        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => java.nio.file.Files.delete(p))
+  }
+
+  /** Runs `body`, which must fail with an error whose message (or a
+    * cause's) names `path` — how an index missing a store fails. */
+  def assertFailsNaming(path: String)(body: => Any): Unit = {
+    val failure = try { body; None } catch { case t: Throwable => Some(t) }
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    assert(failure.isDefined, s"expected a failure naming $path")
+    assert(failure.exists(messages(_).exists(_.contains(path))),
+      s"the failure does not name $path: ${failure.get}")
+  }
 }

@@ -629,10 +629,7 @@ class StreamingSpec extends AnyFunSuite {
     // same quantizer with a third of the corpus missing — the slice
     // arrives as embedding messages instead
     val idxPart = tmpDir("graft-vecidx-part")
-    spark.read.parquet(idxFull + "/centroids").write.parquet(idxPart + "/centroids")
-    spark.read.parquet(idxFull + "/invlist")
-      .filter(pmod(col("neighbor_id"), lit(3)) =!= 0)
-      .write.parquet(idxPart + "/invlist")
+    SinkBench.carveIndex(spark, idxFull, idxPart, id => pmod(id, lit(3)) =!= 0)
     val slice = Tables(spark, sf, "embeddings")
       .filter(col("vec_id") >= operators.VectorOps.nQueries &&
         pmod(col("vec_id"), lit(3)) === 0)
@@ -662,15 +659,15 @@ class StreamingSpec extends AnyFunSuite {
       try q.processAllAvailable() finally q.stop()
     }
     run(tmpDir("graft-ckpt"))
-    val appended = spark.read.parquet(idxPart + "/invlist")
+    val appended = operators.Snapshot.read(spark, idxPart + "/invlist")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(appended === fullInv,
       "streamed appends must reproduce the builder's assignment under the frozen quantizer")
-    assert(spark.read.parquet(idxPart + "/invlist").count() === fullInv.size,
+    assert(operators.Snapshot.read(spark, idxPart + "/invlist").count() === fullInv.size,
       "redelivered copies must not double-index")
     // full-spool replay from a fresh checkpoint: membership guard holds
     run(tmpDir("graft-ckpt"))
-    assert(spark.read.parquet(idxPart + "/invlist").count() === fullInv.size)
+    assert(operators.Snapshot.read(spark, idxPart + "/invlist").count() === fullInv.size)
     // and the streamed index SERVES identically to the fresh build
     val qFull = operators.VectorOps.annIvfQuery(spark, sf, idxFull)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
@@ -692,13 +689,7 @@ class StreamingSpec extends AnyFunSuite {
     // same frozen quantizer AND codebooks with a third of the corpus
     // missing — the slice arrives as embedding messages instead
     val idxPart = tmpDir("graft-pqidx-part")
-    operators.Snapshot.read(spark, idxFull + "/centroids")
-      .write.parquet(idxPart + "/centroids")
-    operators.Snapshot.read(spark, idxFull + "/codebook")
-      .write.parquet(idxPart + "/codebook")
-    operators.Snapshot.read(spark, idxFull + "/codes")
-      .filter(pmod(col("neighbor_id"), lit(3)) =!= 0)
-      .write.parquet(idxPart + "/codes")
+    SinkBench.carveIndex(spark, idxFull, idxPart, id => pmod(id, lit(3)) =!= 0)
     val slice = Tables(spark, sf, "embeddings")
       .filter(col("vec_id") >= operators.VectorOps.nQueries &&
         pmod(col("vec_id"), lit(3)) === 0)
@@ -734,6 +725,45 @@ class StreamingSpec extends AnyFunSuite {
     val qPart = operators.VectorOps.annIvfPqQuery(spark, sf, idxPart)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
     assert(qPart === qFull)
+  }
+
+  test("a vector index missing its ids or diststats store fails naming it: " +
+    "ivfAppend, ivfDriftReport and the drift-logging sink neither derive nor skip") {
+    val sf = SparkSpec.sf
+    val built = tmpDir("graft-vecidx-missing")
+    operators.VectorOps.ivfBuildIndex(spark, sf, built)
+    val batch = Tables(spark, sf, "embeddings")
+      .filter(col("vec_id") >= operators.VectorOps.nQueries &&
+        pmod(col("vec_id"), lit(7)) === 0)
+      .select("vec_id", "embedding")
+    val broker = tmpDir("graft-broker")
+    GraftQueueBroker.publish(broker, "vecs", batch.collect().map { r =>
+      GraftQueueBroker.textMsg(r.getLong(0), 1700000000000000L + r.getLong(0) * 1000000L,
+        "t/vecs/0", r.getSeq[Float](1).mkString(","))
+    })
+    def sink(idx: String): Unit = {
+      val q = Pipelines.vectorIndexSink(Pipelines.readQueues(spark, broker, Seq("vecs")),
+        idx, driftEvery = 1).option("checkpointLocation", tmpDir("graft-ckpt")).start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    Seq("ids", "diststats").foreach { store =>
+      val idx = tmpDir("graft-vecidx-missing")
+      val root = java.nio.file.Paths.get(built)
+      java.nio.file.Files.walk(root).forEach { p =>
+        val dst = java.nio.file.Paths.get(idx).resolve(root.relativize(p))
+        if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(dst)
+        else java.nio.file.Files.copy(p, dst)
+      }
+      val missing = s"$idx/$store"
+      SparkSpec.deleteDir(missing)
+      if (store == "ids")
+        SparkSpec.assertFailsNaming(missing)(operators.VectorOps.ivfAppend(spark, batch, idx))
+      SparkSpec.assertFailsNaming(missing) {
+        operators.VectorOps.ivfDriftReport(spark, idx, batch).collect()
+      }
+      SparkSpec.assertFailsNaming(missing)(sink(idx))
+      assert(!new java.io.File(missing).exists, s"$store must not be derived")
+    }
   }
 
   test("vector-index sink drift log: clean arrivals record clean reports, shifted ones flag") {
