@@ -1,5 +1,6 @@
 package graft
 
+import graft.streaming.NioLocalFileSystem
 import org.apache.spark.sql.SparkSession
 
 /** The one local session factory behind every graft main and the test
@@ -12,7 +13,9 @@ object GraftSession {
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
   /** `local[cpus]` with shuffle partitions = cpus, the UTC session time
-    * zone, the UI off and WARN logging; `conf` pairs are added on top. */
+    * zone, the UI off, WARN logging and the fork-free `file:`
+    * `FileContext` ([[NioLocalFileSystem.install]]); `conf` pairs are
+    * added on top. */
   def local(cpus: Int, conf: (String, String)*): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -22,6 +25,7 @@ object GraftSession {
       .config(conf.toMap)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    NioLocalFileSystem.install(spark)
     spark
   }
 }

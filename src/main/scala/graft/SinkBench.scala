@@ -52,7 +52,7 @@ object SinkBench {
     import org.apache.hadoop.fs.{FileUtil, Path}
     val conf = spark.sparkContext.hadoopConfiguration
     val dst = new Path(dir)
-    val fs = dst.getFileSystem(conf)
+    val fs = streaming.NioLocalFileSystem.fileSystem(dst, conf)
     fs.mkdirs(dst)
     FileUtil.copy(fs, fs.listStatus(new Path(full)).map(_.getPath), fs, dst, false, true, conf)
     val lists = if (fs.exists(new Path(s"$dir/codes"))) "codes" else "invlist"

@@ -1197,16 +1197,13 @@ object DedupOps {
       // reads on retired-file pinning — the vector sink's measured
       // step-to-plateau, same mechanics here
       val nDocs = batchDocs.count()
-      minhashBands(bs).coalesce(VectorOps.appendParts(nDocs * numBands))
-        .write.mode("append").parquet(s"$idx/bands")
-      bs.coalesce(VectorOps.appendParts(nDocs))
-        .write.mode("append").parquet(s"$idx/sets")
+      Snapshot.append(minhashBands(bs).coalesce(VectorOps.appendParts(nDocs * numBands)), s"$idx/bands")
+      Snapshot.append(bs.coalesce(VectorOps.appendParts(nDocs)), s"$idx/sets")
       // membership covers EVERY batch doc, not just those with
       // universe-overlapping shingles — a doc contributing zero set
       // rows is still "folded" and must not be re-processed forever
-      batchDocs.select(col("doc_id"), keyBucket(col("doc_id")).as("kb"))
-        .coalesce(VectorOps.appendParts(nDocs))
-        .write.mode("append").partitionBy("kb").parquet(s"$idx/ids")
+      Snapshot.append(batchDocs.select(col("doc_id"), keyBucket(col("doc_id")).as("kb"))
+        .coalesce(VectorOps.appendParts(nDocs)), s"$idx/ids", "kb")
     } finally bs.unpersist()
   }
 

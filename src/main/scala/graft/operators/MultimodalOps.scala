@@ -1920,10 +1920,8 @@ object MultimodalOps {
     val s = batchSigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = s.count()
-      phashBands(family, s).coalesce(graft.operators.VectorOps.appendParts(n * 28))
-        .write.mode("append").parquet(s"$idx/bands")
-      phashIds(family, s).coalesce(graft.operators.VectorOps.appendParts(n))
-        .write.mode("append").partitionBy("kb").parquet(s"$idx/ids")
+      Snapshot.append(phashBands(family, s).coalesce(VectorOps.appendParts(n * 28)), s"$idx/bands")
+      Snapshot.append(phashIds(family, s).coalesce(VectorOps.appendParts(n)), s"$idx/ids", "kb")
     } finally s.unpersist()
   }
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import java.util.UUID
 
+import graft.streaming.NioLocalFileSystem
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
@@ -78,11 +79,26 @@ object Snapshot {
   private case class Manifest(gen: Long, live: Vector[String],
                               retired: Vector[(Long, String)])
 
+  /** Every filesystem call and data write of a store goes through
+    * [[NioLocalFileSystem]] on `file:` paths — the driver handle here,
+    * the appends, stages and merges through [[write]] — so neither a
+    * walk, a write nor a commit forks a process per file. */
   private def fsOf(spark: SparkSession, dir: String): (FileSystem, Path) = {
     val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = NioLocalFileSystem.fileSystem(p, spark.sparkContext.hadoopConfiguration)
     (fs, fs.makeQualified(p))
   }
+
+  private def write(df: DataFrame, mode: String, path: String, partitionCols: Seq[String]): Unit = {
+    val w = df.write.options(NioLocalFileSystem.options).mode(mode)
+    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(path)
+  }
+
+  /** Appends `df` to the store at `dir` as new parquet files,
+    * partitioned by `partitionCols`: live the moment they land (the
+    * resolution rule), no manifest touched. */
+  def append(df: DataFrame, dir: String, partitionCols: String*): Unit =
+    write(df, "append", dir, partitionCols)
 
   private def isTier(rel: String): Boolean =
     rel.substring(rel.lastIndexOf('/') + 1).startsWith("tier-")
@@ -418,9 +434,8 @@ object Snapshot {
         // rooted at the leaf, so the tier file keeps the sources'
         // columns (no partition column inferred into the data)
         val leaf = parentRel(sel.head)
-        scan(spark, if (leaf.isEmpty) root else new Path(root, leaf), sel.map(byName))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(tmp.toString)
+        write(scan(spark, if (leaf.isEmpty) root else new Path(root, leaf), sel.map(byName))
+          .coalesce(1), "overwrite", tmp.toString, Nil)
         val part = dataFiles(fs, tmp).nextOption()
           .getOrElse(throw new IllegalStateException(
             s"merge wrote no parquet under $tmp"))
@@ -507,9 +522,7 @@ object Snapshot {
       if (isTier(n) && !known(n)) fs.delete(new Path(root, n), false)
     }
     val tmp = new Path(root, "_replace_tmp-" + UUID.randomUUID().toString)
-    val w = df.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(tmp.toString)
+    write(df, "overwrite", tmp.toString, partitionCols)
     val tag = UUID.randomUUID().toString
     val staged = Vector.newBuilder[String]
     var i = 0

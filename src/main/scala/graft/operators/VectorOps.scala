@@ -2,9 +2,11 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.VectorExprs.{vecDistSq, vecDot, vecNorm}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Vector similarity over `embeddings` (64-dim float vectors):
   * cosine near-dup pairs, brute-force ANN (the exactness baseline),
@@ -1117,7 +1119,11 @@ object VectorOps {
     * for every later range query — exactly the frozen-statistic
     * staleness class the drift reports exist to catch). full_outer:
     * an arrival landing rank-1 in a previously-memberless list creates
-    * that list's radius row. */
+    * that list's radius row. The stored rows and the batch's per-list
+    * maxima (at most k rows each) meet on the driver in one job, and
+    * the store is restaged only when an arrival lies outside its
+    * list's radius or in a list without one — most appends widen
+    * nothing and commit nothing. */
   private def widenRadius(spark: SparkSession, batchVecs: DataFrame,
                           indexDir: String): Unit = {
     val centsN = Snapshot.read(spark, s"$indexDir/centroids")
@@ -1126,12 +1132,17 @@ object VectorOps {
       batchVecs.select(col("vec_id"), col("vd"))
         .withColumn("norm", vecNorm(col("vd"))), centsN)
       .groupBy(col("cid")).agg(max(col("ang")).as("bdev"))
-    val widened = Snapshot.read(spark, s"$indexDir/radius")
+    val both = Snapshot.read(spark, s"$indexDir/radius")
       .join(batchRad, Seq("cid"), "full_outer")
-      .select(col("cid"),
-        greatest(coalesce(col("dev"), lit(0.0)),
-          coalesce(col("bdev"), lit(0.0))).as("dev"))
-    Snapshot.stageReplace(spark, s"$indexDir/radius", widened).commit()
+      .select(col("cid"), col("dev"), col("bdev"))
+    val rows = both.collect()
+    def dev(r: Row, i: Int): Double = if (r.isNullAt(i)) 0.0 else r.getDouble(i)
+    if (rows.exists(r => !r.isNullAt(2) && (r.isNullAt(1) || r.getDouble(2) > r.getDouble(1)))) {
+      val widened = rows.toSeq.map(r => Row(r.get(0), math.max(dev(r, 1), dev(r, 2))))
+      val schema = StructType(Seq(both.schema("cid"), StructField("dev", DoubleType, nullable = false)))
+      Snapshot.stageReplace(spark, s"$indexDir/radius",
+        spark.createDataFrame(widened.asJava, schema).coalesce(1)).commit()
+    }
   }
 
   /** Serving half of the RANGE split (benched as `ann_range_ivf_query`):
@@ -1288,8 +1299,7 @@ object VectorOps {
     * cross-write crash window re-appends (duplicate list rows, which
     * every search path collapses) rather than skips (silent loss). */
   private def appendIds(pts: DataFrame, indexDir: String): Unit =
-    pts.select(col("vec_id"), col("kb"))
-      .write.mode("append").partitionBy("kb").parquet(s"$indexDir/ids")
+    Snapshot.append(pts.select(col("vec_id"), col("kb")), s"$indexDir/ids", "kb")
 
   /** Output-partition count for an append of `rows` rows: one file
     * per [[appendRowsPerFile]], floor 1, capped at the upstream
@@ -1526,10 +1536,9 @@ object VectorOps {
     // radius widens BEFORE any list row lands (see widenRadius for
     // the crash-ordering argument)
     if (nNew > 0) widenRadius(spark, pts, indexDir)
-    assignMulti(pts.select(col("vec_id"), col("vd")), cents)
+    Snapshot.append(assignMulti(pts.select(col("vec_id"), col("vd")), cents)
       .select(col("vec_id").as("neighbor_id"), col("cid"))
-      .coalesce(appendParts(nNew * ivfAssign))
-      .write.mode("append").parquet(s"$indexDir/invlist")
+      .coalesce(appendParts(nNew * ivfAssign)), s"$indexDir/invlist")
     appendIds(pts.coalesce(appendParts(nNew)), indexDir)
     // genuinely-new count — what a per-trigger caller adds to its
     // running membership total
@@ -1853,11 +1862,10 @@ object VectorOps {
     if (nNew > 0) widenRadius(spark, pts, indexDir)
     val inv = assignMulti(pts.select(col("vec_id"), col("vd")), cents)
       .select(col("vec_id").as("neighbor_id"), col("cid"))
-    pqAssign(subExplode(pts, "vec_id"), cb)
+    Snapshot.append(pqAssign(subExplode(pts, "vec_id"), cb)
       .select(col("vec_id").as("neighbor_id"), col("s"), col("cid").as("code"))
       .join(inv, Seq("neighbor_id"))
-      .coalesce(appendParts(nNew * ivfAssign * pqSub))
-      .write.mode("append").parquet(s"$indexDir/codes")
+      .coalesce(appendParts(nNew * ivfAssign * pqSub)), s"$indexDir/codes")
     appendIds(pts.coalesce(appendParts(nNew)), indexDir)
     nNew
   }

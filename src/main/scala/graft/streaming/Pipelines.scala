@@ -228,7 +228,8 @@ object Pipelines {
 
   /** WriteOneFilePerWindow: append parquet partitioned by window start
     * so each window lands in its own directory partition. */
-  def fileSinkPerWindow(counts: DataFrame, outDir: String): DataStreamWriter[Row] =
+  def fileSinkPerWindow(counts: DataFrame, outDir: String): DataStreamWriter[Row] = {
+    NioLocalFileSystem.install(counts.sparkSession)
     counts
       .withColumn("window_part", date_format(col("ws"), "yyyyMMdd_HHmmss"))
       .writeStream
@@ -237,6 +238,7 @@ object Pipelines {
       .option("path", outDir)
       .option("checkpointLocation", outDir + "/_checkpoint")
       .partitionBy("window_part")
+  }
 
   /** SolaceBigQuery.java:63 equivalent: stream mapped records into a
     * queryable partitioned parquet table with exactly-once rows.
@@ -271,6 +273,7 @@ object Pipelines {
     * per file ([[NioLocalFileSystem]]). */
   def tableSink(records: Dataset[GraftTextRecord], tablePath: String): DataStreamWriter[GraftTextRecord] = {
     val held = new TableKeys(tablePath + "/data", Seq("queue", "kb", "message_id"), Seq("queue", "kb"))
+    NioLocalFileSystem.install(records.sparkSession)
     records.writeStream
       .outputMode("append")
       .option("checkpointLocation", tablePath + "/_checkpoint")
@@ -389,6 +392,7 @@ object Pipelines {
                           tablePath: String): DataStreamWriter[Row] = {
     val Seq(quarantine, clean) = Seq("quarantine", "clean")
       .map(t => new TableKeys(s"$tablePath/$t", Seq("doc_id"), Seq("kb")))
+    NioLocalFileSystem.install(messages.sparkSession)
     messages.writeStream
       .outputMode("append")
       .option("checkpointLocation", tablePath + "/_checkpoint")
@@ -535,6 +539,7 @@ object Pipelines {
     // never pays the ids-store count whose file-listing cost grows
     // with trigger history (the measured sf1 vector-drift climb)
     var memberCount = -1L
+    NioLocalFileSystem.install(messages.sparkSession)
     messages.writeStream
       .outputMode("append")
       .option("checkpointLocation", indexDir + "/_checkpoint")
@@ -557,10 +562,9 @@ object Pipelines {
           if (memberCount < 0)
             memberCount = graft.operators.Snapshot
               .read(spark, s"$indexDir/ids").count()
-          graft.operators.VectorOps
+          graft.operators.Snapshot.append(graft.operators.VectorOps
             .ivfDriftReport(spark, indexDir, vecs, memberCount = memberCount)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(s"$indexDir/driftlog")
+            .withColumn("batch_id", lit(batchId)), s"$indexDir/driftlog")
         }
         val appended =
           if (codebooks) graft.operators.VectorOps.ivfpqAppend(spark, vecs, indexDir)
@@ -662,6 +666,7 @@ object Pipelines {
     // running membership total for the drift report's size signal —
     // the vectorIndexSink idiom (seed once, advance per fold)
     var memberCount = -1L
+    NioLocalFileSystem.install(messages.sparkSession)
     messages.writeStream
       .outputMode("append")
       .option("checkpointLocation", tablePath + "/_checkpoint")
@@ -679,11 +684,10 @@ object Pipelines {
           if (memberCount < 0)
             memberCount = graft.operators.Snapshot
               .read(spark, s"$indexDir/ids").count()
-          graft.operators.DedupOps
+          graft.operators.Snapshot.append(graft.operators.DedupOps
             .minhashDriftReport(spark, indexDir,
               docs.select("doc_id", "text"), memberCount = memberCount)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(s"$indexDir/driftlog")
+            .withColumn("batch_id", lit(batchId)), s"$indexDir/driftlog")
         }
         // only genuinely new doc_ids are folded in: CROSS-trigger
         // broker redelivery would otherwise append an identical index
@@ -745,6 +749,7 @@ object Pipelines {
                      graceMs: Long = graft.operators.Snapshot.DefaultGraceMs)
       : DataStreamWriter[Row] = {
     val pairKeys = new TableKeys(tablePath + "/data", Seq("doc_a", "doc_b"), Seq("kb"))
+    NioLocalFileSystem.install(messages.sparkSession)
     messages.writeStream
       .outputMode("append")
       .option("checkpointLocation", tablePath + "/_checkpoint")

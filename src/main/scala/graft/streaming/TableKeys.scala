@@ -31,7 +31,7 @@ import scala.jdk.CollectionConverters._
   *     batch's key schema, so no listing job runs;
   *  4. anti-joins the batch against only the batch keys the table
   *     already holds — almost always none, and then there is no join;
-  *  5. writes (through [[NioLocalFileSystem]] for `file:` tables) and
+  *  5. writes ([[graft.operators.Snapshot.append]], fork-free) and
   *     lists the written leaves again: their new files are held with
   *     the keys just written. A leaf with written keys but no new file
   *     is dropped, so the next append reads it again.
@@ -102,8 +102,7 @@ private[graft] final class TableKeys(path: String, keys: Seq[String], parts: Seq
     val unseen = split.collect { case (leaf, (_, out)) if out.nonEmpty => leaf -> out }
     val rows = if (present.isEmpty) batch else batch.join(
       broadcast(spark.createDataFrame(present.asJava, schema)), keys, "left_anti")
-    rows.write.options(NioLocalFileSystem.options)
-      .mode("append").partitionBy(parts: _*).parquet(path)
+    Snapshot.append(rows, path, parts: _*)
 
     unseen.foreach { case (leaf, written) =>
       val h = held.getOrElseUpdate(leaf, new Leaf)

@@ -213,23 +213,68 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(members(dst) === members(idx))
   }
 
+  /** A carve of a fresh IVF build over `sf` with the `vec_id % 3 == 0`
+    * slice left out (the full build's radii kept), the full build,
+    * and that slice in two halves. */
+  private def carvedIvf(prefix: String): (String, String, Seq[org.apache.spark.sql.DataFrame]) = {
+    val full = tmp(s"$prefix-full")
+    operators.VectorOps.ivfBuildIndex(spark, sf, full)
+    val part = tmp(s"$prefix-part")
+    SinkBench.carveIndex(spark, full, part, id => pmod(id, lit(3)) =!= 0)
+    val slice = Tables(spark, sf, "embeddings")
+      .filter(col("vec_id") >= operators.VectorOps.nQueries && pmod(col("vec_id"), lit(3)) === 0)
+      .select("vec_id", "embedding")
+    (full, part, Seq(0, 1).map(h => slice.filter(pmod(col("vec_id"), lit(2)) === h)))
+  }
+
+  private def ivfResults(idx: String) = operators.VectorOps.annIvfQuery(spark, sf, idx)
+    .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
+
   test("compacting an appended IVF index leaves search results bit-identical") {
     // the ivfAppend lifecycle accretes a file set per batch; the
     // maintenance pass over the flat invlist must not perturb serving
-    val idx = tmp("graft-ivf-compact")
-    operators.VectorOps.ivfBuildIndex(spark, sf, idx)
-    // split the lists into per-batch appends to fabricate small files
-    val inv = spark.read.parquet(idx + "/invlist")
-    val before = operators.VectorOps.annIvfQuery(spark, sf, idx)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
+    val (full, idx, halves) = carvedIvf("graft-ivf-compact")
+    val carved = operators.Snapshot.files(spark, idx + "/invlist").size
+    halves.foreach(h => assert(operators.VectorOps.ivfAppend(spark, h, idx) > 0))
+    assert(operators.Snapshot.files(spark, idx + "/invlist").size >= carved + 2,
+      "each append lands files of its own")
+    val before = ivfResults(idx)
+    assert(before === ivfResults(full), "the appends restore the full build's lists")
     val compacted = tmp("graft-ivf-compacted")
-    spark.read.parquet(idx + "/centroids").write.parquet(compacted + "/centroids")
+    operators.Snapshot.read(spark, idx + "/centroids").write.parquet(compacted + "/centroids")
     val files = operators.Maintenance.compactTable(spark, idx + "/invlist", compacted + "/invlist")
     assert(files >= 1)
-    assert(spark.read.parquet(compacted + "/invlist").count() === inv.count())
-    val after = operators.VectorOps.annIvfQuery(spark, sf, compacted)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    assert(after === before)
+    assert(spark.read.parquet(compacted + "/invlist").count() ===
+      operators.Snapshot.read(spark, idx + "/invlist").count())
+    assert(ivfResults(compacted) === before)
+  }
+
+  test("ivfAppend commits the radius store only when an arrival widens it") {
+    val (full, part, halves) = carvedIvf("graft-ivf-widen")
+    def gen(idx: String) = SparkSpec.manifestGeneration(s"$idx/radius")
+    def radius(idx: String) = operators.Snapshot.read(spark, s"$idx/radius")
+      .collect().map(r => r.get(0) -> r.getDouble(1)).toMap
+    // the carve keeps the full build's radii, which cover every arrival
+    val gen0 = gen(part)
+    halves.foreach(h => assert(operators.VectorOps.ivfAppend(spark, h, part) > 0))
+    assert(gen(part) === gen0, "an append inside every stored radius commits nothing")
+    assert(radius(part) === radius(full))
+    def range(idx: String) = operators.VectorOps.annRangeIvfQuery(spark, sf, idx)
+      .collect().map(_.toSeq).toSet
+    assert(range(part) === range(full))
+
+    // zeroed radii: every arrival lies outside its list's radius
+    val (_, zeroed, zHalves) = carvedIvf("graft-ivf-widen-zero")
+    operators.Snapshot.stageReplace(spark, s"$zeroed/radius",
+      operators.Snapshot.read(spark, s"$zeroed/radius").withColumn("dev", lit(0.0))).commit()
+    val genZ = gen(zeroed)
+    assert(operators.VectorOps.ivfAppend(spark, zHalves.head, zeroed) > 0)
+    assert(gen(zeroed) === genZ + 1, "an arrival outside its radius widens it in one commit")
+    val widened = radius(zeroed)
+    assert(widened.keySet === radius(full).keySet)
+    assert(widened.values.exists(_ > 0.0))
+    // monotone, and never past the radius the full build measured
+    assert(widened.forall { case (c, d) => d >= 0.0 && d <= radius(full)(c) })
   }
 
   test("clusterBy yields files with disjoint key ranges that a range scan can skip") {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 
 /** One shared local session for the whole test run — 4 partitions on
   * any machine, so test plans do not depend on the host's cores. */
@@ -50,6 +51,29 @@ object SparkSpec {
   /** The descriptions of the Spark jobs `body` started; a job without
     * one is left out. */
   def jobDescriptions(body: => Any): Seq[String] = jobsStarted(body).flatten
+
+  /** Runs `body` and returns the processes the JVM started meanwhile,
+    * from any thread, as (starting thread id, command line): JFR's
+    * `jdk.ProcessStart` events, recorded in-process. */
+  def processStarts[T](body: => T): (T, Seq[(Long, String)]) = {
+    val r = new jdk.jfr.Recording()
+    r.enable("jdk.ProcessStart")
+    r.start()
+    val out = try body finally r.stop()
+    val dump = java.nio.file.Files.createTempFile("graft-forks", ".jfr")
+    try {
+      r.dump(dump)
+      (out, jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.toSeq
+        .map(e => (Option(e.getThread).map(_.getJavaThreadId).getOrElse(-1L), e.getString("command"))))
+    } finally { r.close(); java.nio.file.Files.delete(dump) }
+  }
+
+  /** The newest committed manifest generation of the Snapshot store
+    * at `store`. */
+  def manifestGeneration(store: String): Long =
+    new java.io.File(s"$store/_manifests").list().toSeq
+      .collect { case n if n.startsWith("gen-") && n.endsWith(".txt") =>
+        n.stripPrefix("gen-").stripSuffix(".txt").toLong }.max
 
   /** Deletes a directory tree; a missing one is left alone. */
   def deleteDir(dir: String): Unit = {
