@@ -341,7 +341,12 @@ class StreamingSpec extends AnyFunSuite {
     val counts = Pipelines.windowedWordCount(
       Pipelines.readQueues(spark, broker, Seq("q1")), watermark = "0 seconds")
     val q = Pipelines.fileSinkPerWindow(counts, out).start()
-    try q.processAllAvailable() finally q.stop()
+    // the checkpoint, the state store and the sink's metadata log start
+    // no process (the sink's own data files are written by Spark's file
+    // sink with the session's filesystem, which forks)
+    val (_, started) = SparkSpec.processStarts { try q.processAllAvailable() finally q.stop() }
+    val outside = started.map(_._2).filterNot(_.contains("/window_part="))
+    assert(outside.isEmpty, s"processes started: ${outside.mkString("; ")}")
     val parts = new java.io.File(out).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("window_part="))
     // append-mode watermark closes only the first window before EOS;
